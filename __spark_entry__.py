@@ -49,6 +49,7 @@ from cargo_dupes_spark.operators.dedup import (
     load_documents,
     load_embeddings,
     normalized,
+    single_sorted,
     with_exact_copies,
 )
 from cargo_dupes_spark.functions.segments import segment_paragraphs_sql
@@ -77,20 +78,21 @@ def _embedding_dim_at(sf: str, emb: DataFrame) -> int:
     row) — ``emb.first()`` costs a full Spark job (scan task + py4j round
     trip) per query invocation for one scalar. Reads the INPUT per call
     (nothing cached); falls back to the DataFrame path when the table is
-    not a single readable parquet file."""
-    try:
-        import pyarrow.parquet as pq
+    not a single readable parquet file with an ``embedding`` column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    try:
         pf = pq.ParquetFile(f"{sf}/embeddings.parquet")
         batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-        v = batch.column(0)[0].as_py() if batch.num_rows else None
-        if v is None:
-            raise ValueError(
-                "embeddings table is empty (or embedding is NULL)"
-            )
-        return len(v)
-    except (OSError, StopIteration):
+        # by name: a file without the column yields a zero-column batch
+        col = batch.column("embedding")
+    except (OSError, StopIteration, pa.ArrowInvalid, KeyError):
         return _embedding_dim(emb)
+    v = col[0].as_py() if batch.num_rows else None
+    if v is None:
+        raise ValueError("embeddings table is empty (or embedding is NULL)")
+    return len(v)
 
 
 # ---------------------------------------------------------------------------
@@ -202,21 +204,9 @@ def _q_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _single_sorted(df: DataFrame, *cols: str) -> DataFrame:
-    """Globally sorted output as ONE sorted partition. Identical rows in
-    identical order to .orderBy(*cols), but without the range-partitioning
-    sampling pass, which re-executes the whole child plan — for a map-only
-    query that means every expensive projection (regex normalize, stopword
-    intersects) ran TWICE per invocation (guide §2.4: an orderBy used only
-    to make output deterministic). Outputs here are a few MB, so the single
-    sort task is trivial; the expensive projection stays fully parallel in
-    the map stage."""
-    return df.repartition(1).sortWithinPartitions(*cols)
-
-
 def _q_quality(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_documents(spark, sf))
-    return _single_sorted(
+    return single_sorted(
         docs.select(
             "doc_id",
             (F.round(quality_score_col("text") * 1e6)).cast("long").alias("quality_e6"),
@@ -227,7 +217,7 @@ def _q_quality(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_documents(spark, sf))
-    return _single_sorted(
+    return single_sorted(
         docs.select(
             "doc_id",
             whitespace_token_count_col("text").cast("long").alias("ws_tokens"),
@@ -243,7 +233,7 @@ def _q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     # references its input many times and Catalyst would otherwise inline
     # the 5-pass regex chain into every reference (guide §2.3 project
     # discipline; codegen CSE does not catch the conditional branches)
-    return _single_sorted(
+    return single_sorted(
         docs.select(
             "doc_id", normalize_text_col("text", CFG).alias("_norm")
         ).select("doc_id", lang_id_col("_norm").alias("lang_guess")),
@@ -270,7 +260,7 @@ def _q_topk_cosine(spark: SparkSession, sf: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 20)
     corpus = emb.filter(F.col("vec_id") < 1000)
     scored = brute_force_topk(corpus, queries_df, k=5)
-    return _single_sorted(
+    return single_sorted(
         scored.select(
             "query_id",
             "neighbor_id",
@@ -295,7 +285,7 @@ def _q_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     both = emb.unionByName(scaled)
     dim = _embedding_dim_at(sf, emb)
     pairs = embedding_near_dup_pairs(both, threshold=0.99, dim=dim)
-    return _single_sorted(
+    return single_sorted(
         pairs.select(
             "id_a",
             "id_b",
@@ -311,7 +301,7 @@ def _q_events_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     ev = spark.read.parquet(f"{sf}/events.parquet")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return _single_sorted(
+    return single_sorted(
         ev.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
         .select(

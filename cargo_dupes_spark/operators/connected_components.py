@@ -93,39 +93,13 @@ def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(pairs: list[tuple]) -> dict:
-    """Union-find with min-id roots + path compression — node -> min id of
-    its component. The same structure as the reference's in-RAM grouper
-    (grouper.rs:277-290). Kept as the oracle/reference implementation
-    (tests/test_cc.py pins the numpy path against it); the hybrid hot path
-    uses ``_numpy_components`` below."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union-by-min keeps every root the component minimum
-            parent[max(ra, rb)] = min(ra, rb)
-    nodes = set()
-    for a, b in pairs:
-        nodes.add(a)
-        nodes.add(b)
-    return {n: find(n) for n in nodes}
-
-
 def _numpy_components(a: "np.ndarray", b: "np.ndarray"):
     """Edge endpoint arrays -> (nodes, min-id component label per node),
     fully vectorized: min-label scatter over edges + pointer jumping until
     a fixed point. Labels are indices into the SORTED unique-node array, so
-    the minimum index is the minimum id — same contract as the union-find.
+    the minimum index is the minimum id — the min-id root contract of the
+    reference's union-find (grouper.rs:277-290), which tests/test_cc.py
+    (``_uf``) pins this path against.
 
     Replaces the per-edge Python union-find on the hybrid driver path
     (ADVICE r3: 1M collected Rows + a dict of Python ints is hundreds of MB

@@ -243,10 +243,12 @@ def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
         from .connected_components import DRIVER_CC_THRESHOLD, _numpy_components
 
         edges = verify_pairs(pairs, sigs, CFG)
+        # bound the collect BEFORE it happens: at most threshold+1 rows
+        # reach the driver, and one more than the threshold means oversized
         pdf = edges.select(
             F.col("url_a").cast("long").alias("a"),
             F.col("url_b").cast("long").alias("b"),
-        ).toPandas()
+        ).limit(DRIVER_CC_THRESHOLD + 1).toPandas()
         if len(pdf) <= DRIVER_CC_THRESHOLD:
             import pandas as pd
 

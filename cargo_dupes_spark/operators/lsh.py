@@ -20,7 +20,7 @@ Scale notes (the parts that matter at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -86,17 +86,12 @@ def simhash_buckets(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-FLAGGED_SCHEMA = (
-    "band_id INT, band_key BIGINT, bucket_size BIGINT, action STRING"
-)
-
-
 def nid_pairs_from_buckets(
     bucketed: DataFrame,
     cfg: PipelineConfig,
     dedup_buckets: bool = True,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row] | None]:
     """Core pair generation over (nid BIGINT, band_id, band_key) bucket rows
     -> (nid pairs with nid_a < nid_b, flagged-bucket accounting).
 
@@ -125,18 +120,17 @@ def nid_pairs_from_buckets(
       JVM-side with nested array transforms (measured 2x faster than the
       equivalent equi-self-join, which shuffles the band rows twice).
 
-    flagged has (band_id, band_key, bucket_size, action in
+    Flagged rows have (band_id, band_key, bucket_size, action in
     {'salted','dropped'}).
 
     ``collect_flagged`` (default True, the pipeline's accounting contract):
-    PASS 1 runs as its own job and the returned ``flagged`` is materialized
-    driver-side rows. Callers that DISCARD the accounting (the driver-oracle
-    slice queries) pass False: the mega-bucket adjustment then rides PASS 2's
-    own job as a broadcast subtree — identical pair output, one fewer
-    eager job per invocation — and the returned ``flagged`` is the lazy
-    aggregation (collecting it re-runs PASS 1, which such callers never do).
-    Memory safety is the same either way: dropped buckets are excluded and
-    salted buckets re-keyed BEFORE any member array materializes.
+    PASS 1 runs as its own job and the flagged rows come back as a plain
+    driver-side ``list[Row]``. Callers that DISCARD the accounting (the
+    driver-oracle slice queries) pass False and get None: the mega-bucket
+    adjustment then rides PASS 2's own job as a broadcast subtree —
+    identical pair output, one fewer eager job per invocation. Memory
+    safety is the same either way: dropped buckets are excluded and salted
+    buckets re-keyed BEFORE any member array materializes.
     """
     cap = cfg.max_bucket_size
     salt = cfg.salt_buckets
@@ -160,48 +154,33 @@ def nid_pairs_from_buckets(
         .otherwise(F.lit("dropped"))
         .alias("action"),
     )
+    flagged = None
+    adjust = flagged_df  # rides PASS 2's job; no-op when empty
     if collect_flagged:
         import pandas as pd
 
-        flagged_rows = flagged_df.collect()
-        # pandas/Arrow-backed local frame, NOT createDataFrame(row_list):
-        # a pickled-Python local RDD costs a Python-worker task per core on
-        # EVERY consuming job (measured 33 CPU-s for the usually-EMPTY
-        # flagged accounting); Arrow batches convert JVM-side
-        flagged = spark.createDataFrame(
+        flagged = flagged_df.collect()
+        # the broadcast side as a pandas/Arrow-backed local frame, NOT
+        # createDataFrame(row_list): a pickled-Python local RDD costs a
+        # Python-worker task per core on every consuming job
+        adjust = spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "band_id": pd.array(
-                        [r["band_id"] for r in flagged_rows], dtype="int32"
-                    ),
                     "band_key": pd.array(
-                        [r["band_key"] for r in flagged_rows], dtype="int64"
+                        [r["band_key"] for r in flagged], dtype="int64"
                     ),
-                    "bucket_size": pd.array(
-                        [r["bucket_size"] for r in flagged_rows], dtype="int64"
-                    ),
-                    "action": pd.array(
-                        [r["action"] for r in flagged_rows], dtype=object
-                    ),
+                    "action": [r["action"] for r in flagged],
                 }
             ),
-            FLAGGED_SCHEMA,
-        )
-        # the rows are already driver-side — attach them so consumers that
-        # only need counts (the pipeline/streaming accounting) can read
-        # them without scheduling a job over the local frame
-        flagged._cds_local_rows = flagged_rows
-        apply_adjustment = bool(flagged_rows)
-    else:
-        flagged = flagged_df
-        apply_adjustment = True  # rides PASS 2's job; no-op when empty
+            "band_key BIGINT, action STRING",
+        ) if flagged else None
 
     bucketed = bucketed.select("nid", "band_key")
-    if apply_adjustment:
+    if adjust is not None:
         # one row per band_key (a key shared by two flagged buckets — a
         # 2^-64 collision — must not fan out the join; 'dropped' wins)
         adj = F.broadcast(
-            flagged.groupBy("band_key").agg(F.min("action").alias("action"))
+            adjust.groupBy("band_key").agg(F.min("action").alias("action"))
         )
         bucketed = (
             bucketed.join(adj, ["band_key"], "left")
@@ -269,7 +248,7 @@ def pairs_from_buckets(
     tier: str,
     urls: DataFrame | None = None,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row] | None]:
     """Bucket rows (url, band_id, band_key) -> deduped candidate pairs
     (url_a < url_b) + the flagged-bucket accounting of
     ``nid_pairs_from_buckets`` (see its docstring for the skew policy).

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..contracts import assert_unique_ids
+from .verify import reassemble_pairs
 
 
 def cosine_col(a: Column | str, b: Column | str) -> Column:
@@ -127,7 +128,8 @@ def _ann_candidate_pairs(
     candidate shuffle. Here the shuffle carries only (id, band_id, band_key)
     and mega-buckets are salted or dropped WITH accounting.
 
-    Returns (nid_pairs with nid_a < nid_b, flagged accounting frame)."""
+    Returns (nid_pairs with nid_a < nid_b, None): every ANN caller discards
+    the accounting."""
     from ..config import PipelineConfig
     from .lsh import nid_pairs_from_buckets
 
@@ -163,62 +165,22 @@ def _pair_vectors(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(nid_a, nid_b) -> (nid_a, nid_b, va, vb) shuffling the vector payload
-    ONCE — the verify_pairs restructure (operators/verify.py) applied to the
-    ANN re-rank: pairs explode to light (pair, nid, side) rows, ONE inner
-    join pulls vectors (single scan + single exchange of the embeddings
-    table instead of the previous two aliased joins), and a groupBy on the
-    pair key reassembles both sides. The only exchange carrying vectors is
-    sized by the candidate set (pairs << corpus at scale), not the corpus.
+    """(nid_a, nid_b) -> (nid_a, nid_b, va, vb): both sides' vectors via
+    ``reassemble_pairs`` (operators/verify.py) — one join, one exchange of
+    the vector payload sized by the candidate set, not the corpus.
 
-    ids are the caller's vec_id (unique per row by table contract), so the
-    side-masked first() is deterministic; a pair with either id absent from
-    ``embeddings`` drops (inner-join semantics, same as the old shape).
-
-    CONTRACT (ADVICE r4): ``embeddings`` must be one-row-per-id. A duplicate
-    id silently collapses to ONE arbitrary vector here (first() over the
-    merged group), where a two-join shape would have fanned the pair out
-    visibly — callers (lsh_topk / ivf_topk / embedding_near_dup_pairs /
-    verify shapes) inherit this. A row whose ``vec_col`` is NULL likewise
-    drops at the isNotNull filter (the old inner-join shape kept it with a
-    NULL cosine that fell out of ranking); null vectors are out of contract
-    for every public caller in this module.
+    ids are the caller's vec_id. CONTRACT (ADVICE r4): ``embeddings`` must
+    be one-row-per-id — a duplicate id silently collapses to ONE arbitrary
+    vector, and callers (lsh_topk / ivf_topk / embedding_near_dup_pairs)
+    inherit this. A pair with either id absent, or whose vector is NULL,
+    drops; null vectors are out of contract for every public caller here.
 
     Set CARGO_DUPES_DEBUG_CONTRACTS=1 to assert the contract per call
     (one id-only aggregate; see cargo_dupes_spark/contracts.py)."""
     assert_unique_ids(embeddings, id_col, "_pair_vectors(embeddings)")
-    exploded = nid_pairs.select(
-        "nid_a",
-        "nid_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("nid_a").alias("nid"), F.lit("a").alias("side")),
-                F.struct(F.col("nid_b").alias("nid"), F.lit("b").alias("side")),
-            )
-        ).alias("_e"),
-    ).select("nid_a", "nid_b", "_e.nid", "_e.side")
-    vecs = embeddings.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("_v")
-    )
-
-    def side_first(side: str, out: str):
-        return F.first(
-            F.when(F.col("side") == side, F.col("_v")), ignorenulls=True
-        ).alias(out)
-
-    from .verify import reassembly_partitions
-
-    matched = exploded.join(vecs, "nid", "inner")
-    return (
-        # pin the reassembly width (see verify.reassembly_partitions): the
-        # cosine re-rank downstream is CPU-dense and AQE's byte-based
-        # coalescing serializes it onto 1-3 tasks at bench scale
-        matched.repartition(
-            reassembly_partitions(matched), "nid_a", "nid_b"
-        )
-        .groupBy("nid_a", "nid_b")
-        .agg(side_first("a", "va"), side_first("b", "vb"))
-        .filter(F.col("va").isNotNull() & F.col("vb").isNotNull())
+    vecs = embeddings.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+    return reassemble_pairs(nid_pairs, vecs, "nid", ["v"]).select(
+        "nid_a", "nid_b", F.col("v_a").alias("va"), F.col("v_b").alias("vb")
     )
 
 

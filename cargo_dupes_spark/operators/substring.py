@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..contracts import assert_unique_ids
+from .verify import reassemble_pairs
 
 _B = np.uint64(0x9E3779B97F4A7C15)  # odd => invertible mod 2^64
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))
@@ -88,8 +89,9 @@ def substring_candidates(
     fingerprints: DataFrame,
     cfg: PipelineConfig,
     collect_flagged: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """docs -> (candidate pairs tier='substring', dropped mega-buckets).
+) -> tuple[DataFrame, list | None]:
+    """docs -> (candidate pairs tier='substring', flagged mega-bucket rows
+    or None; see ``pairs_from_buckets``).
 
     Docs shorter than min_substring_len can't contain a qualifying repeat
     and are gated out before the explode (the min_sub_nodes gate, X2).
@@ -299,52 +301,11 @@ def verify_substring_pairs(
     of the reference's sub-unit duplicates. Spans are half-open char ranges
     [start, end) into norm_text.
     """
-    # single-shuffle text reassembly (the verify_pairs restructure,
-    # operators/verify.py): norm_text is the heaviest payload in the whole
-    # pipeline — the former two aliased joins scanned fingerprints twice
-    # and moved the full document text through two exchanges. Pairs explode
-    # to light (pair, url, side) rows, ONE inner join pulls norm_text, and
-    # the groupBy reassembles (text_a, text_b) in an exchange sized by the
-    # candidate set, not the corpus.
     assert_unique_ids(
         fingerprints, "url", "verify_substring_pairs(fingerprints)"
     )
-    exploded = pairs.select(
-        "url_a",
-        "url_b",
-        "tier",
-        F.explode(
-            F.array(
-                F.struct(F.col("url_a").alias("url"), F.lit("a").alias("side")),
-                F.struct(F.col("url_b").alias("url"), F.lit("b").alias("side")),
-            )
-        ).alias("_e"),
-    ).select("url_a", "url_b", "tier", "_e.url", "_e.side")
-    texts = fingerprints.select("url", "norm_text")
-
-    def side_text(side: str, out: str):
-        # one row per (pair, side) after the join (fingerprints are
-        # one-row-per-url by pipeline contract) -> first() is deterministic
-        return F.first(
-            F.when(F.col("side") == side, F.col("norm_text")),
-            ignorenulls=True,
-        ).alias(out)
-
-    from .verify import reassembly_partitions
-
-    matched = exploded.join(texts, "url", "inner")
-    joined = (
-        # pin the reassembly width (see reassembly_partitions): the LCS
-        # kernel downstream is CPU-dense, and AQE's byte-based coalescing
-        # was serializing it onto one task at bench scale
-        matched.repartition(
-            reassembly_partitions(matched), "url_a", "url_b"
-        )
-        .groupBy("url_a", "url_b", "tier")
-        .agg(side_text("a", "text_a"), side_text("b", "text_b"))
-        # inner-join semantics: either side absent from fingerprints -> drop
-        .filter(F.col("text_a").isNotNull() & F.col("text_b").isNotNull())
-    )
+    # norm_text is the heaviest payload in the pipeline: one join moves it
+    joined = reassemble_pairs(pairs, fingerprints, "url", ["norm_text"])
     min_len = cfg.min_substring_len
 
     @F.pandas_udf(_SPAN_RESULT)
@@ -357,7 +318,7 @@ def verify_substring_pairs(
         )
 
     return (
-        joined.withColumn("_s", _lcs_span("text_a", "text_b"))
+        joined.withColumn("_s", _lcs_span("norm_text_a", "norm_text_b"))
         .filter(F.col("_s.lcs_len") > 0)
         .select(
             "url_a",
@@ -365,7 +326,7 @@ def verify_substring_pairs(
             "tier",
             (
                 F.col("_s.lcs_len")
-                / F.least(F.length("text_a"), F.length("text_b"))
+                / F.least(F.length("norm_text_a"), F.length("norm_text_b"))
             ).alias("similarity"),
             F.col("_s.span_a_start").alias("span_a_start"),
             (F.col("_s.span_a_start") + F.col("_s.lcs_len")).alias("span_a_end"),

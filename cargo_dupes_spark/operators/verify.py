@@ -6,21 +6,11 @@ EXACT Jaccard over distinct shingle arrays (not the MinHash estimate — the
 recall gate requires the verify step to never drop a true pair,
 SURVEY §7.4 risk 2). Dice and Jaccard are monotone-related (D = 2J/(1+J)).
 
-Implementation is fully JVM-side and shuffles the heavy shingle payload
-ONCE. The previous shape (two aliased joins pulling each side's signatures)
-scanned the signatures table twice and moved the shingle-array mass through
-two exchanges — the measured cause of the verify stage scaling only 1.4-1.9x
-from 2->8 cores (DRAM-bound; VERDICT r3 #1). Now:
-
-  1. candidate pairs explode to two light rows (pair key, nid, side) —
-     ~130 B/row, no arrays, so AQE can broadcast them outright;
-  2. ONE inner join pulls signatures (single scan, single exchange at most);
-  3. a groupBy on the pair key reassembles (shingles_a, shingles_b) —
-     the only exchange that carries arrays, sized by the candidate set
-     (pairs << corpus at scale), not by the corpus.
-
-SimHash-tier candidates get a cheap bit_count(xor) Hamming prefilter before
-the Jaccard check.
+Every pair-verify path in the package (this module, substring LCS verify,
+the embedding re-rank, the streaming tiers) gets both sides' payloads from
+``reassemble_pairs``: one join, one payload exchange sized by the candidate
+set. SimHash-tier candidates get a cheap bit_count(xor) Hamming prefilter
+before the Jaccard check.
 """
 
 from __future__ import annotations
@@ -35,8 +25,8 @@ from ..functions.simhash import hamming_col
 
 
 def reassembly_partitions(df: DataFrame) -> int:
-    """Partition count for the pair-reassembly exchanges (here and in
-    operators/substring.py & similarity.py): the session's configured
+    """Partition count for the pair-reassembly exchange of
+    ``reassemble_pairs``: the session's configured
     shuffle width — what a non-AQE plan would use. The reassembly groupBy
     feeds CPU-DENSE work (exact Jaccard over shingle arrays, the LCS
     kernel, cosine re-rank) whose cost per shuffled byte is far above
@@ -55,83 +45,88 @@ def reassembly_partitions(df: DataFrame) -> int:
         return df.sparkSession.sparkContext.defaultParallelism
 
 
+def reassemble_pairs(
+    pairs: DataFrame, payload: DataFrame, key: str, cols: list[str]
+) -> DataFrame:
+    """Give each candidate pair both sides' payload columns, moving the
+    payload through ONE join.
+
+    ``pairs`` carries ``{key}_a``, ``{key}_b`` and any pass-through columns
+    (e.g. ``tier``); ``payload`` is one row per ``key``. Returns the pair
+    columns plus ``{c}_a`` and ``{c}_b`` for each ``c`` in ``cols``, one row
+    per pair, with inner-join semantics: a pair whose side is absent from
+    ``payload`` (or carries a NULL payload value) drops.
+
+    Shape: each pair explodes to two light (pair, nid, side) rows, ONE inner
+    join on nid = xxhash64(key) pulls the payload (single scan, at most one
+    exchange of the payload table), and a groupBy on the pair reassembles
+    both sides in an exchange sized by the candidate set, not the corpus.
+    The join probes on an 8-byte key whatever the key's type; nid
+    collisions (two keys hashing alike would attach a foreign payload row)
+    are neutralized by the key-equality filter BEFORE the groupBy — the
+    true row always survives it, the foreign one never reaches the group.
+
+    CONTRACT (ADVICE r4): ``payload`` is one row per key. A duplicate key
+    silently collapses to one arbitrary row in the side-masked first();
+    callers assert it under CARGO_DUPES_DEBUG_CONTRACTS (contracts.py).
+    """
+    ka, kb = f"{key}_a", f"{key}_b"
+    exploded = pairs.select(
+        *pairs.columns,
+        F.explode(
+            F.array(
+                F.struct(F.xxhash64(ka).alias("nid"), F.lit("a").alias("side")),
+                F.struct(F.xxhash64(kb).alias("nid"), F.lit("b").alias("side")),
+            )
+        ).alias("_e"),
+    ).select(*pairs.columns, "_e.nid", "_e.side")
+    side = F.col("side")
+    pay = payload.select(
+        F.xxhash64(key).alias("nid"), F.col(key).alias("_key"), *cols
+    )
+    matched = exploded.join(pay, "nid", "inner").filter(
+        F.when(side == "a", F.col(ka) == F.col("_key")).otherwise(
+            F.col(kb) == F.col("_key")
+        )
+    )
+
+    def side_first(col: str, s: str):
+        # exactly one row per (pair, side) after the key filter, so first()
+        # over the side-masked column is deterministic
+        return F.first(F.when(side == s, F.col(col)), ignorenulls=True).alias(
+            f"{col}_{s}"
+        )
+
+    sides = [(c, s) for c in cols for s in ("a", "b")]
+    return (
+        matched.repartition(reassembly_partitions(matched), ka, kb)
+        .groupBy(*pairs.columns)
+        .agg(*[side_first(c, s) for c, s in sides])
+        .dropna(subset=[f"{c}_{s}" for c, s in sides])
+    )
+
+
 def verify_pairs(
     pairs: DataFrame, signatures: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """(url_a, url_b, tier) -> verified edges with exact similarity.
 
-    The join keys on nid = xxhash64(url) — the same 8-byte surrogate
-    discipline as the candidate stage (operators/lsh.py): the signatures
-    side probes on a BIGINT instead of a url string. nid collisions (two
-    urls hashing alike would attach a foreign shingle row) are neutralized
-    by a url equality filter BEFORE the reassembly groupBy — the true row
-    always survives it, the foreign one never reaches the group. AQE
-    handles residual skew (hot urls appear in many pairs).
-
-    Set CARGO_DUPES_DEBUG_CONTRACTS=1 to assert the one-row-per-url
-    contract on ``signatures`` per call (contracts.py, ADVICE r4).
+    Shingles (and simhash, when ``signatures`` carries it) reach each pair
+    through ``reassemble_pairs``. The Hamming prefilter applies only then;
+    the streaming near tier's signatures have no simhash column.
     """
     assert_unique_ids(signatures, "url", "verify_pairs(signatures)")
-    exploded = pairs.select(
-        "url_a",
-        "url_b",
-        "tier",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.xxhash64("url_a").alias("nid"), F.lit("a").alias("side")
-                ),
-                F.struct(
-                    F.xxhash64("url_b").alias("nid"), F.lit("b").alias("side")
-                ),
-            )
-        ).alias("_e"),
-    ).select("url_a", "url_b", "tier", "_e.nid", "_e.side")
-
-    sig = signatures.select(
-        F.xxhash64("url").alias("nid"),
-        F.col("url").alias("_sig_url"),
-        "shingles",
-        "simhash",
+    has_simhash = "simhash" in signatures.columns
+    joined = reassemble_pairs(
+        pairs, signatures, "url",
+        ["shingles", "simhash"] if has_simhash else ["shingles"],
     )
-
-    matched = exploded.join(sig, "nid", "inner").filter(
-        F.when(F.col("side") == "a", F.col("url_a") == F.col("_sig_url"))
-        .otherwise(F.col("url_b") == F.col("_sig_url"))
-    )
-
-    def side_first(col: str, side: str):
-        # exactly one row per (pair, side) after the url filter (signatures
-        # are one-row-per-url by pipeline contract), so first() over the
-        # side-masked column is deterministic
-        return F.first(
-            F.when(F.col("side") == side, F.col(col)), ignorenulls=True
-        ).alias(f"{col}_{side}")
-
-    joined = (
-        matched.repartition(
-            reassembly_partitions(matched), "url_a", "url_b"
+    if has_simhash:
+        # Hamming prefilter only constrains simhash-tier candidates
+        joined = joined.filter(
+            (F.col("tier") != F.lit("simhash"))
+            | (hamming_col("simhash_a", "simhash_b") <= cfg.hamming_threshold)
         )
-        .groupBy("url_a", "url_b", "tier")
-        .agg(
-            side_first("shingles", "a"),
-            side_first("shingles", "b"),
-            side_first("simhash", "a"),
-            side_first("simhash", "b"),
-        )
-        # inner-join semantics: a pair with either side absent from the
-        # signatures table is not verifiable and drops here
-        .filter(
-            F.col("shingles_a").isNotNull() & F.col("shingles_b").isNotNull()
-        )
-    )
-
-    # Hamming prefilter only constrains simhash-tier candidates
-    joined = joined.filter(
-        (F.col("tier") != F.lit("simhash"))
-        | (hamming_col("simhash_a", "simhash_b") <= cfg.hamming_threshold)
-    )
-
     return (
         joined.withColumn(
             "similarity", jaccard_col("shingles_a", "shingles_b")

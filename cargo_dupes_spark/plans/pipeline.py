@@ -66,8 +66,6 @@ class Pipeline:
         self.stage_log: list[str] = []  # executed vs skipped, for tests
         self._prev_rows: int | None = None  # lineage n_in chain
         self.stage_rows: dict[str, int | None] = {}  # committed row counts
-        self._accounting_thread = None  # concurrent flagged accounting
-        self._accounting_error: BaseException | None = None
 
     _CHAIN = object()  # sentinel: n_in = previous stage's count
 
@@ -258,71 +256,40 @@ class Pipeline:
 
         def build_candidates() -> DataFrame:
             # collect_flagged=True (eager PASS 1): the pipeline CONSUMES the
-            # mega-bucket accounting, so the sizing aggregation must run
-            # somewhere — lazy mode ran it TWICE (once as the broadcast
-            # adjustment subtree inside the commit job, once on the
-            # accounting thread: ~16 executor-CPU-s duplicated at bench
-            # scale, REST stages 106/107), and on a saturated host the
-            # duplicate contends with the commit instead of hiding under
-            # it. Interleaved A/B at 400k docs: eager candidate stage
-            # 2.5-2.8 s vs lazy 2.8-3.1 s, every adjacent pair. Callers
-            # that DISCARD the accounting (the driver-oracle slice queries)
-            # keep collect_flagged=False — for them lazy runs the sizing
-            # once and saves a serial job.
-            parts, flagged_parts = [], []
+            # mega-bucket accounting, and the flagged rows come back as a
+            # driver-side list — counting them costs no Spark job. Eager
+            # beat lazy sizing in every interleaved A/B pair at 400k docs
+            # (candidate stage 2.5-2.8 s vs 2.8-3.1 s). Callers that DISCARD
+            # the accounting (the driver-oracle slice queries) keep
+            # collect_flagged=False, which saves them a serial job.
+            parts, flagged = [], []
             if "minhash" in self.detectors:
-                pairs, flagged = pairs_from_buckets(
+                pairs, f = pairs_from_buckets(
                     minhash_bands(signatures, cfg), cfg, "near",
                     urls=signatures, collect_flagged=True,
                 )
                 parts.append(pairs)
-                flagged_parts.append(flagged)
+                flagged += f
             if "simhash" in self.detectors:
-                pairs, flagged = pairs_from_buckets(
+                pairs, f = pairs_from_buckets(
                     simhash_buckets(signatures, cfg), cfg, "simhash",
                     urls=signatures, collect_flagged=True,
                 )
                 parts.append(pairs)
-                flagged_parts.append(flagged)
+                flagged += f
             if "substring" in self.detectors:
-                pairs, flagged = substring_candidates(
+                pairs, f = substring_candidates(
                     reps, cfg, collect_flagged=True
                 )
                 parts.append(pairs)
-                flagged_parts.append(flagged)
+                flagged += f
 
             # never silent: salted and dropped mega-buckets are first-class
-            # metrics (SURVEY §7.4 risk 4) — recorded from a concurrent
-            # driver thread (with eager PASS 1 the rows are already local,
-            # so the thread costs no Spark job; the lazy fallback below
-            # keeps externally-built flagged frames working); run() joins
-            # the thread (and re-raises any failure) before returning, so
-            # callers always see the metric
-            def _account() -> None:
-                self.spark.sparkContext.setJobDescription(
-                    "stage:candidate_pairs (flagged accounting)"
-                )
-                counts = {"salted_buckets": 0.0, "dropped_buckets": 0.0}
-                for flagged in flagged_parts:
-                    rows = getattr(flagged, "_cds_local_rows", None)
-                    if rows is None:  # lazily-built flagged frame: one job
-                        rows = flagged.select("action").collect()
-                    for row in rows:
-                        counts[f"{row['action']}_buckets"] += 1.0
-                self.catalog.record_metrics("candidates", counts)
-
-            import threading
-
-            def _account_guarded() -> None:
-                try:
-                    _account()
-                except BaseException as exc:  # pragma: no cover - loud path
-                    self._accounting_error = exc
-
-            self._accounting_thread = threading.Thread(
-                target=_account_guarded, name="cds-flagged-accounting"
-            )
-            self._accounting_thread.start()
+            # metrics (SURVEY §7.4 risk 4)
+            counts = {"salted_buckets": 0.0, "dropped_buckets": 0.0}
+            for row in flagged:
+                counts[f"{row['action']}_buckets"] += 1.0
+            self.catalog.record_metrics("candidates", counts)
 
             if not parts:
                 return self.spark.createDataFrame([], CANDIDATE_PAIRS)
@@ -480,16 +447,6 @@ class Pipeline:
                     tier_aggregates(fingerprints, memberships).collect(),
                 ),
             )
-
-        # the flagged-accounting thread (candidate_pairs stage) must land
-        # before run() returns: callers read the metric right after, and a
-        # failed accounting must fail the run, not vanish
-        if self._accounting_thread is not None:
-            self._accounting_thread.join()
-            self._accounting_thread = None
-            err, self._accounting_error = self._accounting_error, None
-            if err is not None:
-                raise err
 
         return {
             "fingerprints": fingerprints,

@@ -222,9 +222,10 @@ def _process_near_tier(
     duplicates — collapsed by the full-row dropDuplicates at every read.
     Chains are edge semantics: matched_url may itself be a near-dup of an
     earlier doc (transitive closure is the batch tier's CC job)."""
-    from ..functions.shingles import jaccard_col, with_shingles
+    from ..functions.shingles import with_shingles
     from ..functions.signatures import signature_udf
-    from ..operators.lsh import minhash_band_keys_col
+    from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
+    from ..operators.verify import verify_pairs
 
     sig_fn = signature_udf(
         cfg.num_perm, cfg.minhash_seed, want_minhash=True, want_simhash=False
@@ -246,8 +247,21 @@ def _process_near_tier(
         "url", F.explode("band_keys").alias("band_key")
     )
 
-    batch_shingles = sigs.select("url", "shingles")
-    near = None
+    # in-batch near pairs through the batch tier's capped/salted/accounted
+    # pair machinery (a hot boilerplate band key inside one availableNow
+    # backfill batch would otherwise self-join quadratically); the smaller
+    # url is the canonical side (deterministic, batch-internal)
+    pairs, flagged = pairs_from_buckets(
+        batch_bands.select("url", F.lit(0).alias("band_id"), "band_key"),
+        cfg,
+        "near",
+        urls=sigs,
+    )
+    if flagged:
+        catalog.record_metrics(
+            "stream_near", {"flagged_batch_buckets": float(len(flagged))}
+        )
+    shingles = sigs.select("url", "shingles")
     replayed = None
     if catalog.exists(BANDS_TABLE):
         buckets = [
@@ -295,87 +309,29 @@ def _process_near_tier(
                 catalog.read(SIGS_TABLE)
                 .filter(F.col("sig_bucket").isin(m_buckets))
                 .dropDuplicates()  # crash-residue insurance (exact-row dups)
-                .select(
-                    F.col("url").alias("matched_url"),
-                    F.col("shingles").alias("m_shingles"),
+                .select("url", "shingles")
+                # a url present in BOTH batch and state (re-sent url) must
+                # contribute ONE shingle row — the batch's wins
+                .join(shingles.select("url"), "url", "left_anti")
+            )
+            shingles = shingles.unionByName(state_sigs)
+            # the matched state doc is the canonical side (url_a)
+            pairs = pairs.unionByName(
+                cross.select(
+                    F.col("matched_url").alias("url_a"),
+                    F.col("url").alias("url_b"),
+                    F.lit("near").alias("tier"),
                 )
             )
-            # threshold on the RAW jaccard (rounding only at output) so a
-            # borderline pair classifies identically to the batch tier's
-            # verify_pairs
-            near = (
-                cross.join(batch_shingles, "url")
-                .join(state_sigs, "matched_url")
-                .withColumn(
-                    "similarity", jaccard_col("shingles", "m_shingles")
-                )
-                .filter(F.col("similarity") >= cfg.jaccard_threshold)
-                .select("url", "matched_url", "similarity")
-            )
 
-    # in-batch near pairs through the batch tier's capped/salted/accounted
-    # pair machinery (a hot boilerplate band key inside one availableNow
-    # backfill batch would otherwise self-join quadratically); the smaller
-    # url is the canonical side (deterministic, batch-internal)
-    from ..operators.lsh import pairs_from_buckets
-
-    ib_pairs, ib_flagged = pairs_from_buckets(
-        batch_bands.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "near",
-        urls=sigs,
-    )
-    ib_rows = getattr(ib_flagged, "_cds_local_rows", None)
-    n_ib_flagged = len(ib_rows) if ib_rows is not None else ib_flagged.count()
-    if n_ib_flagged:
-        catalog.record_metrics(
-            "stream_near", {"flagged_batch_buckets": float(n_ib_flagged)}
-        )
-    # single-shuffle shingle reassembly (the verify_pairs restructure,
-    # operators/verify.py) — batch-bounded either way, but the shingle
-    # payload still crosses one exchange instead of two
-    ib_exploded = ib_pairs.select(
-        "url_a",
-        "url_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("url_a").alias("u"), F.lit("a").alias("side")),
-                F.struct(F.col("url_b").alias("u"), F.lit("b").alias("side")),
-            )
-        ).alias("_e"),
-    ).select("url_a", "url_b", "_e.u", "_e.side")
-    ib_near = (
-        ib_exploded.join(
-            batch_shingles.select(F.col("url").alias("u"), "shingles"), "u"
-        )
-        .groupBy("url_a", "url_b")
-        .agg(
-            F.first(
-                F.when(F.col("side") == "a", F.col("shingles")),
-                ignorenulls=True,
-            ).alias("m_shingles"),
-            F.first(
-                F.when(F.col("side") == "b", F.col("shingles")),
-                ignorenulls=True,
-            ).alias("shingles"),
-        )
-        .filter(
-            F.col("shingles").isNotNull() & F.col("m_shingles").isNotNull()
-        )
-        .withColumn("similarity", jaccard_col("shingles", "m_shingles"))
-        .filter(F.col("similarity") >= cfg.jaccard_threshold)
-        # the smaller url (url_a) is the canonical side -> matched_url
-        .select(
-            F.col("url_b").alias("url"),
-            F.col("url_a").alias("matched_url"),
-            "similarity",
-        )
-    )
-    near = ib_near if near is None else near.unionByName(ib_near)
-
+    # the batch tier's own verify_pairs, so a borderline pair classifies
+    # identically in both tiers (threshold on the RAW jaccard, rounding
+    # only at output); url_a is the canonical side -> matched_url
     batch_col = F.lit(int(batch_id)).alias("batch_id")
-    near = near.select(
-        "url", "matched_url", F.round("similarity", 6).alias("similarity"),
+    near = verify_pairs(pairs, shingles, cfg).select(
+        F.col("url_b").alias("url"),
+        F.col("url_a").alias("matched_url"),
+        F.round("similarity", 6).alias("similarity"),
         batch_col,
     ).localCheckpoint()
     catalog.append(near, NEAR_DUPS_TABLE)
@@ -446,7 +402,19 @@ def _process_substring_tier(
         "url", F.xxhash64("lang", "fph").alias("band_key")
     ).localCheckpoint()
 
-    edges = None
+    # in-batch pairs through the capped/salted/accounted machinery; the
+    # smaller url is the canonical side
+    pairs, flagged = pairs_from_buckets(
+        fps.select("url", F.lit(0).alias("band_id"), "band_key"),
+        cfg,
+        "substring",
+        urls=eligible,
+    )
+    if flagged:
+        catalog.record_metrics(
+            "stream_substring", {"flagged_batch_buckets": float(len(flagged))}
+        )
+    texts = eligible.select("url", "norm_text")
     replayed = None
     if catalog.exists(WINNOW_TABLE):
         buckets = [
@@ -495,47 +463,23 @@ def _process_substring_tier(
                 # contribute ONE text row — the batch's wins
                 .join(eligible.select("url"), "url", "left_anti")
             )
-            texts = eligible.select("url", "norm_text").unionByName(
-                state_texts
-            )
-            cross_pairs = cross.select(
-                F.col("matched_url").alias("url_a"),
-                F.col("url").alias("url_b"),
-                F.lit("substring").alias("tier"),
-            )
-            edges = verify_substring_pairs(cross_pairs, texts, cfg).select(
-                F.col("url_b").alias("url"),
-                F.col("url_a").alias("matched_url"),
-                (F.col("span_a_end") - F.col("span_a_start")).alias("lcs_len"),
-                "similarity",
+            texts = texts.unionByName(state_texts)
+            # the matched state doc is the canonical side (url_a)
+            pairs = pairs.unionByName(
+                cross.select(
+                    F.col("matched_url").alias("url_a"),
+                    F.col("url").alias("url_b"),
+                    F.lit("substring").alias("tier"),
+                )
             )
 
-    # in-batch pairs through the capped/salted/accounted machinery
-    ib_pairs, ib_flagged = pairs_from_buckets(
-        fps.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "substring",
-        urls=eligible,
-    )
-    ib_rows = getattr(ib_flagged, "_cds_local_rows", None)
-    n_ib_flagged = len(ib_rows) if ib_rows is not None else ib_flagged.count()
-    if n_ib_flagged:
-        catalog.record_metrics(
-            "stream_substring", {"flagged_batch_buckets": float(n_ib_flagged)}
-        )
-    ib_edges = verify_substring_pairs(ib_pairs, eligible, cfg).select(
-        # the smaller url (url_a) is the canonical side -> matched_url
+    batch_col = F.lit(int(batch_id)).alias("batch_id")
+    edges = verify_substring_pairs(pairs, texts, cfg).select(
         F.col("url_b").alias("url"),
         F.col("url_a").alias("matched_url"),
         (F.col("span_a_end") - F.col("span_a_start")).alias("lcs_len"),
-        "similarity",
-    )
-    edges = ib_edges if edges is None else edges.unionByName(ib_edges)
-
-    batch_col = F.lit(int(batch_id)).alias("batch_id")
-    edges = edges.select(
-        "url", "matched_url", "lcs_len",
-        F.round("similarity", 6).alias("similarity"), batch_col,
+        F.round("similarity", 6).alias("similarity"),
+        batch_col,
     ).localCheckpoint()
     catalog.append(edges, SUBSTR_DUPS_TABLE)
 

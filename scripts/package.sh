@@ -15,8 +15,7 @@ with zipfile.ZipFile("dist/pipeline.zip", "w", zipfile.ZIP_DEFLATED) as z:
     for p in sorted(root.rglob("*.py")):
         if "__pycache__" in p.parts:
             continue
-        # fixed timestamp -> byte-identical archive for identical source,
-        # so the packaged artifact only churns in git when code changes
+        # fixed timestamp -> byte-identical archive for identical source
         info = zipfile.ZipInfo(p.as_posix(), date_time=(2020, 1, 1, 0, 0, 0))
         info.compress_type = zipfile.ZIP_DEFLATED
         info.external_attr = 0o644 << 16

@@ -80,3 +80,58 @@ def test_query_matches_oracle(spark, duck, name):
     pd.testing.assert_frame_equal(
         a.astype(str), b.astype(str), check_dtype=False
     )
+
+
+def test_near_clusters_bounds_collect_before_guard(spark, monkeypatch):
+    """The numpy shortcut in _near_clusters collects at most threshold+1
+    edges: an oversized edge set falls through to the full operator path
+    without a full driver collect, and the output stays the same."""
+    import sys
+
+    from cargo_dupes_spark.operators import connected_components as cc
+    from cargo_dupes_spark.operators import dedup
+
+    want = [tuple(r) for r in dedup.near_dup_clusters(spark, SF).collect()]
+    threshold = 2
+    assert len(want) > threshold + 1  # the slice really is oversized
+    collected = []
+    df_class = type(spark.range(1))  # the concrete (classic) DataFrame
+    to_pandas = df_class.toPandas
+
+    def recording_to_pandas(self):
+        pdf = to_pandas(self)
+        if sys._getframe(1).f_code.co_name == "_near_clusters":
+            collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(cc, "DRIVER_CC_THRESHOLD", threshold)
+    monkeypatch.setattr(df_class, "toPandas", recording_to_pandas)
+    got = [tuple(r) for r in dedup.near_dup_clusters(spark, SF).collect()]
+    assert collected and max(collected) <= threshold + 1
+    assert got == want
+
+
+def test_embedding_dim_falls_back_on_unreadable_parquet(spark, tmp_path):
+    """A corrupt embeddings.parquet, or one without an ``embedding``
+    column, takes the DataFrame fallback; a NULL first vector still
+    raises."""
+    emb = spark.createDataFrame(
+        [(1, [0.5, 0.25, 0.125])], "vec_id bigint, embedding array<double>"
+    )
+    (tmp_path / "embeddings.parquet").write_bytes(b"not a parquet file")
+    assert entry_mod._embedding_dim_at(str(tmp_path), emb) == 3
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"vec_id": [1]}), str(tmp_path / "embeddings.parquet")
+    )
+    assert entry_mod._embedding_dim_at(str(tmp_path), emb) == 3
+
+    pq.write_table(
+        pa.table({"embedding": pa.array([None], pa.list_(pa.float64()))}),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    with pytest.raises(ValueError, match="empty"):
+        entry_mod._embedding_dim_at(str(tmp_path), emb)

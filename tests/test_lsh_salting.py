@@ -27,7 +27,7 @@ def _cfg(cap: int, salt: int) -> PipelineConfig:
 def test_small_bucket_pairs_fully(spark):
     pairs, flagged = pairs_from_buckets(_bucketed(spark, 5), _cfg(10, 4), "near")
     assert pairs.count() == 5 * 4 // 2
-    assert flagged.count() == 0
+    assert flagged == []
 
 
 def test_oversized_bucket_is_salted_not_dropped(spark):
@@ -48,8 +48,7 @@ def test_oversized_bucket_is_salted_not_dropped(spark):
         assert assign[r["url_a"]] == assign[r["url_b"]]
     # upper bound: strictly fewer than the full quadratic pair count
     assert len(rows) < n * (n - 1) // 2
-    flags = flagged.collect()
-    assert len(flags) == 1 and flags[0]["action"] == "salted"
+    assert len(flagged) == 1 and flagged[0]["action"] == "salted"
 
 
 def test_giant_bucket_dropped_with_accounting(spark):
@@ -57,9 +56,8 @@ def test_giant_bucket_dropped_with_accounting(spark):
     n = 11  # > cap*salt = 10
     pairs, flagged = pairs_from_buckets(_bucketed(spark, n), cfg, "near")
     assert pairs.count() == 0
-    flags = flagged.collect()
-    assert len(flags) == 1
-    assert flags[0]["action"] == "dropped" and flags[0]["bucket_size"] == n
+    assert len(flagged) == 1
+    assert flagged[0]["action"] == "dropped" and flagged[0]["bucket_size"] == n
 
 
 def test_mixed_buckets(spark):
@@ -70,7 +68,7 @@ def test_mixed_buckets(spark):
     pairs, flagged = pairs_from_buckets(
         small.unionByName(big).unionByName(giant), cfg, "near"
     )
-    actions = {r["band_key"]: r["action"] for r in flagged.collect()}
+    actions = {r["band_key"]: r["action"] for r in flagged}
     assert actions == {2: "salted", 3: "dropped"}
     got = pairs.collect()
     assert {  # small bucket contributes its full quadratic set
@@ -91,8 +89,7 @@ def test_hot_key_split_across_band_ids_still_capped(spark):
         rows, "url string, band_id int, band_key long"
     )
     pairs, flagged = pairs_from_buckets(bucketed, cfg, "near")
-    flags = flagged.collect()
-    assert len(flags) == 1
-    assert flags[0]["bucket_size"] == n  # counted on band_key alone
-    assert flags[0]["action"] == "dropped"  # 30 > cap*salt = 20
+    assert len(flagged) == 1
+    assert flagged[0]["bucket_size"] == n  # counted on band_key alone
+    assert flagged[0]["action"] == "dropped"  # 30 > cap*salt = 20
     assert pairs.count() == 0

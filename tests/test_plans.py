@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from cargo_dupes_spark.operators.exact import apply_gates, prepare_columns
@@ -103,14 +104,33 @@ def test_candidate_verify_plan_has_no_cartesian(spark, tmp_cfg):
     assert verified.count() > 0
 
 
-def test_verify_joins_signatures_once(spark, tmp_cfg):
-    """verify_pairs must shuffle the heavy shingle payload through exactly
-    ONE join (the round-4 restructure: pairs explode to light (pair, nid,
-    side) rows -> one inner join on signatures -> groupBy reassembly). The
-    former two-aliased-join shape scanned the signatures table twice and
-    moved the array bytes through two exchanges — the measured cause of
-    verified_edges scaling 1.4-1.9x instead of ~3x (BASELINE.md round 4).
-    A regression back to per-side joins doubles both and fails here."""
+def _verify_case(spark, cfg, name):
+    """(verify call, expected output pairs) for one pair-verify path."""
+    from cargo_dupes_spark.operators.similarity import _pair_vectors
+    from cargo_dupes_spark.operators.substring import verify_substring_pairs
+
+    if name == "_pair_vectors":
+        pairs = spark.createDataFrame(
+            [(1, 2), (1, 3)], "nid_a bigint, nid_b bigint"
+        )
+        emb = spark.createDataFrame(
+            [(i, [float(i)] * 4) for i in range(1, 4)],
+            "vec_id bigint, embedding array<double>",
+        )
+        out = _pair_vectors(pairs, emb, "vec_id", "embedding")
+        return out, {(1, 2), (1, 3)}
+    if name == "verify_substring_pairs":
+        pairs = spark.createDataFrame(
+            [("u1", "u2", "substring")],
+            "url_a string, url_b string, tier string",
+        )
+        text_a = "the quick brown fox jumps over the lazy dog " * 4
+        fps = spark.createDataFrame(
+            # u2 is a 100-char contiguous substring of u1 (> min_substring_len)
+            [("u1", text_a), ("u2", "zz " + text_a[10:110] + " yy")],
+            "url string, norm_text string",
+        )
+        return verify_substring_pairs(pairs, fps, cfg), {("u1", "u2")}
     pairs = spark.createDataFrame(
         [("u1", "u2", "near"), ("u1", "u3", "near")],
         "url_a string, url_b string, tier string",
@@ -119,67 +139,63 @@ def test_verify_joins_signatures_once(spark, tmp_cfg):
         [("u%d" % i, list(range(10)), 0) for i in range(1, 4)],
         "url string, shingles array<bigint>, simhash bigint",
     )
-    plan = _plan(verify_pairs(pairs, sigs, tmp_cfg))
+    if name == "verify_pairs_no_simhash":  # the streaming near tier's sigs
+        sigs = sigs.drop("simhash")
+    return verify_pairs(pairs, sigs, cfg), {("u1", "u2"), ("u1", "u3")}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "verify_pairs",
+        "verify_pairs_no_simhash",
+        "verify_substring_pairs",
+        "_pair_vectors",
+    ],
+)
+def test_pair_verify_joins_payload_once(spark, tmp_cfg, name):
+    """Every pair-verify path must move its payload (shingle arrays,
+    norm_text, vectors) through exactly ONE join — reassemble_pairs'
+    explode -> one inner join -> groupBy shape. The former two-aliased-join
+    shape scanned the payload table twice and moved its bytes through two
+    exchanges — the measured cause of verified_edges scaling 1.4-1.9x
+    instead of ~3x (BASELINE.md round 4). A regression back to per-side
+    joins fails here."""
+    out, want = _verify_case(spark, tmp_cfg, name)
+    plan = _plan(out)
     assert "CartesianProduct" not in plan, plan
     assert "NestedLoopJoin" not in plan, plan
-    # exactly one equi-join node in the whole verify subplan (each physical
+    # exactly one equi-join node in the whole subplan (each physical
     # operator appears once in executedPlan().toString())
     join_nodes = re.findall(
         r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)\b", plan
     )
     assert len(join_nodes) == 1, plan
+    assert {(r[0], r[1]) for r in out.collect()} == want
 
 
-def test_ann_rerank_joins_embeddings_once(spark):
-    """The ANN re-rank must shuffle the vector payload through exactly ONE
-    join (_pair_vectors — the verify_pairs restructure applied to the
-    embedding tiers): the former shape joined the embeddings table twice
-    (qv + cv aliases), scanning it twice and moving the vectors through two
-    exchanges, and the top-k variant additionally scored every cosine twice
-    by directing pairs before the join. A regression fails here."""
-    from cargo_dupes_spark.operators.similarity import _pair_vectors
+@pytest.mark.parametrize("key_type", ["string", "bigint"])
+def test_reassemble_pairs(spark, key_type):
+    """One row per pair with both sides' payload columns; pass-through
+    columns survive; a pair with a side missing from the payload drops."""
+    from cargo_dupes_spark.operators.verify import reassemble_pairs
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3)], "nid_a bigint, nid_b bigint"
-    )
-    emb = spark.createDataFrame(
-        [(i, [float(i)] * 4) for i in range(1, 4)],
-        "vec_id bigint, embedding array<double>",
-    )
-    out = _pair_vectors(pairs, emb, "vec_id", "embedding")
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan, plan
-    assert "NestedLoopJoin" not in plan, plan
-    join_nodes = re.findall(
-        r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)\b", plan
-    )
-    assert len(join_nodes) == 1, plan
-    rows = {(r.nid_a, r.nid_b) for r in out.collect()}
-    assert rows == {(1, 2), (1, 3)}
-
-
-def test_substring_verify_joins_texts_once(spark, tmp_cfg):
-    """verify_substring_pairs must shuffle norm_text — the heaviest payload
-    in the pipeline (full document text) — through exactly ONE join: the
-    same explode/reassemble restructure as verify_pairs. The former shape
-    joined the fingerprints table twice (text_a + text_b aliases)."""
-    from cargo_dupes_spark.operators.substring import verify_substring_pairs
+    def k(i):
+        return f"k{i}" if key_type == "string" else i
 
     pairs = spark.createDataFrame(
-        [("u1", "u2", "substring")], "url_a string, url_b string, tier string"
+        [(k(1), k(2), "near"), (k(1), k(3), "simhash"), (k(2), k(9), "near")],
+        f"id_a {key_type}, id_b {key_type}, tier string",
     )
-    text_a = "the quick brown fox jumps over the lazy dog " * 4
-    fps = spark.createDataFrame(
-        # u2 is a 100-char contiguous substring of u1 (> min_substring_len)
-        [("u1", text_a), ("u2", "zz " + text_a[10:110] + " yy")],
-        "url string, norm_text string",
+    payload = spark.createDataFrame(
+        [(k(i), i * 10, f"t{i}") for i in (1, 2, 3)],
+        f"id {key_type}, x int, t string",
     )
-    out = verify_substring_pairs(pairs, fps, tmp_cfg)
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan, plan
-    assert "NestedLoopJoin" not in plan, plan
-    join_nodes = re.findall(
-        r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)\b", plan
-    )
-    assert len(join_nodes) == 1, plan
-    assert out.count() == 1
+    out = reassemble_pairs(pairs, payload, "id", ["x", "t"])
+    assert out.columns == [
+        "id_a", "id_b", "tier", "x_a", "x_b", "t_a", "t_b"
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (k(1), k(2), "near", 10, 20, "t1", "t2"),
+        (k(1), k(3), "simhash", 10, 30, "t1", "t3"),
+    ]

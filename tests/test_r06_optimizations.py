@@ -119,15 +119,13 @@ def test_bucket_dedup_pair_set_identical(spark):
 
 
 def test_single_sorted_matches_orderby(spark):
-    import __spark_entry__ as entry
-
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").limit(200)
     base = docs.select("doc_id", F.length("text").alias("v"))
-    got = entry._single_sorted(base, "doc_id").collect()
+    got = dedup.single_sorted(base, "doc_id").collect()
     want = base.orderBy("doc_id").collect()
     assert got == want
     # and it is genuinely one sorted partition (no range exchange)
-    assert entry._single_sorted(base, "doc_id").rdd.getNumPartitions() == 1
+    assert dedup.single_sorted(base, "doc_id").rdd.getNumPartitions() == 1
 
 
 def test_pipeline_fan_out_is_conditional(spark):
@@ -263,10 +261,9 @@ def test_memberships_carry_n_tokens_and_stats_skip_join(spark):
 
 
 def test_pipeline_flagged_accounting_still_recorded(spark, tmp_path):
-    # the candidate stage's PASS-1 accounting now runs on a concurrent
-    # driver thread (lazy collect_flagged) — mega-bucket counts must still
-    # land in the catalog metrics by the time run() returns, and with the
-    # same values the eager path produced
+    # the candidate stage counts the eager PASS-1 flagged rows inline —
+    # mega-bucket counts must land in the catalog metrics by the time
+    # run() returns
     from cargo_dupes_spark.plans.pipeline import Pipeline
 
     base = (
@@ -291,4 +288,3 @@ def test_pipeline_flagged_accounting_still_recorded(spark, tmp_path):
     # 40 near-identical docs vs cap 4 * salt 2: every minhash band bucket
     # is a dropped mega-bucket
     assert m["dropped_buckets"] > 0
-    assert pipe._accounting_thread is None  # joined before run() returned
