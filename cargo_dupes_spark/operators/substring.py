@@ -85,6 +85,14 @@ def winnow_udf(k: int, w: int):
     return _winnow
 
 
+def winnow_keys(cfg: PipelineConfig):
+    """Column: a (lang, norm_text) doc's winnowed fingerprints as bucket
+    keys, hashed with the doc's language so keys never match across
+    languages."""
+    fph = winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
+    return F.transform(fph, lambda h: F.xxhash64(F.col("lang"), h))
+
+
 def substring_candidates(
     fingerprints: DataFrame,
     cfg: PipelineConfig,
@@ -101,13 +109,6 @@ def substring_candidates(
     eligible = fingerprints.filter(
         F.length("norm_text") >= cfg.min_substring_len
     )
-    fps = eligible.select(
-        "url",
-        "lang",
-        F.explode(
-            winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-        ).alias("fph"),
-    )
     # pin the winnowed rows: PASS 1 (mega-bucket sizing) and PASS 2 (pair
     # expansion) in pairs_from_buckets both traverse this plan, and without
     # the checkpoint the winnow UDF — the expensive per-char kernel — runs
@@ -115,10 +116,10 @@ def substring_candidates(
     # things twice). The pinned rows are the selected fingerprints only
     # (~2% of corpus chars, 24 B/row), MEMORY_AND_DISK so oversized
     # partitions spill rather than OOM.
-    bucketed = fps.select(
+    bucketed = eligible.select(
         "url",
         F.lit(0).alias("band_id"),
-        F.xxhash64("lang", "fph").alias("band_key"),
+        F.explode(winnow_keys(cfg)).alias("band_key"),
     ).localCheckpoint(eager=False)
     return pairs_from_buckets(
         bucketed, cfg, "substring", urls=eligible,

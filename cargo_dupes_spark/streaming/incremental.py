@@ -9,27 +9,23 @@ re-scanning the corpus. This module is that incremental path:
   * ``read_web_pages_stream`` — file-source ``readStream`` over the same
     WEB_PAGES schema the batch pipeline uses (on a real cluster: Iceberg /
     Kafka source, identical downstream code).
-  * ``incremental_dedup`` — foreachBatch: fingerprint the micro-batch
-    (the batch tier's own prepare_columns UDFs), probe the accumulated
-    fingerprint state table for hits, append new fingerprints to state and
-    dup memberships to the output table. State lives in the Catalog
-    (Iceberg/parquet), NOT in executor memory: state size is
-    corpus-bounded, so it belongs in a table joined per-batch. The state
-    table is PARTITIONED by fp_bucket = pmod(fingerprint, N)
-    (cfg.stream_fp_buckets): the probe reads only the partitions the
-    batch's own fingerprints can live in (``pruned_state`` — partition
-    pruning, not a full-state scan), so per-batch probe IO is bounded by
-    |batch's buckets| / N of the state, not O(corpus).
-  * NEAR tier (``tiers=("exact", "near")``): each batch's canonical docs
-    are checked against accumulated MinHash band-key state with the batch
-    tier's exact shingle/signature config and verified by exact Jaccard —
-    see ``_process_near_tier`` for the state layout and replay contract.
-  * SUBSTRING tier (``tiers`` includes 'substring'): canonical docs'
-    winnowed fingerprints probe accumulated fingerprint state and
-    candidates verify with the exact rolling-hash LCS — see
-    ``_process_substring_tier``.
+  * ``incremental_dedup`` — foreachBatch over three tiers, each the batch
+    pipeline's detector applied per increment: EXACT (fingerprint), NEAR
+    (MinHash band keys, exact-Jaccard verify) and SUBSTRING (winnowed
+    fingerprints, exact-LCS verify).
   * ``windowed_doc_stats`` — watermark + windowed aggregation (late-data
     tolerant ingest monitoring: docs/tokens per lang per window).
+
+State lives in Catalog tables (Iceberg/parquet), NOT in executor memory:
+state size is corpus-bounded, so it belongs in a table joined per batch.
+Every state table is partitioned by pmod(hash(column), N)
+(cfg.stream_fp_buckets; ``_BUCKETS`` maps each table to its partition
+column), and every probe reads only the partitions the batch's own values
+hash to (``pruned``), so per-batch probe IO is bounded by |batch's
+buckets| / N of the state, not O(corpus). The exact tier probes
+``stream_fps`` by fingerprint. The near and substring tiers share one
+keyed-state probe (``_probe_state``): a (url, band_key) key table to find
+candidates and a (url, lang, payload) table to verify them.
 
 Exactly-once notes: the streaming checkpoint (``checkpointLocation``) makes
 the file source replay a failed batch; the state/membership appends are
@@ -38,22 +34,29 @@ batch's first-seen urls are already in state, so (a) the self-match filter
 (url != matched_url) keeps them out of the dup stream and (b) the anti-join
 against state keeps them out of the state append — the re-append is
 provably EMPTY, so state stays one row per url without any read-time window
-dedup. Residual insurance (a crash between the two appends re-committing
+dedup. Residual insurance (a crash between two appends re-committing
 identical rows) is a full-row dropDuplicates at read: replayed rows carry
 the SAME batch_id, so duplicates are exact-row duplicates and the dedup is
-deterministic. ``load_stream_dups`` likewise dedups on (url, matched_url).
+deterministic. The dups loaders likewise dedup on (url, matched_url).
 """
 
 from __future__ import annotations
 
 import shutil
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..functions.shingles import with_shingles
+from ..functions.signatures import signature_udf
 from ..operators.exact import apply_gates, prepare_columns
+from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
+from ..operators.substring import verify_substring_pairs, winnow_keys
+from ..operators.verify import verify_pairs
 from ..schemas import WEB_PAGES
 from ..sources.catalog import Catalog
 
@@ -88,15 +91,22 @@ def _fingerprint_batch(
     """Micro-batch -> (url[, lang, norm_text], fingerprint, n_tokens): the
     batch tier's own normalize/fingerprint UDFs (byte-identical norm_text
     contract), gated the same way so boilerplate/tiny docs never enter
-    dedup state. lang/norm_text ride along only when the near tier needs
-    them — the exact-only mode must not drag full document text into the
-    per-batch localCheckpoint."""
+    dedup state. lang/norm_text ride along only when the near or
+    substring tier needs them — the exact-only mode must not drag full
+    document text into the per-batch localCheckpoint.
+
+    A url sent twice in one batch keeps ONE row (every tier keys state and
+    pairs on url): the latest warc_ts wins, ties broken on content, so a
+    replay keeps the same row. The batch is bounded; no state is read."""
+    latest = batch.groupBy("url").agg(
+        F.max(F.struct("warc_ts", "text", "html", "lang")).alias("_r")
+    ).select("url", "_r.*")
     cols = (
         ["url", "lang", "norm_text", "fingerprint", "n_tokens"]
         if with_text
         else ["url", "fingerprint", "n_tokens"]
     )
-    return apply_gates(prepare_columns(batch, cfg), cfg).select(*cols)
+    return apply_gates(prepare_columns(latest, cfg), cfg).select(*cols)
 
 
 def _process_exact_tier(
@@ -120,17 +130,10 @@ def _process_exact_tier(
         F.min("url").alias("first_url")
     )
     if catalog.exists(STATE_TABLE):
-        # the fp partitions this batch can possibly hit — bounded by
-        # min(|batch distinct fps|, stream_fp_buckets), tiny driver-side
-        batch_buckets = [
-            r[0]
-            for r in in_batch_first.select(
-                _fp_bucket_col(cfg)
-            ).distinct().collect()
-        ]
-        state = pruned_state(catalog, cfg, batch_buckets).select(
-            "fingerprint", F.col("url").alias("state_url")
-        )
+        # only the fp partitions this batch can possibly hit
+        state = pruned(
+            catalog, STATE_TABLE, _buckets(in_batch_first, cfg, STATE_TABLE)
+        ).select("fingerprint", F.col("url").alias("state_url"))
         # earliest prior owner per fp (state holds one row per fp;
         # min() is cheap insurance against partial-commit residue)
         state_first = state.groupBy("fingerprint").agg(
@@ -175,7 +178,8 @@ def _process_exact_tier(
     batch_col = F.lit(int(batch_id)).alias("batch_id")
     catalog.append(
         new_fps.select(
-            "url", "fingerprint", "n_tokens", batch_col, _fp_bucket_col(cfg)
+            "url", "fingerprint", "n_tokens", batch_col,
+            _bucket_col(cfg, STATE_TABLE),
         ),
         STATE_TABLE,
         partition_by=["fp_bucket"],
@@ -187,46 +191,149 @@ def _process_exact_tier(
     return canonical.drop("fingerprint", "n_tokens")
 
 
+@dataclass(frozen=True)
+class _Tier:
+    """One keyed-state detector tier: where its state lives and how its
+    candidates verify. ``out`` are SQL projections of the verify output
+    kept in the dups table next to (url, matched_url, batch_id)."""
+
+    name: str  # pair tier label; metrics land under stage 'stream_<name>'
+    keys_table: str
+    payload_table: str
+    dups_table: str
+    payload_col: str
+    dropped_metric: str
+    verify: Callable[[DataFrame, DataFrame, PipelineConfig], DataFrame]
+    out: tuple[str, ...]
+
+
+_NEAR = _Tier(
+    "near", BANDS_TABLE, SIGS_TABLE, NEAR_DUPS_TABLE, "shingles",
+    "dropped_band_keys", verify_pairs, ("round(similarity, 6) AS similarity",),
+)
+_SUBSTRING = _Tier(
+    "substring", WINNOW_TABLE, TEXTS_TABLE, SUBSTR_DUPS_TABLE, "norm_text",
+    "dropped_winnow_keys", verify_substring_pairs,
+    ("span_a_end - span_a_start AS lcs_len",
+     "round(similarity, 6) AS similarity"),
+)
+
+
+def _probe_state(
+    tier: _Tier,
+    docs: DataFrame,
+    catalog: Catalog,
+    cfg: PipelineConfig,
+    batch_id: int,
+) -> None:
+    """One micro-batch of a keyed-state tier: the batch's one-row-per-url
+    (url, lang, payload_col, band_keys) ``docs`` -> verified dups appended
+    to ``tier.dups_table``; the docs that are not dups enter payload state,
+    then key state.
+
+    Candidates are the batch's in-batch pairs (the batch tier's
+    capped/salted/accounted pair machinery, smaller url canonical) plus its
+    cross pairs against the key-state table, probed only in the partitions
+    the batch's keys hash to. State keys owned by more than
+    max_bucket_size urls (boilerplate shared corpus-wide) leave the cross
+    probe and are ACCOUNTED; a true dup pair shares many other keys. Both
+    pair sets verify in ONE call against batch payload plus the matched
+    state urls' payload, fetched from their partitions only (the batch's
+    row wins for a re-sent url); the matched state doc is the canonical
+    side.
+
+    Replay safety mirrors the exact tier: a replayed doc finds its OWN keys
+    in state, so it never matches itself and is not re-appended. Payload
+    appends before keys and replay detection keys on keys (the later
+    commit): a crash between the two re-appends payload rows as exact-row
+    duplicates, collapsed by the full-row dropDuplicates at every read."""
+    keys = docs.select("url", F.explode("band_keys").alias("band_key"))
+    pairs, flagged = pairs_from_buckets(
+        keys.select("url", F.lit(0).alias("band_id"), "band_key"),
+        cfg,
+        tier.name,
+        urls=docs,
+    )
+    stage = f"stream_{tier.name}"
+    if flagged:
+        catalog.record_metrics(
+            stage, {"flagged_batch_buckets": float(len(flagged))}
+        )
+    texts = docs.select("url", tier.payload_col)
+    replayed = None
+    if catalog.exists(tier.keys_table):
+        state = pruned(
+            catalog, tier.keys_table, _buckets(keys, cfg, tier.keys_table)
+        ).select(F.col("url").alias("state_url"), "band_key")
+        hot = (
+            state.groupBy("band_key")
+            .agg(F.count(F.lit(1)).alias("sz"))
+            .filter(F.col("sz") > cfg.max_bucket_size)
+        )
+        n_hot = hot.count()
+        if n_hot:
+            catalog.record_metrics(stage, {tier.dropped_metric: float(n_hot)})
+            state = state.join(
+                F.broadcast(hot.select("band_key")), "band_key", "left_anti"
+            )
+        matches = keys.join(state, "band_key").localCheckpoint()
+        replayed = (
+            matches.filter(F.col("url") == F.col("state_url"))
+            .select("url")
+            .distinct()
+        )
+        cross = (
+            matches.filter(F.col("url") != F.col("state_url"))
+            .select("url", F.col("state_url").alias("matched_url"))
+            .distinct()
+        )
+        m_buckets = _buckets(cross, cfg, tier.payload_table, "matched_url")
+        if m_buckets:
+            texts = texts.unionByName(
+                pruned(catalog, tier.payload_table, m_buckets)
+                .dropDuplicates()  # crash-residue insurance (exact-row dups)
+                .select("url", tier.payload_col)
+                .join(docs.select("url"), "url", "left_anti")
+            )
+            pairs = pairs.unionByName(
+                cross.select(
+                    F.col("matched_url").alias("url_a"),
+                    F.col("url").alias("url_b"),
+                    F.lit(tier.name).alias("tier"),
+                )
+            )
+
+    batch_col = F.lit(int(batch_id)).alias("batch_id")
+    dups = tier.verify(pairs, texts, cfg).select(
+        F.col("url_b").alias("url"),
+        F.col("url_a").alias("matched_url"),
+        *[F.expr(e) for e in tier.out],
+        batch_col,
+    ).localCheckpoint()
+    catalog.append(dups, tier.dups_table)
+
+    to_state = docs.join(dups.select("url").distinct(), "url", "left_anti")
+    if replayed is not None:
+        to_state = to_state.join(replayed, "url", "left_anti")
+    to_state = to_state.localCheckpoint()  # both appends read it
+    for table, rows in (
+        (tier.payload_table, to_state.select("url", "lang", tier.payload_col)),
+        (tier.keys_table,
+         to_state.select("url", F.explode("band_keys").alias("band_key"))),
+    ):
+        catalog.append(
+            rows.select("*", batch_col, _bucket_col(cfg, table)),
+            table,
+            partition_by=[_BUCKETS[table][0]],
+        )
+
+
 def _process_near_tier(
     new_docs: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
 ) -> None:
-    """Near tier of one micro-batch, reusing the batch tier's machinery
-    end-to-end (north_rule: recall is measured at identical
-    shingle/signature config): shingle -> fused MinHash UDF -> the SAME
-    32-band LSH keys as operators/lsh.py, probed against accumulated
-    band-key state with partition pruning, verified by EXACT Jaccard
-    against matched state docs' shingles (reference analog: the near tier
-    grouper.rs:95-220, applied per increment).
-
-    State layout (two tables, both hive/Iceberg-partitioned so per-batch
-    probes prune, never scan the corpus):
-      * stream_bands (url, band_key) partitioned by
-        band_bucket = pmod(xxhash64(band_key), N) — the candidate probe
-        touches only the batch's own band buckets: O(|batch| x bands / N).
-      * stream_sigs (url, lang, shingles) partitioned by
-        sig_bucket = pmod(xxhash64(url), N) — the verify step fetches
-        shingles for MATCHED state urls only, pruned to their buckets.
-    Probe fan-out is bounded on BOTH sides (never silent, SURVEY §7.4
-    risk 4): in-batch pairing routes through the batch tier's own
-    capped/salted/accounted ``nid_pairs_from_buckets``; state band keys
-    matching more than cfg.max_bucket_size rows are excluded from the
-    cross probe and ACCOUNTED ('dropped_band_keys' metric); a true near
-    pair shares many other bands.
-
-    Replay safety mirrors the exact tier: a replayed doc finds its OWN
-    band keys in state -> (a) the url != matched_url filter keeps
-    self-matches out of the dup stream, (b) docs whose url already owns
-    band state are excluded from the state re-append. The sigs append runs
-    BEFORE the bands append and replay detection keys on bands (the later
-    commit), so a crash between the two re-appends sigs as exact-row
-    duplicates — collapsed by the full-row dropDuplicates at every read.
-    Chains are edge semantics: matched_url may itself be a near-dup of an
-    earlier doc (transitive closure is the batch tier's CC job)."""
-    from ..functions.shingles import with_shingles
-    from ..functions.signatures import signature_udf
-    from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
-    from ..operators.verify import verify_pairs
-
+    """Near tier: the batch tier's shingles, fused MinHash and 32-band LSH
+    keys (recall is measured at identical shingle/signature config),
+    verified by exact Jaccard."""
     sig_fn = signature_udf(
         cfg.num_perm, cfg.minhash_seed, want_minhash=True, want_simhash=False
     )
@@ -243,268 +350,23 @@ def _process_near_tier(
         .select("url", "lang", "shingles", "band_keys")
         .localCheckpoint()  # one Arrow pass; many downstream consumers
     )
-    batch_bands = sigs.select(
-        "url", F.explode("band_keys").alias("band_key")
-    )
-
-    # in-batch near pairs through the batch tier's capped/salted/accounted
-    # pair machinery (a hot boilerplate band key inside one availableNow
-    # backfill batch would otherwise self-join quadratically); the smaller
-    # url is the canonical side (deterministic, batch-internal)
-    pairs, flagged = pairs_from_buckets(
-        batch_bands.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "near",
-        urls=sigs,
-    )
-    if flagged:
-        catalog.record_metrics(
-            "stream_near", {"flagged_batch_buckets": float(len(flagged))}
-        )
-    shingles = sigs.select("url", "shingles")
-    replayed = None
-    if catalog.exists(BANDS_TABLE):
-        buckets = [
-            r[0]
-            for r in batch_bands.select(_band_bucket_col(cfg))
-            .distinct()
-            .collect()
-        ]
-        state_bands = pruned_band_state(catalog, cfg, buckets).select(
-            F.col("url").alias("state_url"), "band_key"
-        )
-        # cap probe fan-out: a boilerplate band key owned by a huge slice of
-        # the corpus would fan the join out quadratically per batch
-        sizes = state_bands.groupBy("band_key").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        hot = sizes.filter(F.col("sz") > cfg.max_bucket_size)
-        n_hot = hot.count()
-        if n_hot:
-            catalog.record_metrics(
-                "stream_near", {"dropped_band_keys": float(n_hot)}
-            )
-            state_bands = state_bands.join(
-                F.broadcast(hot.select("band_key")), "band_key", "left_anti"
-            )
-        matches = batch_bands.join(state_bands, "band_key").localCheckpoint()
-        replayed = (
-            matches.filter(F.col("url") == F.col("state_url"))
-            .select("url")
-            .distinct()
-        )
-        cross = (
-            matches.filter(F.col("url") != F.col("state_url"))
-            .select("url", F.col("state_url").alias("matched_url"))
-            .distinct()
-        )
-        m_buckets = [
-            r[0]
-            for r in cross.select(
-                _sig_bucket_col(cfg, "matched_url")
-            ).distinct().collect()
-        ]
-        if m_buckets:
-            state_sigs = (
-                catalog.read(SIGS_TABLE)
-                .filter(F.col("sig_bucket").isin(m_buckets))
-                .dropDuplicates()  # crash-residue insurance (exact-row dups)
-                .select("url", "shingles")
-                # a url present in BOTH batch and state (re-sent url) must
-                # contribute ONE shingle row — the batch's wins
-                .join(shingles.select("url"), "url", "left_anti")
-            )
-            shingles = shingles.unionByName(state_sigs)
-            # the matched state doc is the canonical side (url_a)
-            pairs = pairs.unionByName(
-                cross.select(
-                    F.col("matched_url").alias("url_a"),
-                    F.col("url").alias("url_b"),
-                    F.lit("near").alias("tier"),
-                )
-            )
-
-    # the batch tier's own verify_pairs, so a borderline pair classifies
-    # identically in both tiers (threshold on the RAW jaccard, rounding
-    # only at output); url_a is the canonical side -> matched_url
-    batch_col = F.lit(int(batch_id)).alias("batch_id")
-    near = verify_pairs(pairs, shingles, cfg).select(
-        F.col("url_b").alias("url"),
-        F.col("url_a").alias("matched_url"),
-        F.round("similarity", 6).alias("similarity"),
-        batch_col,
-    ).localCheckpoint()
-    catalog.append(near, NEAR_DUPS_TABLE)
-
-    # canonical docs enter near state: not a near-dup this batch, not
-    # already owning band state (replay)
-    to_state = sigs.join(
-        near.select("url").distinct(), "url", "left_anti"
-    )
-    if replayed is not None:
-        to_state = to_state.join(replayed, "url", "left_anti")
-    to_state = to_state.localCheckpoint()  # sigs + bands appends both read it
-    catalog.append(
-        to_state.select(
-            "url", "lang", "shingles", batch_col, _sig_bucket_col(cfg)
-        ),
-        SIGS_TABLE,
-        partition_by=["sig_bucket"],
-    )
-    catalog.append(
-        to_state.select(
-            "url", F.explode("band_keys").alias("band_key")
-        ).select("url", "band_key", batch_col, _band_bucket_col(cfg)),
-        BANDS_TABLE,
-        partition_by=["band_bucket"],
-    )
+    _probe_state(_NEAR, sigs, catalog, cfg, batch_id)
 
 
 def _process_substring_tier(
     new_docs: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
 ) -> None:
-    """Substring tier of one micro-batch (VERDICT r4 #5): a drained batch
-    whose doc CONTAINS (or is contained in) a prior doc at
-    >= min_substring_len chars is detected, reusing the batch tier's
-    winnowing candidate generation + exact rolling-hash LCS verify
-    (operators/substring.py) against accumulated fingerprint state.
-
-    State layout (same pmod(hash, N)-bucketed + pruned-probe pattern as the
-    near tier's stream_bands/stream_sigs):
-      * stream_winnow (url, band_key) partitioned by
-        win_bucket = pmod(xxhash64(band_key), N) — winnowed fingerprints
-        (~2% of chars), probed with partition pruning: O(|batch fps| / N).
-      * stream_texts (url, lang, norm_text) partitioned by
-        text_bucket = pmod(xxhash64(url), N) — the verify step fetches
-        norm_text for MATCHED state urls only, pruned to their buckets.
-    Hot fingerprint keys (boilerplate runs shared corpus-wide) are excluded
-    from the cross probe above cfg.max_bucket_size and ACCOUNTED
-    ('dropped_winnow_keys'); in-batch pairing routes through the
-    capped/salted/accounted pair machinery. Replay safety mirrors the near
-    tier: self-matches filter out of the dup stream, docs whose url already
-    owns winnow state skip the state re-append, texts append before winnow
-    (replay detection keys on the later commit)."""
-    from ..operators.lsh import pairs_from_buckets
-    from ..operators.substring import verify_substring_pairs, winnow_udf
-
+    """Substring tier: a doc that CONTAINS (or is contained in) another at
+    >= min_substring_len chars, found through the batch tier's winnowed
+    fingerprints and verified by the exact rolling-hash LCS."""
     eligible = (
         new_docs.filter(F.length("norm_text") >= cfg.min_substring_len)
-        .select("url", "lang", "norm_text")
-        .localCheckpoint()
-    )
-    fps = eligible.select(
-        "url",
-        F.explode(
-            winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-        ).alias("fph"),
-        "lang",
-    ).select(
-        "url", F.xxhash64("lang", "fph").alias("band_key")
-    ).localCheckpoint()
-
-    # in-batch pairs through the capped/salted/accounted machinery; the
-    # smaller url is the canonical side
-    pairs, flagged = pairs_from_buckets(
-        fps.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        "substring",
-        urls=eligible,
-    )
-    if flagged:
-        catalog.record_metrics(
-            "stream_substring", {"flagged_batch_buckets": float(len(flagged))}
+        .select(
+            "url", "lang", "norm_text", winnow_keys(cfg).alias("band_keys")
         )
-    texts = eligible.select("url", "norm_text")
-    replayed = None
-    if catalog.exists(WINNOW_TABLE):
-        buckets = [
-            r[0]
-            for r in fps.select(_winnow_bucket_col(cfg)).distinct().collect()
-        ]
-        state_fps = pruned_winnow_state(catalog, cfg, buckets).select(
-            F.col("url").alias("state_url"), "band_key"
-        )
-        sizes = state_fps.groupBy("band_key").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        hot = sizes.filter(F.col("sz") > cfg.max_bucket_size)
-        n_hot = hot.count()
-        if n_hot:
-            catalog.record_metrics(
-                "stream_substring", {"dropped_winnow_keys": float(n_hot)}
-            )
-            state_fps = state_fps.join(
-                F.broadcast(hot.select("band_key")), "band_key", "left_anti"
-            )
-        matches = fps.join(state_fps, "band_key").localCheckpoint()
-        replayed = (
-            matches.filter(F.col("url") == F.col("state_url"))
-            .select("url")
-            .distinct()
-        )
-        cross = (
-            matches.filter(F.col("url") != F.col("state_url"))
-            .select("url", F.col("state_url").alias("matched_url"))
-            .distinct()
-        )
-        m_buckets = [
-            r[0]
-            for r in cross.select(
-                _text_bucket_col(cfg, "matched_url")
-            ).distinct().collect()
-        ]
-        if m_buckets:
-            state_texts = (
-                catalog.read(TEXTS_TABLE)
-                .filter(F.col("text_bucket").isin(m_buckets))
-                .dropDuplicates()  # crash-residue insurance
-                .select("url", "norm_text")
-                # a url present in BOTH batch and state (re-sent url) must
-                # contribute ONE text row — the batch's wins
-                .join(eligible.select("url"), "url", "left_anti")
-            )
-            texts = texts.unionByName(state_texts)
-            # the matched state doc is the canonical side (url_a)
-            pairs = pairs.unionByName(
-                cross.select(
-                    F.col("matched_url").alias("url_a"),
-                    F.col("url").alias("url_b"),
-                    F.lit("substring").alias("tier"),
-                )
-            )
-
-    batch_col = F.lit(int(batch_id)).alias("batch_id")
-    edges = verify_substring_pairs(pairs, texts, cfg).select(
-        F.col("url_b").alias("url"),
-        F.col("url_a").alias("matched_url"),
-        (F.col("span_a_end") - F.col("span_a_start")).alias("lcs_len"),
-        F.round("similarity", 6).alias("similarity"),
-        batch_col,
-    ).localCheckpoint()
-    catalog.append(edges, SUBSTR_DUPS_TABLE)
-
-    # canonical docs enter substring state: not a substring-dup this batch,
-    # not already owning winnow state (replay)
-    to_state = eligible.join(
-        edges.select("url").distinct(), "url", "left_anti"
+        .localCheckpoint()  # one winnow UDF pass; many downstream consumers
     )
-    if replayed is not None:
-        to_state = to_state.join(replayed, "url", "left_anti")
-    to_state = to_state.localCheckpoint()
-    catalog.append(
-        to_state.select(
-            "url", "lang", "norm_text", batch_col, _text_bucket_col(cfg)
-        ),
-        TEXTS_TABLE,
-        partition_by=["text_bucket"],
-    )
-    catalog.append(
-        fps.join(to_state.select("url"), "url", "inner").select(
-            "url", "band_key", batch_col, _winnow_bucket_col(cfg)
-        ),
-        WINNOW_TABLE,
-        partition_by=["win_bucket"],
-    )
+    _probe_state(_SUBSTRING, eligible, catalog, cfg, batch_id)
 
 
 def incremental_dedup(
@@ -520,13 +382,15 @@ def incremental_dedup(
     Per micro-batch (foreachBatch — the sink is several table appends, not
     expressible as a single streaming sink):
       1. fingerprint the batch with the batch-tier UDFs,
-      2. EXACT tier: probe ``stream_fps`` (partition-pruned), append hits to
-         ``stream_dups`` and first-seen fps to state,
-      3. NEAR tier (``tiers`` includes 'near'): the batch's canonical docs
-         are MinHash-banded with the batch tier's exact config, probed
-         against ``stream_bands``, exact-Jaccard-verified against matched
-         docs' shingles from ``stream_sigs``, and appended to
-         ``stream_near_dups`` (see ``_process_near_tier``).
+      2. EXACT tier: probe ``stream_fps``, append hits to ``stream_dups``
+         and first-seen fps to state; the rest of the batch is its
+         canonical docs,
+      3. NEAR tier (``tiers`` includes 'near'): the canonical docs' MinHash
+         band keys probe ``stream_bands``, verify against ``stream_sigs``
+         and append to ``stream_near_dups``,
+      4. SUBSTRING tier (``tiers`` includes 'substring'): the canonical
+         docs' winnowed fingerprints probe ``stream_winnow``, verify against
+         ``stream_texts`` and append to ``stream_substring_dups``.
 
     With ``available_now`` the query drains everything currently in the
     directory and stops — the deterministic test/backfill mode; without it
@@ -572,93 +436,45 @@ def incremental_dedup(
     return writer.start()
 
 
-def incremental_exact_dedup(
-    stream: DataFrame,
-    catalog: Catalog,
-    cfg: PipelineConfig,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Exact-tier-only incremental dedup (see ``incremental_dedup``)."""
-    return incremental_dedup(
-        stream, catalog, cfg, checkpoint_dir,
-        tiers=("exact",), available_now=available_now,
-    )
+# table -> (partition column, hashed column). pmod over a re-hash, not the
+# raw value, so one expression buckets BIGINT and hex-string fingerprints
+_BUCKETS = {
+    STATE_TABLE: ("fp_bucket", "fingerprint"),
+    BANDS_TABLE: ("band_bucket", "band_key"),
+    SIGS_TABLE: ("sig_bucket", "url"),
+    WINNOW_TABLE: ("win_bucket", "band_key"),
+    TEXTS_TABLE: ("text_bucket", "url"),
+}
 
 
-def _fp_bucket_col(cfg: PipelineConfig):
-    # pmod over a re-hash (not the raw fp) so the SAME expression buckets
-    # 64-bit BIGINT and 128-bit hex-string fingerprints alike
+def _bucket_col(cfg: PipelineConfig, table: str, src: str | None = None):
+    """``table``'s partition column, hashed from ``src`` (default: the
+    column the table buckets on)."""
+    name, hashed = _BUCKETS[table]
     return (
-        F.pmod(F.xxhash64("fingerprint"), F.lit(cfg.stream_fp_buckets))
+        F.pmod(F.xxhash64(src or hashed), F.lit(cfg.stream_fp_buckets))
         .cast("int")
-        .alias("fp_bucket")
+        .alias(name)
     )
 
 
-def _band_bucket_col(cfg: PipelineConfig):
-    return (
-        F.pmod(F.xxhash64("band_key"), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("band_bucket")
-    )
+def _buckets(
+    df: DataFrame, cfg: PipelineConfig, table: str, src: str | None = None
+) -> list[int]:
+    """The ``table`` partitions ``df``'s rows can live in — bounded by
+    stream_fp_buckets, so the collect is tiny."""
+    col = _bucket_col(cfg, table, src)
+    return [r[0] for r in df.select(col).distinct().collect()]
 
 
-def _sig_bucket_col(cfg: PipelineConfig, url_col: str = "url"):
-    return (
-        F.pmod(F.xxhash64(url_col), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("sig_bucket")
-    )
-
-
-def _winnow_bucket_col(cfg: PipelineConfig):
-    return (
-        F.pmod(F.xxhash64("band_key"), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("win_bucket")
-    )
-
-
-def _text_bucket_col(cfg: PipelineConfig, url_col: str = "url"):
-    return (
-        F.pmod(F.xxhash64(url_col), F.lit(cfg.stream_fp_buckets))
-        .cast("int")
-        .alias("text_bucket")
-    )
-
-
-def pruned_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """State rows living in the given fp_bucket partitions — the isin filter
+def pruned(catalog: Catalog, table: str, buckets: list[int]) -> DataFrame:
+    """``table``'s rows in the given bucket partitions — the isin filter
     lands as a PartitionFilter on the scan (hive layout under the parquet
     fallback, identity partition spec under Iceberg), so every other
-    partition's files are never opened. This is what keeps the per-batch
+    partition's files are never opened. This is what keeps each per-batch
     probe O(|batch's buckets| / N of state) instead of O(state)."""
-    return catalog.read(STATE_TABLE).filter(
-        F.col("fp_bucket").isin([int(b) for b in buckets])
-    )
-
-
-def pruned_band_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """Band-key state rows in the given band_bucket partitions — the near
-    tier's partition-pruned probe (same contract as ``pruned_state``)."""
-    return catalog.read(BANDS_TABLE).filter(
-        F.col("band_bucket").isin([int(b) for b in buckets])
-    )
-
-
-def pruned_winnow_state(
-    catalog: Catalog, cfg: PipelineConfig, buckets: list[int]
-) -> DataFrame:
-    """Winnow-fingerprint state rows in the given win_bucket partitions —
-    the substring tier's partition-pruned probe (same contract as
-    ``pruned_state``)."""
-    return catalog.read(WINNOW_TABLE).filter(
-        F.col("win_bucket").isin([int(b) for b in buckets])
+    return catalog.read(table).filter(
+        F.col(_BUCKETS[table][0]).isin([int(b) for b in buckets])
     )
 
 
@@ -688,7 +504,8 @@ def _migrate_legacy_state(catalog: Catalog, cfg: PipelineConfig) -> None:
     old = spark.read.parquet(*legacy)
     if "fp_bucket" not in old.columns:
         old = old.select(
-            "url", "fingerprint", "n_tokens", "batch_id", _fp_bucket_col(cfg)
+            "url", "fingerprint", "n_tokens", "batch_id",
+            _bucket_col(cfg, STATE_TABLE),
         )
     tmp = root.parent / f"{STATE_TABLE}__migrate_{uuid.uuid4().hex[:8]}"
     old.write.partitionBy("fp_bucket").parquet(str(tmp))
@@ -714,62 +531,31 @@ def load_stream_state(catalog: Catalog) -> DataFrame:
     return catalog.read(STATE_TABLE).dropDuplicates()
 
 
-def load_stream_dups(catalog: Catalog) -> DataFrame:
-    """Detected duplicate arrivals, replay-safe (one row per url+match)."""
-    if not catalog.exists(DUPS_TABLE):
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("fingerprint", T.LongType()),
-                T.StructField("url", T.StringType()),
-                T.StructField("matched_url", T.StringType()),
-                T.StructField("batch_id", T.LongType()),
-            ]
-        )
+def _load_dups(catalog: Catalog, table: str, schema: str) -> DataFrame:
+    """A dups table, replay-safe (one row per url+match); empty with
+    ``schema`` before the first append."""
+    if not catalog.exists(table):
         return catalog.spark.createDataFrame([], schema)
-    return catalog.read(DUPS_TABLE).dropDuplicates(["url", "matched_url"])
+    return catalog.read(table).dropDuplicates(["url", "matched_url"])
+
+
+def load_stream_dups(catalog: Catalog) -> DataFrame:
+    """Detected exact-duplicate arrivals."""
+    return _load_dups(catalog, DUPS_TABLE, "fingerprint BIGINT, url STRING, "
+                      "matched_url STRING, batch_id BIGINT")
 
 
 def load_stream_near_dups(catalog: Catalog) -> DataFrame:
-    """Detected NEAR-duplicate arrivals (url, matched_url, similarity,
-    batch_id), replay-safe (one row per url+match)."""
-    if not catalog.exists(NEAR_DUPS_TABLE):
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("url", T.StringType()),
-                T.StructField("matched_url", T.StringType()),
-                T.StructField("similarity", T.DoubleType()),
-                T.StructField("batch_id", T.LongType()),
-            ]
-        )
-        return catalog.spark.createDataFrame([], schema)
-    return catalog.read(NEAR_DUPS_TABLE).dropDuplicates(
-        ["url", "matched_url"]
-    )
+    """Detected NEAR-duplicate arrivals."""
+    return _load_dups(catalog, NEAR_DUPS_TABLE, "url STRING, matched_url "
+                      "STRING, similarity DOUBLE, batch_id BIGINT")
 
 
 def load_stream_substring_dups(catalog: Catalog) -> DataFrame:
-    """Detected SUBSTRING-duplicate arrivals (url, matched_url, lcs_len,
-    similarity, batch_id), replay-safe (one row per url+match)."""
-    if not catalog.exists(SUBSTR_DUPS_TABLE):
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("url", T.StringType()),
-                T.StructField("matched_url", T.StringType()),
-                T.StructField("lcs_len", T.LongType()),
-                T.StructField("similarity", T.DoubleType()),
-                T.StructField("batch_id", T.LongType()),
-            ]
-        )
-        return catalog.spark.createDataFrame([], schema)
-    return catalog.read(SUBSTR_DUPS_TABLE).dropDuplicates(
-        ["url", "matched_url"]
-    )
+    """Detected SUBSTRING-duplicate arrivals."""
+    return _load_dups(catalog, SUBSTR_DUPS_TABLE, "url STRING, matched_url "
+                      "STRING, lcs_len BIGINT, similarity DOUBLE, "
+                      "batch_id BIGINT")
 
 
 def windowed_doc_stats(

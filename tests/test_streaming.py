@@ -13,9 +13,13 @@ from cargo_dupes_spark.config import PipelineConfig
 from cargo_dupes_spark.schemas import WEB_PAGES
 from cargo_dupes_spark.sources.catalog import Catalog
 from cargo_dupes_spark.streaming.incremental import (
-    incremental_exact_dedup,
+    BANDS_TABLE,
+    STATE_TABLE,
+    WINNOW_TABLE,
+    incremental_dedup,
     load_stream_dups,
     load_stream_state,
+    pruned,
     read_web_pages_stream,
     windowed_doc_stats,
 )
@@ -52,9 +56,9 @@ def stream_env(spark, tmp_path):
     return cfg, catalog, str(drop_dir), ckpt
 
 
-def _drain(stream_df, catalog, cfg, ckpt):
-    q = incremental_exact_dedup(stream_df, catalog, cfg, ckpt)
-    q.awaitTermination(120)
+def _drain(stream_df, catalog, cfg, ckpt, tiers=("exact",)):
+    q = incremental_dedup(stream_df, catalog, cfg, ckpt, tiers=tiers)
+    q.awaitTermination(180)
     assert not q.isActive
 
 
@@ -109,28 +113,6 @@ def test_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert state2 == state1
     assert dups2 == dups1
     assert all(u != m for u, m in dups2)
-
-
-def test_state_probe_prunes_partitions(spark, stream_env):
-    """The state probe must read only the fp_bucket partitions the batch
-    can hit: the isin filter lands as a PartitionFilter on the parquet scan
-    (the VERDICT's plan assertion) and the scan's file set is confined to
-    the probed bucket directories."""
-    from cargo_dupes_spark.streaming.incremental import pruned_state
-
-    cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-
-    buckets = sorted({r.fp_bucket for r in load_stream_state(catalog).collect()})
-    assert len(buckets) == 2  # two distinct fps in wave 1
-    probe = pruned_state(catalog, cfg, buckets[:1])
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    parts = plan.split("PartitionFilters:", 1)
-    assert len(parts) == 2 and "fp_bucket" in parts[1][:300], plan
-    # and the pruned read returns exactly the probed bucket's rows
-    got = {r.fp_bucket for r in probe.collect()}
-    assert got == set(buckets[:1])
 
 
 def test_cli_stream_subcommand(spark, stream_env, tmp_path):
@@ -202,13 +184,7 @@ NEAR_WAVE2 = [
 
 
 def _drain_near(stream_df, catalog, cfg, ckpt):
-    from cargo_dupes_spark.streaming.incremental import incremental_dedup
-
-    q = incremental_dedup(
-        stream_df, catalog, cfg, ckpt, tiers=("exact", "near")
-    )
-    q.awaitTermination(180)
-    assert not q.isActive
+    _drain(stream_df, catalog, cfg, ckpt, tiers=("exact", "near"))
 
 
 def test_incremental_near_dedup_two_waves(spark, stream_env):
@@ -280,29 +256,6 @@ def test_near_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert near2 == near1
     assert bands2 == bands1
     assert all(u != m for u, m in near2)
-
-
-def test_near_probe_prunes_partitions(spark, stream_env):
-    """The band-key probe must land as a PartitionFilter on band_bucket —
-    the near-tier twin of the exact tier's plan assertion."""
-    from cargo_dupes_spark.streaming.incremental import (
-        BANDS_TABLE,
-        pruned_band_state,
-    )
-
-    cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, NEAR_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain_near(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-
-    buckets = sorted(
-        {r.band_bucket for r in catalog.read(BANDS_TABLE).collect()}
-    )
-    assert buckets
-    probe = pruned_band_state(catalog, cfg, buckets[:1])
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    parts = plan.split("PartitionFilters:", 1)
-    assert len(parts) == 2 and "band_bucket" in parts[1][:300], plan
-    assert {r.band_bucket for r in probe.collect()} == set(buckets[:1])
 
 
 def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
@@ -433,13 +386,7 @@ SUB_WAVE2 = [
 
 
 def _drain_substr(stream_df, catalog, cfg, ckpt):
-    from cargo_dupes_spark.streaming.incremental import incremental_dedup
-
-    q = incremental_dedup(
-        stream_df, catalog, cfg, ckpt, tiers=("exact", "substring")
-    )
-    q.awaitTermination(180)
-    assert not q.isActive
+    _drain(stream_df, catalog, cfg, ckpt, tiers=("exact", "substring"))
 
 
 def test_incremental_substring_dedup_two_waves(spark, stream_env):
@@ -539,17 +486,97 @@ def test_substring_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert all(u != m for u, m in dups2)
 
 
-def test_winnow_probe_prunes_partitions(spark, stream_env):
-    """The fingerprint probe must land as a PartitionFilter on win_bucket —
-    the substring-tier twin of the exact/near plan assertions."""
+@pytest.mark.parametrize(
+    "table, bucket, wave, tiers",
+    [
+        (STATE_TABLE, "fp_bucket", WAVE1, ("exact",)),
+        (BANDS_TABLE, "band_bucket", NEAR_WAVE1, ("exact", "near")),
+        (WINNOW_TABLE, "win_bucket", SUB_WAVE1, ("exact", "substring")),
+    ],
+    ids=[STATE_TABLE, BANDS_TABLE, WINNOW_TABLE],
+)
+def test_probe_prunes_partitions(spark, stream_env, table, bucket, wave, tiers):
+    """Each state probe must read only the bucket partitions the batch can
+    hit: the isin filter lands as a PartitionFilter on the parquet scan and
+    the pruned read returns exactly the probed bucket's rows."""
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, wave).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt,
+           tiers=tiers)
+
+    buckets = sorted({r[bucket] for r in catalog.read(table).collect()})
+    assert len(buckets) >= 2  # so one bucket is a strict subset
+    probe = pruned(catalog, table, buckets[:1])
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    parts = plan.split("PartitionFilters:", 1)
+    assert len(parts) == 2 and bucket in parts[1][:300], plan
+    assert {r[bucket] for r in probe.collect()} == set(buckets[:1])
+
+
+@pytest.mark.parametrize(
+    "tier, wave1, copy, metric",
+    [
+        ("near", NEAR_WAVE1, NEAR_WAVE2[0], "dropped_band_keys"),
+        ("substring", SUB_WAVE1, SUB_WAVE2[0], "dropped_winnow_keys"),
+    ],
+    ids=["near", "substring"],
+)
+def test_hot_state_keys_are_dropped_and_accounted(
+    spark, stream_env, tier, wave1, copy, metric
+):
+    """State keys owned by more than max_bucket_size urls leave the cross
+    probe, and the drop is recorded in the catalog's metrics table. At
+    max_bucket_size=0 every state key is hot, so wave 2's copy of a
+    wave-1 doc finds no match."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
     from cargo_dupes_spark.streaming.incremental import (
-        WINNOW_TABLE,
-        pruned_winnow_state,
+        load_stream_near_dups,
+        load_stream_substring_dups,
+    )
+
+    load = {"near": load_stream_near_dups,
+            "substring": load_stream_substring_dups}[tier]
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, wave1).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt,
+           tiers=("exact", tier))
+    assert catalog.read_metrics().filter(F.col("metric") == metric).count() == 0
+
+    hot = dataclasses.replace(cfg, max_bucket_size=0)
+    _pages(spark, [copy]).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, hot, ckpt,
+           tiers=("exact", tier))
+    assert load(catalog).filter(F.col("url") == copy[0]).count() == 0
+    dropped = catalog.read_metrics().filter(F.col("metric") == metric)
+    assert dropped.agg(F.sum("value")).first()[0] > 0
+
+
+def test_one_row_per_url_per_batch(spark, stream_env):
+    """A drop carrying one url twice with two texts keeps ONE row for it:
+    the latest warc_ts wins, ties broken on content, so state stays one
+    row per url (the contract pair generation and verify rely on)."""
+    from cargo_dupes_spark.streaming.incremental import (
+        SIGS_TABLE,
+        _fingerprint_batch,
     )
 
     cfg, catalog, drop_dir, ckpt = stream_env
-    _pages(spark, SUB_WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
-    _drain_substr(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
-    assert catalog.exists(WINNOW_TABLE)
-    plan = pruned_winnow_state(catalog, cfg, [0, 1])._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "win_bucket" in plan
+    url = "http://u.example/1"
+    later = TS + dt.timedelta(minutes=1)
+    rows = [
+        (url, TS, _LONG, "en"),
+        (url, later, " ".join(_WORDS[40:64]), "en"),
+        (url, TS, " ".join(reversed(_WORDS[:30])), "en"),
+    ]
+    _pages(spark, rows).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt,
+           tiers=("exact", "near"))
+    state = load_stream_state(catalog).collect()
+    assert [r.url for r in state] == [url]
+    assert catalog.read(SIGS_TABLE).filter(f"url = '{url}'").count() == 1
+    # the later arrival's text is the one kept
+    want = _fingerprint_batch(_pages(spark, [rows[1]]), cfg).first()
+    assert state[0].fingerprint == want.fingerprint
