@@ -16,7 +16,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cargo_dupes_spark.config import PipelineConfig
 from cargo_dupes_spark.functions.normalize import (
     is_boilerplate_col,
     is_boilerplate_sql,
@@ -57,7 +56,6 @@ from cargo_dupes_spark.functions.segments import segment_paragraphs_sql
 from cargo_dupes_spark.functions.shingles import oracle_shingle_hash_sql
 from cargo_dupes_spark.operators.similarity import (
     brute_force_topk,
-    cosine_col,
     embedding_near_dup_pairs,
 )
 

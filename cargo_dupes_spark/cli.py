@@ -21,7 +21,6 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import PipelineConfig, load_config
-from .operators.exact import exact_groups as build_exact_groups
 from .operators.groups import assemble_groups, filter_ignored
 from .plans.check import EXIT_ERROR, run_check
 from .plans.pipeline import ALL_DETECTORS, Pipeline

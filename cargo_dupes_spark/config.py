@@ -11,7 +11,7 @@ Knob lineage (reference -> here):
   similarity_threshold    -> jaccard_threshold   (Dice t maps to J = t/(2-t);
                              reference code default Dice 0.9 / CLI 0.8 ->
                              J 0.818 / 0.667; we default J 0.7)
-  sub_function / min_sub_nodes=5 -> substring_tier / min_substring_len
+  sub_function / min_sub_nodes=5 -> 'substring' detector / min_substring_len
   exclude patterns        -> url_exclude
   exclude_tests           -> exclude_boilerplate
   CI thresholds (cli.rs:304-374) -> max_exact_groups etc.
@@ -54,12 +54,10 @@ class PipelineConfig:
     jaccard_threshold: float = 0.7
 
     # --- SimHash tier (F6) ---
-    simhash_bits: int = 64
     hamming_threshold: int = 3
     simhash_chunks: int = 4       # pigeonhole: d<=3 pairs share >=1 of 4 chunks
 
     # --- substring tier (X1-X3) ---
-    substring_tier: bool = True
     min_substring_len: int = 64    # chars; reference min_sub_nodes=5 analog
     winnow_kgram: int = 16         # winnowing k-gram size (chars)
     winnow_window: int = 49        # guarantee: matches >= k + w - 1 = 64 chars
@@ -85,9 +83,6 @@ class PipelineConfig:
     # per-batch state probe prunes to the partitions the batch's own
     # fingerprints can live in, instead of scanning the whole corpus state
     stream_fp_buckets: int = 64
-
-    # --- clustering ---
-    cc_max_iterations: int = 50
 
     # --- CI gate thresholds (O4: cli.rs:304-374); None = not enforced ---
     max_exact_groups: int | None = None
@@ -121,8 +116,6 @@ class PipelineConfig:
             )
         if not 0.0 < self.jaccard_threshold <= 1.0:
             raise ValueError("jaccard_threshold must be in (0, 1]")
-        if self.simhash_bits != 64:
-            raise ValueError("only 64-bit SimHash is supported")
         if self.fingerprint_bits not in (64, 128):
             raise ValueError("fingerprint_bits must be 64 or 128")
         if self.simhash_chunks < self.hamming_threshold + 1:
@@ -134,16 +127,6 @@ class PipelineConfig:
                 "winnowing guarantee k+w-1 must be <= min_substring_len"
             )
         return self
-
-
-def dice_to_jaccard(dice: float) -> float:
-    """The reference thresholds are Dice over trees (similarity.rs:13-21);
-    ours are Jaccard over shingle sets. D = 2J/(1+J)  <=>  J = D/(2-D)."""
-    return dice / (2.0 - dice)
-
-
-def jaccard_to_dice(jaccard: float) -> float:
-    return 2.0 * jaccard / (1.0 + jaccard)
 
 
 def load_config(

@@ -1,4 +1,5 @@
-"""Batched MinHash signatures [F5] — numpy kernel inside a pandas UDF.
+"""Batched MinHash signatures [F5] — numpy kernel for the fused signature
+pandas UDF (functions/signatures.py).
 
 No reference analog (the reference compares trees pairwise within size
 buckets, ``dupes-core/src/grouper.rs:115-151``); MinHash+LSH is the
@@ -19,8 +20,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _MSB = np.uint64(1) << np.uint64(63)
 MINHASH_EMPTY = np.iinfo(np.int64).max  # sentinel for empty shingle sets
@@ -103,13 +102,3 @@ def minhash_batch(
     if len(idx):
         out[idx] = minhash_from_flat(flat, offsets, num_perm, seed)
     return pd.Series(list(out))
-
-
-def minhash_udf(num_perm: int, seed: int):
-    """pandas UDF: ARRAY<BIGINT> shingles -> ARRAY<BIGINT> signature."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _minhash(shingles: pd.Series) -> pd.Series:
-        return minhash_batch(shingles, num_perm, seed)
-
-    return _minhash

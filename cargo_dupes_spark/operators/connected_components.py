@@ -128,11 +128,11 @@ def _numpy_components(a: "np.ndarray", b: "np.ndarray"):
 
 
 DRIVER_CC_THRESHOLD = 1_000_000
+CC_MAX_ITERATIONS = 50  # large/small-star rounds before non-convergence raises
 
 
 def connected_components_ids(
     edges: DataFrame,
-    max_iterations: int = 50,
     driver_threshold: int = DRIVER_CC_THRESHOLD,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the minimum
@@ -186,7 +186,7 @@ def connected_components_ids(
         return edges.sparkSession.createDataFrame(
             pd.DataFrame({"node": nodes, "component": comps}), schema
         )
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ITERATIONS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         fp = _edge_fingerprint(cur)
         if fp == prev_fp:
@@ -194,7 +194,8 @@ def connected_components_ids(
         prev_fp = fp
     else:
         raise RuntimeError(
-            f"connected components did not converge in {max_iterations} rounds"
+            "connected components did not converge in "
+            f"{CC_MAX_ITERATIONS} rounds"
         )
     # converged: edges are (member -> center) stars; centers label themselves
     members = cur.select(

@@ -19,34 +19,11 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..functions.normalize import normalize_text_col, n_tokens_col
-from ..functions.shingles import jaccard_col, with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.connected_components import connected_components
-from ..operators.lsh import minhash_bands, pairs_from_buckets, simhash_buckets
+from ..operators.lsh import chunk_keys_col, pairs_from_buckets, signatures
 from ..operators.verify import verify_pairs
 
 CFG = PipelineConfig()  # shared shingle/signature config for the oracle
-
-
-def _signatures_from(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, norm_text) -> (url, lang, shingles, minhash, simhash)
-    with the shared oracle config — the near-tier signature builder."""
-    base = with_shingles(
-        docs.select(
-            F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
-        ),
-        "norm_text",
-        CFG.shingle_k,
-        CFG.shingle_seed,
-    ).drop("norm_text")
-    sig = signature_udf(CFG.num_perm, CFG.minhash_seed)
-    return base.withColumn("_sig", sig(F.col("shingles"))).select(
-        "url",
-        "lang",
-        "shingles",
-        F.col("_sig.minhash").alias("minhash"),
-        F.col("_sig.simhash").alias("simhash"),
-    )
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,22 +172,36 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[F5/F7/J3/J4] the full MinHash→LSH→verify path over the near-copy
-    union. The ORACLE is brute-force SQL Jaccard over token-shingle sets —
-    LSH recall at J≈0.9 with 32×4 bands is 1-3e-9, so the outputs match
-    exactly; this is the recall contract made into a checkable query.
+def _near_candidates(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(signatures, MinHash/LSH candidate pairs) over the near-copy union.
 
     The signature chain (normalize→shingle→sketch UDF) is localCheckpointed:
     banding and both verify joins read it, and without the checkpoint the
     UDF chain re-runs once per consumer (the production Pipeline checkpoints
-    every stage to the catalog instead)."""
+    every stage to the catalog instead). Only the simhash tier reads
+    simhash, so it is not built."""
     docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
-    sigs = _signatures_from(docs).localCheckpoint(eager=False)
+    sigs = signatures(
+        docs.select(
+            F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
+        ),
+        CFG,
+        simhash=False,
+    ).localCheckpoint(eager=False)
     pairs, _ = pairs_from_buckets(
-        minhash_bands(sigs, CFG), CFG, "near", urls=sigs,
-        collect_flagged=False,
+        sigs, "band_keys", CFG, "near", collect_flagged=False
     )
+    return sigs, pairs
+
+
+def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[F5/F7/J3/J4] the full MinHash→LSH→verify path over the near-copy
+    union. The ORACLE is brute-force SQL Jaccard over token-shingle sets —
+    LSH recall at J≈0.9 with 32×4 bands is 1-3e-9, so the outputs match
+    exactly; this is the recall contract made into a checkable query."""
+    sigs, pairs = _near_candidates(spark, sf_dir)
     edges = verify_pairs(pairs, sigs, CFG)
     return single_sorted(
         edges.select(
@@ -223,12 +214,7 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
-    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
-    sigs = _signatures_from(docs).localCheckpoint(eager=False)
-    pairs, _ = pairs_from_buckets(
-        minhash_bands(sigs, CFG), CFG, "near", urls=sigs,
-        collect_flagged=False,
-    )
+    sigs, pairs = _near_candidates(spark, sf_dir)
     if id_bits == 64:
         # The slice is bounded by construction (NEAR_SLICE docs), far under
         # DRIVER_CC_THRESHOLD — connected_components would take its numpy
@@ -313,7 +299,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs match exactly. Hamming-threshold verify is the analog of the
     reference's Dice-threshold check (dupes-core/src/grouper.rs:137-151)."""
     from ..functions.shingles import oracle_shingle_hashes, tokens_col
-    from ..functions.simhash import simhash_udf
+    from ..functions.simhash import hamming_col, simhash_udf
 
     docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
     toks = docs.select(
@@ -330,7 +316,10 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     pairs, _ = pairs_from_buckets(
-        simhash_buckets(sigs, CFG), CFG, "simhash", urls=sigs,
+        sigs,
+        chunk_keys_col("simhash", "lang", CFG.simhash_chunks),
+        CFG,
+        "simhash",
         collect_flagged=False,
     )
     a = sigs.select(F.col("url").alias("url_a"), F.col("simhash").alias("sh_a"))
@@ -340,7 +329,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.select(
             F.least(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_a"),
             F.greatest(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_b"),
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("long").alias("hamming"),
+            hamming_col("sh_a", "sh_b").cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= CFG.hamming_threshold)
         .transform(lambda d: single_sorted(d, "id_a", "id_b"))

@@ -1,18 +1,26 @@
-"""Candidate-pair generation: MinHash/LSH banding + SimHash Hamming buckets.
+"""Candidate-pair generation: hash each doc to bucket keys, pair docs
+within buckets under a skew cap.
 
 This is the scale-out replacement for the reference's O(bucket²) pairwise
 loop within (kind, ⌊log2 size⌋) buckets (J2/J3,
 ``dupes-core/src/grouper.rs:115-151``): the bucketing idea survives, the
-bucket key becomes an LSH band hash (or a SimHash bit-slice), and the
-"pairwise comparison within a bucket" becomes an equi-self-join.
+bucket key becomes an LSH band hash (or a SimHash bit-slice, a winnowed
+fingerprint, a hyperplane sketch, a centroid), and the "pairwise comparison
+within a bucket" becomes a grouped member expansion.
+
+Input shape (every detector): a ONE-ROW-PER-ID frame plus an
+ARRAY<BIGINT> key column over it. The pair generator does the single
+explode itself; buckets are grouped on the key ALONE, so a caller whose
+buckets must stay apart across bands or tables (MinHash band b, SimHash
+chunk i, ANN table t) folds that index into its key hash.
 
 Scale notes (the parts that matter at 10^12 docs):
-  * band_key is a single 8-byte join key; the self-join is a shuffled hash
-    join co-partitioned on it. AQE skew-join splits residual skew.
+  * band_key is a single 8-byte key; the shuffle carries (8-byte id,
+    8-byte key) rows only. AQE skew-join splits residual skew.
   * mega-buckets (boilerplate shingles shared by millions of docs) would
-    make the self-join quadratic — buckets above cfg.max_bucket_size are
-    excluded from pairing and ACCOUNTED (returned for the lineage table;
-    never silently dropped — SURVEY §7.4 risk 4).
+    make the expansion quadratic — buckets above max_bucket_size are
+    salted or excluded from pairing and ACCOUNTED (returned for the
+    lineage table; never silently dropped — SURVEY §7.4 risk 4).
   * docs of different lang never pair (the reference's hard mismatch on
     MacroCall names / per-language analyzers) — lang is folded into the
     band key, so cross-lang pairs never even co-locate.
@@ -20,16 +28,19 @@ Scale notes (the parts that matter at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..functions.shingles import with_shingles
+from ..functions.signatures import signature_udf
 from ..functions.simhash import simhash_chunk_col
 
 
 def minhash_band_keys_col(cfg: PipelineConfig):
-    """ARRAY<BIGINT> of LSH band keys for one doc: band_key folds lang +
-    band_id + the band's signature slice into one xxhash64, JVM-side."""
+    """ARRAY<BIGINT> of LSH band keys for one doc: each key folds lang +
+    the band index + the band's signature slice into one xxhash64,
+    JVM-side."""
     b, r = cfg.lsh_bands, cfg.lsh_rows
     return F.transform(
         F.sequence(F.lit(0), F.lit(b - 1)),
@@ -41,59 +52,80 @@ def minhash_band_keys_col(cfg: PipelineConfig):
     )
 
 
-def simhash_chunk_keys_col(cfg: PipelineConfig):
-    """ARRAY<BIGINT> of SimHash bit-slice keys: pigeonhole guarantees any
-    pair with Hamming distance <= hamming_threshold shares >= 1 of the
-    cfg.simhash_chunks slices."""
-    n = cfg.simhash_chunks
+def chunk_keys_col(hash_col: str, group_col: str, n_chunks: int) -> Column:
+    """ARRAY<BIGINT> of pigeonhole bit-slice keys of a 64-bit hash: any
+    pair within Hamming distance < n_chunks shares >= 1 of the n_chunks
+    slices. Each key folds ``group_col`` (lang, media_type) and the slice
+    index, so groups and slices never share a bucket."""
     return F.array(
         *[
-            F.xxhash64(F.col("lang"), F.lit(i), simhash_chunk_col("simhash", i, n))
-            for i in range(n)
+            F.xxhash64(
+                F.col(group_col),
+                F.lit(i),
+                simhash_chunk_col(hash_col, i, n_chunks),
+            )
+            for i in range(n_chunks)
         ]
     )
 
 
-def minhash_bands(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(url, band_id, band_key): one row per band per doc.
+def signatures(
+    docs: DataFrame,
+    cfg: PipelineConfig,
+    minhash: bool = True,
+    simhash: bool = True,
+) -> DataFrame:
+    """(url, lang, norm_text) -> (url, lang, shingles, simhash, band_keys,
+    chunk_keys), without the simhash columns (simhash, chunk_keys) or the
+    minhash one (band_keys) that were not asked for. The one near-tier
+    sketch builder: the pipeline's signatures stage, the streaming near
+    tier and the oracle queries all call it.
 
-    When the input carries a precomputed ``band_keys`` column (the pipeline
-    stores one: 32 x 8 B vs re-deriving from the 1 KB minhash column on
-    EVERY candidate-stage scan — pair generation scans the table twice), it
-    is exploded directly; otherwise keys are derived on the fly.
+    The fused UDF computes both sketches in one Arrow transfer. Of the
+    minhash only its LSH keys are kept: banding reads band_keys and verify
+    reads shingles (+ simhash). The ~1 KB/doc raw signature was never read
+    back; not writing it cuts the signatures stage's write volume ~35-40%,
+    and the candidate scans read 8-byte keys, not the sketch.
     """
-    bands = (
-        F.col("band_keys")
-        if "band_keys" in signatures.columns
-        else minhash_band_keys_col(cfg)
+    sig = signature_udf(
+        cfg.num_perm, cfg.minhash_seed, want_minhash=minhash, want_simhash=simhash
     )
-    return signatures.select(
-        "url", F.posexplode(bands).alias("band_id", "band_key")
+    out = (
+        with_shingles(
+            docs.select("url", "lang", "norm_text"),
+            "norm_text",
+            cfg.shingle_k,
+            cfg.shingle_seed,
+        )
+        .drop("norm_text")
+        .withColumn("_sig", sig(F.col("shingles")))
+        .select("url", "lang", "shingles", "_sig.minhash", "_sig.simhash")
+        .withColumn("band_keys", minhash_band_keys_col(cfg))
+        .withColumn(
+            "chunk_keys", chunk_keys_col("simhash", "lang", cfg.simhash_chunks)
+        )
     )
-
-
-def simhash_buckets(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(url, band_id, band_key) from SimHash bit-slices (one posexplode —
-    a single scan of the input, mirroring minhash_bands), preferring a
-    precomputed ``chunk_keys`` column when present."""
-    chunks = (
-        F.col("chunk_keys")
-        if "chunk_keys" in signatures.columns
-        else simhash_chunk_keys_col(cfg)
-    )
-    return signatures.select(
-        "url", F.posexplode(chunks).alias("band_id", "band_key")
+    wanted = {"simhash": simhash, "band_keys": minhash, "chunk_keys": simhash}
+    return out.select(
+        "url", "lang", "shingles", *[c for c, on in wanted.items() if on]
     )
 
 
 def nid_pairs_from_buckets(
-    bucketed: DataFrame,
-    cfg: PipelineConfig,
+    ids: DataFrame,
+    keys: str | Column,
+    max_bucket_size: int,
+    salt_buckets: int,
     dedup_buckets: bool = True,
     collect_flagged: bool = True,
 ) -> tuple[DataFrame, list[Row] | None]:
-    """Core pair generation over (nid BIGINT, band_id, band_key) bucket rows
-    -> (nid pairs with nid_a < nid_b, flagged-bucket accounting).
+    """Core pair generation: a one-row-per-id frame carrying ``nid BIGINT``
+    plus ``keys``, an ARRAY<BIGINT> column name or a ``Column`` over
+    ``ids`` -> (nid pairs with nid_a < nid_b, flagged-bucket accounting).
+
+    Each key is one bucket, grouped on the key alone: a caller whose
+    buckets must stay apart across bands, chunks or tables folds that index
+    into the key hash.
 
     Skew policy (north_rule "salted repartitioning handles hot-host URL
     skew"; SURVEY §7.4 risk 4 — never silent):
@@ -106,7 +138,7 @@ def nid_pairs_from_buckets(
         so the recall hit concentrates on boilerplate mega-groups.
       * size > max*salt_buckets                    — drop + account.
 
-    Two passes over the band rows:
+    Two passes over the (nid, band_key) rows of the single explode:
       PASS 1 — a count-only aggregation (map-side combined: the shuffle
       carries (band_key, partial_count), not members) finds mega-buckets.
       The flagged set is collected eagerly — it is bounded by the number of
@@ -120,7 +152,7 @@ def nid_pairs_from_buckets(
       JVM-side with nested array transforms (measured 2x faster than the
       equivalent equi-self-join, which shuffles the band rows twice).
 
-    Flagged rows have (band_id, band_key, bucket_size, action in
+    Flagged rows have (band_key, bucket_size, action in
     {'salted','dropped'}).
 
     ``collect_flagged`` (default True, the pipeline's accounting contract):
@@ -132,25 +164,19 @@ def nid_pairs_from_buckets(
     safety is the same either way: dropped buckets are excluded and salted
     buckets re-keyed BEFORE any member array materializes.
     """
-    cap = cfg.max_bucket_size
-    salt = cfg.salt_buckets
-    spark = bucketed.sparkSession
+    spark = ids.sparkSession
+    bucketed = ids.select("nid", F.explode(keys).alias("band_key"))
 
-    # PASS 1 sizes on band_key ALONE — the SAME key PASS 2 groups on. A
-    # caller whose band_key repeats across band_ids (IVF: band_key =
-    # xxhash64(centroid) for every probe rank) would otherwise see a hot
-    # bucket undercounted per (band_id, band_key) and slip past the cap
-    # into an unbounded collect_list. band_id survives as a min() diagnostic
-    # in the flagged accounting; text tiers fold band_id into the xxhash64
-    # key so for them the two groupings are identical anyway.
-    sizes = bucketed.groupBy("band_key").agg(
-        F.count(F.lit(1)).alias("sz"), F.min("band_id").alias("band_id")
-    )
-    flagged_df = sizes.filter(F.col("sz") > cap).select(
-        F.col("band_id").cast("int").alias("band_id"),
+    # PASS 1 sizes on band_key ALONE — the SAME key PASS 2 groups on, so a
+    # key found at different array positions by different ids (IVF:
+    # xxhash64(centroid) at whatever probe rank each vector gives it) is
+    # sized as ONE bucket and cannot slip past the cap into an unbounded
+    # collect_list.
+    sizes = bucketed.groupBy("band_key").agg(F.count(F.lit(1)).alias("sz"))
+    flagged_df = sizes.filter(F.col("sz") > max_bucket_size).select(
         "band_key",
         F.col("sz").alias("bucket_size"),
-        F.when(F.col("sz") <= cap * salt, F.lit("salted"))
+        F.when(F.col("sz") <= max_bucket_size * salt_buckets, F.lit("salted"))
         .otherwise(F.lit("dropped"))
         .alias("action"),
     )
@@ -175,7 +201,6 @@ def nid_pairs_from_buckets(
             "band_key BIGINT, action STRING",
         ) if flagged else None
 
-    bucketed = bucketed.select("nid", "band_key")
     if adjust is not None:
         # one row per band_key (a key shared by two flagged buckets — a
         # 2^-64 collision — must not fan out the join; 'dropped' wins)
@@ -192,7 +217,8 @@ def nid_pairs_from_buckets(
                     # sub-bucket key: fold an nid-derived salt into the band
                     # key (nid = xxhash64(url) — url-hash salting)
                     F.xxhash64(
-                        F.col("band_key"), F.pmod(F.col("nid"), F.lit(salt))
+                        F.col("band_key"),
+                        F.pmod(F.col("nid"), F.lit(salt_buckets)),
                     ),
                 ).otherwise(F.col("band_key")),
             )
@@ -243,26 +269,27 @@ def nid_pairs_from_buckets(
 
 
 def pairs_from_buckets(
-    bucketed: DataFrame,
+    docs: DataFrame,
+    keys: str | Column,
     cfg: PipelineConfig,
     tier: str,
-    urls: DataFrame | None = None,
     collect_flagged: bool = True,
 ) -> tuple[DataFrame, list[Row] | None]:
-    """Bucket rows (url, band_id, band_key) -> deduped candidate pairs
-    (url_a < url_b) + the flagged-bucket accounting of
-    ``nid_pairs_from_buckets`` (see its docstring for the skew policy).
+    """One-row-per-url ``docs`` plus ``keys``, an ARRAY<BIGINT> column name
+    or a ``Column`` over ``docs`` -> deduped candidate pairs (url_a < url_b)
+    + the flagged-bucket accounting of ``nid_pairs_from_buckets`` (see its
+    docstring for the bucket grouping and the skew policy, capped by
+    cfg.max_bucket_size / cfg.salt_buckets).
 
     The heavy shuffle carries 8-byte url-hash surrogates (nid), not url
     strings — ~3x fewer shuffle bytes over the ~(docs x bands) band rows;
     the (small) final pair set maps back to urls via an equi-join against
-    the distinct url list (auto-broadcast under 64 MB; a plain shuffled
-    hash join of pairs«docs at 10^12 scale).
+    ``docs`` itself, which is the url map (auto-broadcast under 64 MB; a
+    plain shuffled hash join of pairs«docs at 10^12 scale).
 
-    ``urls``, when given, MUST be one-row-per-url (signatures/reps frames
-    are); duplicate urls would fan out the join-back and multiply output
-    pairs. Callers that can't guarantee that should pass None (a distinct()
-    over the band rows is derived, at the cost of an extra shuffle).
+    ``docs`` MUST be one-row-per-url: duplicate urls would fan out the
+    join-back and multiply output pairs (asserted under
+    CARGO_DUPES_DEBUG_CONTRACTS).
 
     nid = xxhash64(url) collisions (~n²/2^65 — relevant only near 10^12
     docs) are neutralized at the join-back: self-pairs from two urls
@@ -271,7 +298,7 @@ def pairs_from_buckets(
     No url-level dedup is needed after the join-back (the former
     ``dropDuplicates(url_a, url_b)`` was a full extra exchange of the pair
     set — the only pair-set-wide shuffle between the nid dedup and verify):
-    with ``urls`` one-row-per-url, url -> nid is a FUNCTION, so a canonical
+    with ``docs`` one-row-per-url, url -> nid is a FUNCTION, so a canonical
     url pair (u, v) can only arise from the single nid pair
     (min, max)(xxhash64(u), xxhash64(v)) joined to u's and v's unique map
     rows — nid pairs are distinct by construction (the nid-level
@@ -279,22 +306,19 @@ def pairs_from_buckets(
     collision the fanned-out url pairs are distinct (different urls).
     Pinned in tests/test_r06_optimizations.py.
     """
-    if urls is not None:
-        from ..contracts import assert_unique_ids
+    from ..contracts import assert_unique_ids
 
-        assert_unique_ids(urls, "url", "pairs_from_buckets(urls)")
-    url_src = urls.select("url") if urls is not None else (
-        bucketed.select("url").distinct()
-    )
-    url_map = url_src.withColumn("nid", F.xxhash64("url"))
-    nid_rows = bucketed.select(
-        F.xxhash64("url").alias("nid"), "band_id", "band_key"
-    )
+    assert_unique_ids(docs, "url", "pairs_from_buckets(docs)")
+    docs = docs.withColumn("nid", F.xxhash64("url"))
     nid_pairs, flagged = nid_pairs_from_buckets(
-        nid_rows, cfg, collect_flagged=collect_flagged
+        docs,
+        keys,
+        cfg.max_bucket_size,
+        cfg.salt_buckets,
+        collect_flagged=collect_flagged,
     )
-    map_a = url_map.select(F.col("nid").alias("nid_a"), F.col("url").alias("ua"))
-    map_b = url_map.select(F.col("nid").alias("nid_b"), F.col("url").alias("ub"))
+    map_a = docs.select(F.col("nid").alias("nid_a"), F.col("url").alias("ua"))
+    map_b = docs.select(F.col("nid").alias("nid_b"), F.col("url").alias("ub"))
     pairs = (
         nid_pairs.join(map_a, "nid_a", "inner")
         .join(map_b, "nid_b", "inner")

@@ -271,58 +271,6 @@ def extract_features(
     return media.mapInPandas(_batches, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize: REAL block-mean resample + P6 re-encode for image/ppm rows;
-    other codecs keep the schema/partition plumbing with a deterministic
-    truncation (declared boundary — no jpeg/video codec here)."""
-
-    def _resize_one(payload: bytes | None, meta, mtype: str) -> bytes:
-        codec = (
-            (meta or {}).get("codec")
-            if not isinstance(meta, tuple)
-            else meta[3]
-        )
-        if payload and mtype == "image" and codec == "ppm":
-            img = decode_ppm(payload)
-            resized = np.stack(
-                [
-                    _block_mean(img[:, :, c].astype(np.float64), height, width)
-                    for c in range(3)
-                ],
-                axis=2,
-            )
-            return encode_ppm(np.clip(resized, 0, 255).astype(np.uint8))
-        return (payload or b"")[: max(64, width * height // 64)]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = [
-                _resize_one(p, m, t)
-                for p, m, t in zip(pdf["payload"], pdf["meta"], pdf["media_type"])
-            ]
-            out["meta"] = [
-                {
-                    "width": width,
-                    "height": height,
-                    "duration_ms": (
-                        (m or {}).get("duration_ms")
-                        if not isinstance(m, tuple)
-                        else m[2]
-                    ),
-                    "codec": (
-                        (m or {}).get("codec")
-                        if not isinstance(m, tuple)
-                        else m[3]
-                    ),
-                }
-                for m in pdf["meta"]
-            ]
-            yield out
-
-    return media.mapInPandas(_batches, MEDIA_SCHEMA)
-
-
 def near_media_dupes(
     features: DataFrame,
     hamming_threshold: int = 3,
@@ -347,29 +295,18 @@ def near_media_dupes(
     phash — nothing payload-sized moves.
 
     Returns (id_a < id_b, media_type, hamming <= hamming_threshold)."""
-    from ..config import PipelineConfig
-    from ..functions.simhash import simhash_chunk_col
-    from .lsh import nid_pairs_from_buckets
+    from ..functions.simhash import hamming_col
+    from .lsh import chunk_keys_col, nid_pairs_from_buckets
 
     if n_chunks < hamming_threshold + 1:
         raise ValueError("pigeonhole requires n_chunks >= hamming_threshold+1")
-    cfg = PipelineConfig(
-        max_bucket_size=max_bucket_size, salt_buckets=salt_buckets
+    nid_pairs, _ = nid_pairs_from_buckets(
+        features.withColumnRenamed("media_id", "nid"),
+        chunk_keys_col("phash", "media_type", n_chunks),
+        max_bucket_size,
+        salt_buckets,
+        collect_flagged=False,
     )
-    keys = F.array(
-        *[
-            F.xxhash64(
-                F.col("media_type"),
-                F.lit(i),
-                simhash_chunk_col("phash", i, n_chunks),
-            )
-            for i in range(n_chunks)
-        ]
-    )
-    bucketed = features.select(
-        F.col("media_id").alias("nid"), F.posexplode(keys).alias("band_id", "band_key")
-    )
-    nid_pairs, _ = nid_pairs_from_buckets(bucketed, cfg, collect_flagged=False)
     a = features.select(
         F.col("media_id").alias("nid_a"),
         F.col("media_type").alias("type_a"),
@@ -390,9 +327,7 @@ def near_media_dupes(
             F.col("nid_a").alias("id_a"),
             F.col("nid_b").alias("id_b"),
             F.col("type_a").alias("media_type"),
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-            .cast("long")
-            .alias("hamming"),
+            hamming_col("ph_a", "ph_b").cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= hamming_threshold)
     )

@@ -125,37 +125,28 @@ def _ann_candidate_pairs(
     machinery as the text tiers (operators/lsh.py): a dense embedding region
     (the normal case — real embeddings cluster) previously made the
     per-bucket self-join quadratic and carried both full vectors through the
-    candidate shuffle. Here the shuffle carries only (id, band_id, band_key)
-    and mega-buckets are salted or dropped WITH accounting.
+    candidate shuffle. Here the shuffle carries only (id, band_key) and
+    mega-buckets are salted or dropped WITH accounting.
 
     Returns (nid_pairs with nid_a < nid_b, None): every ANN caller discards
     the accounting."""
-    from ..config import PipelineConfig
     from .lsh import nid_pairs_from_buckets
 
-    cfg = PipelineConfig(
-        max_bucket_size=max_bucket_size, salt_buckets=salt_buckets
-    )
     sketch = multi_table_sketch_udf(dim, n_planes, n_tables, seed)
-    bucketed = (
-        embeddings.select(
-            F.col(id_col).alias("nid"), sketch(F.col(vec_col)).alias("__keys")
-        )
-        .select("nid", F.posexplode("__keys").alias("band_id", "raw_key"))
-        # raw sketch keys span only 2^n_planes values — fold the table id in
-        # and widen to 64 bits so buckets never merge across tables (the
-        # pair generator groups on band_key alone)
-        .select(
-            "nid",
-            "band_id",
-            F.xxhash64("band_id", "raw_key").alias("band_key"),
-        )
-    )
     # independent hyperplane tables rarely produce identical member sets —
     # the bucket-level dedup pass would be a pure extra exchange here
     # flagged accounting is discarded by every ANN caller -> lazy PASS 1
     return nid_pairs_from_buckets(
-        bucketed, cfg, dedup_buckets=False, collect_flagged=False
+        embeddings.select(
+            F.col(id_col).alias("nid"), sketch(F.col(vec_col)).alias("raw_keys")
+        ),
+        # raw sketch keys span only 2^n_planes values — fold the table id
+        # in and widen to 64 bits so buckets never merge across tables
+        F.transform("raw_keys", lambda k, t: F.xxhash64(t, k)),
+        max_bucket_size,
+        salt_buckets,
+        dedup_buckets=False,
+        collect_flagged=False,
     )
 
 
@@ -295,7 +286,6 @@ def ivf_topk(
     At 10^12 docs the assignment is a single UDF pass over the corpus and
     buckets shuffle 8-byte ids only; n_centroids scales with corpus size
     (sqrt(n) rule of thumb) and nprobe trades recall for bucket fan-out."""
-    from ..config import PipelineConfig
     from .lsh import nid_pairs_from_buckets
 
     # orderBy before limit: TakeOrderedAndProject keeps the training sample
@@ -324,21 +314,16 @@ def ivf_topk(
         top = np.argsort(-sims, axis=1)[:, :nprobe_eff]
         return pd.Series(list(top.astype(np.int32)))
 
-    bucketed = (
-        embeddings.select(
-            F.col(id_col).alias("nid"), _assign(F.col(vec_col)).alias("__c")
-        )
-        .select("nid", F.posexplode("__c").alias("band_id", "centroid"))
-        .select(
-            "nid", "band_id", F.xxhash64("centroid").alias("band_key")
-        )
-    )
-    cfg = PipelineConfig(
-        max_bucket_size=max_bucket_size, salt_buckets=salt_buckets
-    )
-    # one bucket per (probe rank, centroid) — member sets don't repeat
+    # one bucket per centroid — member sets don't repeat
     nid_pairs, _ = nid_pairs_from_buckets(
-        bucketed, cfg, dedup_buckets=False, collect_flagged=False
+        embeddings.select(
+            F.col(id_col).alias("nid"), _assign(F.col(vec_col)).alias("cells")
+        ),
+        F.transform("cells", lambda c: F.xxhash64(c)),
+        max_bucket_size,
+        salt_buckets,
+        dedup_buckets=False,
+        collect_flagged=False,
     )
     return _topk_from_pairs(nid_pairs, embeddings, k, id_col, vec_col)
 

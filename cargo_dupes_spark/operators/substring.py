@@ -106,24 +106,20 @@ def substring_candidates(
     """
     from .lsh import pairs_from_buckets
 
-    eligible = fingerprints.filter(
-        F.length("norm_text") >= cfg.min_substring_len
+    # pin (url, winnow key array): PASS 1 (mega-bucket sizing) and PASS 2
+    # (pair expansion) in pairs_from_buckets both traverse this plan, and
+    # without the checkpoint the winnow UDF — the expensive per-char kernel
+    # — runs over the whole corpus TWICE per invocation (guide §1.2: don't
+    # compute things twice). The pinned frame is one row per eligible doc
+    # and doubles as the url map; MEMORY_AND_DISK so oversized partitions
+    # spill rather than OOM.
+    keyed = (
+        fingerprints.filter(F.length("norm_text") >= cfg.min_substring_len)
+        .select("url", winnow_keys(cfg).alias("band_keys"))
+        .localCheckpoint(eager=False)
     )
-    # pin the winnowed rows: PASS 1 (mega-bucket sizing) and PASS 2 (pair
-    # expansion) in pairs_from_buckets both traverse this plan, and without
-    # the checkpoint the winnow UDF — the expensive per-char kernel — runs
-    # over the whole corpus TWICE per invocation (guide §1.2: don't compute
-    # things twice). The pinned rows are the selected fingerprints only
-    # (~2% of corpus chars, 24 B/row), MEMORY_AND_DISK so oversized
-    # partitions spill rather than OOM.
-    bucketed = eligible.select(
-        "url",
-        F.lit(0).alias("band_id"),
-        F.explode(winnow_keys(cfg)).alias("band_key"),
-    ).localCheckpoint(eager=False)
     return pairs_from_buckets(
-        bucketed, cfg, "substring", urls=eligible,
-        collect_flagged=collect_flagged,
+        keyed, "band_keys", cfg, "substring", collect_flagged=collect_flagged
     )
 
 

@@ -22,8 +22,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.shingles import with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.connected_components import connected_components
 from ..operators.exact import (
     apply_gates,
@@ -32,7 +30,7 @@ from ..operators.exact import (
     prepare_columns,
 )
 from ..operators.groups import cluster_memberships, filter_ignored
-from ..operators.lsh import minhash_bands, pairs_from_buckets, simhash_buckets
+from ..operators import lsh
 from ..operators.connected_components import DRIVER_CC_THRESHOLD
 from ..operators.stats import assemble_stats_row, stats_totals, tier_aggregates
 from ..operators.substring import substring_candidates, verify_substring_pairs
@@ -206,53 +204,12 @@ class Pipeline:
             ("representatives", lambda: exact_representatives(fingerprints)),
         )
 
-        def build_signatures() -> DataFrame:
-            base = with_shingles(
-                reps.select("url", "lang", "norm_text"),
-                "norm_text",
-                cfg.shingle_k,
-                cfg.shingle_seed,
-            ).drop("norm_text")
-            # fused UDF: one Arrow transfer + one flatten computes both
-            # sketches; simhash is always kept (verify's Hamming prefilter
-            # and the interchangeable-detector contract both read it)
-            sig = signature_udf(
-                cfg.num_perm,
-                cfg.minhash_seed,
-                want_minhash="minhash" in self.detectors,
-                want_simhash=True,
-            )
-            from ..operators.lsh import (
-                minhash_band_keys_col,
-                simhash_chunk_keys_col,
-            )
-
-            out = base.withColumn("_sig", sig(F.col("shingles"))).select(
-                "url",
-                "lang",
-                "shingles",
-                F.col("_sig.minhash").alias("minhash"),
-                F.col("_sig.simhash").alias("simhash"),
-            )
-            # store the LSH keys (32+4 x 8 B) next to the sketches: the
-            # candidate stage scans this table TWICE (bucket sizing + pair
-            # expansion) and needs only the keys — pruning the scan to
-            # band_keys instead of the 1 KB minhash column cuts its input
-            # bytes ~4x at every scale
-            if "minhash" in self.detectors:
-                out = out.withColumn("band_keys", minhash_band_keys_col(cfg))
-            # the raw minhash exists only to derive band_keys (banding reads
-            # band_keys; verify reads shingles + simhash) — committing it
-            # wrote ~1 KB/doc of incompressible hashes that NOTHING ever
-            # read back. Dropping it cuts the signatures stage's write
-            # volume ~35-40% — the stage is DRAM-bound at high core counts
-            # (measured 2.89x over 4x cores at 2.24M docs), so fewer bytes
-            # through the memory bus is a direct strong-scaling win, and at
-            # 100 TB it is ~1 TB of storage per 10^9 docs not written.
-            out = out.drop("minhash")
-            return out.withColumn("chunk_keys", simhash_chunk_keys_col(cfg))
-
-        signatures = self._stage("signatures", build_signatures)
+        # simhash is always kept: verify's Hamming prefilter and the
+        # interchangeable-detector contract both read it
+        signatures = self._stage(
+            "signatures",
+            lambda: lsh.signatures(reps, cfg, minhash="minhash" in self.detectors),
+        )
 
         def build_candidates() -> DataFrame:
             # collect_flagged=True (eager PASS 1): the pipeline CONSUMES the
@@ -263,20 +220,16 @@ class Pipeline:
             # the accounting (the driver-oracle slice queries) keep
             # collect_flagged=False, which saves them a serial job.
             parts, flagged = [], []
-            if "minhash" in self.detectors:
-                pairs, f = pairs_from_buckets(
-                    minhash_bands(signatures, cfg), cfg, "near",
-                    urls=signatures, collect_flagged=True,
-                )
-                parts.append(pairs)
-                flagged += f
-            if "simhash" in self.detectors:
-                pairs, f = pairs_from_buckets(
-                    simhash_buckets(signatures, cfg), cfg, "simhash",
-                    urls=signatures, collect_flagged=True,
-                )
-                parts.append(pairs)
-                flagged += f
+            for detector, keys, tier in (
+                ("minhash", "band_keys", "near"),
+                ("simhash", "chunk_keys", "simhash"),
+            ):
+                if detector in self.detectors:
+                    pairs, f = lsh.pairs_from_buckets(
+                        signatures, keys, cfg, tier, collect_flagged=True
+                    )
+                    parts.append(pairs)
+                    flagged += f
             if "substring" in self.detectors:
                 pairs, f = substring_candidates(
                     reps, cfg, collect_flagged=True

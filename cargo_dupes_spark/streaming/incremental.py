@@ -51,10 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..functions.shingles import with_shingles
-from ..functions.signatures import signature_udf
 from ..operators.exact import apply_gates, prepare_columns
-from ..operators.lsh import minhash_band_keys_col, pairs_from_buckets
+from ..operators.lsh import pairs_from_buckets, signatures
 from ..operators.substring import verify_substring_pairs, winnow_keys
 from ..operators.verify import verify_pairs
 from ..schemas import WEB_PAGES
@@ -248,12 +246,7 @@ def _probe_state(
     commit): a crash between the two re-appends payload rows as exact-row
     duplicates, collapsed by the full-row dropDuplicates at every read."""
     keys = docs.select("url", F.explode("band_keys").alias("band_key"))
-    pairs, flagged = pairs_from_buckets(
-        keys.select("url", F.lit(0).alias("band_id"), "band_key"),
-        cfg,
-        tier.name,
-        urls=docs,
-    )
+    pairs, flagged = pairs_from_buckets(docs, "band_keys", cfg, tier.name)
     stage = f"stream_{tier.name}"
     if flagged:
         catalog.record_metrics(
@@ -334,22 +327,9 @@ def _process_near_tier(
     """Near tier: the batch tier's shingles, fused MinHash and 32-band LSH
     keys (recall is measured at identical shingle/signature config),
     verified by exact Jaccard."""
-    sig_fn = signature_udf(
-        cfg.num_perm, cfg.minhash_seed, want_minhash=True, want_simhash=False
-    )
-    sigs = (
-        with_shingles(
-            new_docs.select("url", "lang", "norm_text"),
-            "norm_text",
-            cfg.shingle_k,
-            cfg.shingle_seed,
-        )
-        .drop("norm_text")
-        .withColumn("minhash", sig_fn(F.col("shingles"))["minhash"])
-        .withColumn("band_keys", minhash_band_keys_col(cfg))
-        .select("url", "lang", "shingles", "band_keys")
-        .localCheckpoint()  # one Arrow pass; many downstream consumers
-    )
+    sigs = signatures(  # one Arrow pass; many downstream consumers
+        new_docs, cfg, simhash=False
+    ).localCheckpoint()
     _probe_state(_NEAR, sigs, catalog, cfg, batch_id)
 
 

@@ -11,11 +11,13 @@ from cargo_dupes_spark.config import PipelineConfig
 from cargo_dupes_spark.operators.lsh import pairs_from_buckets
 
 
+def _docs(spark, rows):
+    """One row per url with its bucket-key array."""
+    return spark.createDataFrame(rows, "url string, band_keys array<bigint>")
+
+
 def _bucketed(spark, n_urls: int, band_key: int = 77):
-    return spark.createDataFrame(
-        [(f"u{i:04d}", 0, band_key) for i in range(n_urls)],
-        "url string, band_id int, band_key long",
-    )
+    return _docs(spark, [(f"u{i:04d}", [band_key]) for i in range(n_urls)])
 
 
 def _cfg(cap: int, salt: int) -> PipelineConfig:
@@ -25,7 +27,9 @@ def _cfg(cap: int, salt: int) -> PipelineConfig:
 
 
 def test_small_bucket_pairs_fully(spark):
-    pairs, flagged = pairs_from_buckets(_bucketed(spark, 5), _cfg(10, 4), "near")
+    pairs, flagged = pairs_from_buckets(
+        _bucketed(spark, 5), "band_keys", _cfg(10, 4), "near"
+    )
     assert pairs.count() == 5 * 4 // 2
     assert flagged == []
 
@@ -33,7 +37,7 @@ def test_small_bucket_pairs_fully(spark):
 def test_oversized_bucket_is_salted_not_dropped(spark):
     cfg = _cfg(10, 4)
     n = 30  # cap < 30 <= cap*salt
-    pairs, flagged = pairs_from_buckets(_bucketed(spark, n), cfg, "near")
+    pairs, flagged = pairs_from_buckets(_bucketed(spark, n), "band_keys", cfg, "near")
     rows = pairs.collect()
     # every pair must lie within one salt sub-bucket — recompute the
     # sub-bucket assignment with the same expression
@@ -54,7 +58,7 @@ def test_oversized_bucket_is_salted_not_dropped(spark):
 def test_giant_bucket_dropped_with_accounting(spark):
     cfg = _cfg(5, 2)
     n = 11  # > cap*salt = 10
-    pairs, flagged = pairs_from_buckets(_bucketed(spark, n), cfg, "near")
+    pairs, flagged = pairs_from_buckets(_bucketed(spark, n), "band_keys", cfg, "near")
     assert pairs.count() == 0
     assert len(flagged) == 1
     assert flagged[0]["action"] == "dropped" and flagged[0]["bucket_size"] == n
@@ -62,12 +66,16 @@ def test_giant_bucket_dropped_with_accounting(spark):
 
 def test_mixed_buckets(spark):
     cfg = _cfg(10, 4)
-    small = _bucketed(spark, 4, band_key=1)
-    big = _bucketed(spark, 30, band_key=2)
-    giant = _bucketed(spark, 41, band_key=3)
-    pairs, flagged = pairs_from_buckets(
-        small.unionByName(big).unionByName(giant), cfg, "near"
+    # small = u0000..u0003, big = u0000..u0029, giant = u0000..u0040: each
+    # url carries the keys of every bucket it belongs to
+    docs = _docs(
+        spark,
+        [
+            (f"u{i:04d}", [k for k, n in ((1, 4), (2, 30), (3, 41)) if i < n])
+            for i in range(41)
+        ],
     )
+    pairs, flagged = pairs_from_buckets(docs, "band_keys", cfg, "near")
     actions = {r["band_key"]: r["action"] for r in flagged}
     assert actions == {2: "salted", 3: "dropped"}
     got = pairs.collect()
@@ -77,18 +85,21 @@ def test_mixed_buckets(spark):
 
 
 def test_hot_key_split_across_band_ids_still_capped(spark):
-    """IVF shape: the SAME band_key under several band_ids (probe ranks).
-    Sizing must count the key as ONE bucket — per-(band_id, key) counts
-    would each sit under the cap while pass 2 groups them together into an
-    unbounded quadratic expansion (the exact skew pathology the cap
+    """IVF shape: the SAME band_key at different array positions (probe
+    ranks). Sizing must count the key as ONE bucket — per-(position, key)
+    counts would each sit under the cap while pass 2 groups them together
+    into an unbounded quadratic expansion (the exact skew pathology the cap
     exists to bound)."""
     cfg = _cfg(10, 2)
-    n = 30  # 3 band_ids x 10 members each: per-(band_id,key) size == cap
-    rows = [(f"u{i:04d}", i % 3, 77) for i in range(n)]
-    bucketed = spark.createDataFrame(
-        rows, "url string, band_id int, band_key long"
+    n = 30  # key 77 at rank i % 3, 10 members per rank: per-rank size == cap
+    docs = _docs(
+        spark,
+        [
+            (f"u{i:04d}", [77 if r == i % 3 else 1000 * i + r for r in range(3)])
+            for i in range(n)
+        ],
     )
-    pairs, flagged = pairs_from_buckets(bucketed, cfg, "near")
+    pairs, flagged = pairs_from_buckets(docs, "band_keys", cfg, "near")
     assert len(flagged) == 1
     assert flagged[0]["bucket_size"] == n  # counted on band_key alone
     assert flagged[0]["action"] == "dropped"  # 30 > cap*salt = 20

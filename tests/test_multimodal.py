@@ -19,7 +19,6 @@ from cargo_dupes_spark.operators.multimodal import (
     extract_features,
     media_features,
     near_media_dupes,
-    resize_stub,
     swap_extreme_blocks,
     synthetic_media,
     synthetic_media_near,
@@ -114,17 +113,6 @@ def test_strict_mode_raises(spark):
     media = synthetic_media(spark, n=6)
     with pytest.raises(Exception, match="NotImplementedError|codec"):
         extract_features(media, strict=True).collect()
-
-
-def test_resize_stub_shape(spark):
-    media = synthetic_media(spark, n=9)
-    resized = resize_stub(media, 16, 12)
-    assert resized.schema == media.schema
-    rows = {r.media_id: r for r in resized.collect()}
-    assert rows[0].meta.width == 16 and rows[0].meta.height == 12
-    # image rows are REALLY resampled: valid P6 at the target geometry
-    img = decode_ppm(bytes(rows[0].payload))
-    assert img.shape == (12, 16, 3)
 
 
 # ---------------------------------------------------------------------------

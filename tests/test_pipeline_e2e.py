@@ -247,3 +247,35 @@ def test_wide_fingerprints_same_grouping(spark, tmp_path, pipeline_run):
     )
     assert filtered.count() == before - in_group
     assert filtered.filter(F.col("group_fp") == fp).count() == 0
+
+
+@pytest.mark.parametrize(
+    "case, columns",
+    [
+        ("minhash", ["url", "lang", "shingles", "simhash", "band_keys", "chunk_keys"]),
+        ("simhash", ["url", "lang", "shingles", "simhash", "chunk_keys"]),
+        ("stream_near", ["url", "lang", "shingles", "band_keys"]),
+    ],
+    ids=["minhash", "simhash", "stream_near"],
+)
+def test_signature_columns(spark, tmp_path, monkeypatch, case, columns):
+    """The sketch builder's columns, by name and order, as each caller gets
+    them: the pipeline's committed signatures table (resume and the
+    candidate stage read it by column name) and the streaming near tier's
+    probe input."""
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    cfg = PipelineConfig(warehouse=str(tmp_path / "wh_sigs"))
+    if case == "stream_near":
+        from cargo_dupes_spark.streaming import incremental
+
+        seen = {}
+        monkeypatch.setattr(
+            incremental, "_probe_state",
+            lambda tier, docs, *a: seen.setdefault("docs", docs),
+        )
+        incremental._process_near_tier(prepare(df, cfg), None, cfg, 0)
+        got = seen["docs"]
+    else:
+        got = Pipeline(spark, cfg, detectors=(case,)).run(df)["signatures"]
+    assert got.columns == columns
+    assert got.count() > 0

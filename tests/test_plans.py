@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from cargo_dupes_spark.operators.exact import apply_gates, prepare_columns
 from cargo_dupes_spark.operators.groups import filter_ignored
-from cargo_dupes_spark.operators.lsh import minhash_bands, pairs_from_buckets
+from cargo_dupes_spark.operators.lsh import pairs_from_buckets
 from cargo_dupes_spark.operators.verify import verify_pairs
 
 
@@ -43,10 +43,11 @@ def test_gates_push_into_parquet_scan(spark, tmp_path, tmp_cfg, fixture_corpus):
 
 
 def test_candidate_band_scan_prunes_heavy_columns(spark, tmp_path, tmp_cfg):
-    """minhash_bands over a parquet signatures table must read ONLY
-    (url, band_keys) — the 1 KB minhash and the shingle arrays must be
-    pruned out of ReadSchema (operators/lsh.py:57-72; the candidate stage
-    scans this table twice, so an unpruned scan doubles its IO)."""
+    """pairs_from_buckets over a parquet signatures table must never read
+    the 1 KB minhash or the shingle arrays: every scan's ReadSchema holds
+    only (url, band_keys) or a subset (the candidate stage scans this table
+    for bucket sizing, pair expansion and the url map, so an unpruned scan
+    multiplies its IO)."""
     rows = [
         ("u%d" % i, list(range(i, i + 8)), [i] * 4, i * 7, [i, i + 1])
         for i in range(20)
@@ -55,13 +56,17 @@ def test_candidate_band_scan_prunes_heavy_columns(spark, tmp_path, tmp_cfg):
         rows, "url string, shingles array<bigint>, minhash array<bigint>, "
         "simhash bigint, band_keys array<bigint>"
     ).write.mode("overwrite").parquet(str(tmp_path / "sigs"))
-    bands = minhash_bands(spark.read.parquet(str(tmp_path / "sigs")), tmp_cfg)
-    plan = _plan(bands)
-    schema_part = plan.split("ReadSchema:", 1)
-    assert len(schema_part) == 2, plan
-    head = schema_part[1].splitlines()[0]
-    assert "band_keys" in head and "url" in head, head
-    assert "minhash" not in head and "shingles" not in head, head
+    pairs, _ = pairs_from_buckets(
+        spark.read.parquet(str(tmp_path / "sigs")), "band_keys", tmp_cfg,
+        "near", collect_flagged=False,
+    )
+    plan = _plan(pairs)
+    heads = [p.splitlines()[0] for p in plan.split("ReadSchema:")[1:]]
+    assert heads, plan
+    assert any("band_keys" in h for h in heads), heads
+    assert any("url" in h for h in heads), heads
+    for head in heads:
+        assert "minhash" not in head and "shingles" not in head, head
 
 
 def test_ignore_anti_join_broadcasts(spark):
@@ -90,12 +95,9 @@ def test_candidate_verify_plan_has_no_cartesian(spark, tmp_cfg):
     sigs = spark.createDataFrame(
         docs, "url string, shingles array<bigint>"
     ).withColumn("simhash", F.lit(0))
-    bucketed = sigs.select(
-        "url",
-        F.lit(0).alias("band_id"),
-        F.xxhash64(F.col("shingles")[0]).alias("band_key"),
+    pairs, _ = pairs_from_buckets(
+        sigs, F.array(F.xxhash64(F.col("shingles")[0])), tmp_cfg, "near"
     )
-    pairs, _ = pairs_from_buckets(bucketed, tmp_cfg, "near", urls=sigs)
     verified = verify_pairs(pairs, sigs, tmp_cfg)
     for plan in (_plan(pairs), _plan(verified)):
         assert "CartesianProduct" not in plan, plan

@@ -101,17 +101,25 @@ def test_norm_group_keys_partition_like_norm_text(spark):
 def test_bucket_dedup_pair_set_identical(spark):
     # buckets engineered so the same member set appears in many bands (the
     # dedup target), plus overlapping-but-distinct buckets and a singleton
-    rows = []
+    keys = {nid: [] for nid in (10, 11, 12, 13, 99)}
     for band in range(6):  # identical member set across 6 bands
         for nid in (10, 11, 12):
-            rows.append((nid, band, 1000 + band))
+            keys[nid].append(1000 + band)
     for nid in (11, 12, 13):  # overlapping, distinct set
-        rows.append((nid, 0, 2000))
-    rows.append((99, 0, 3000))  # singleton bucket -> no pairs
-    df = spark.createDataFrame(rows, "nid long, band_id int, band_key long")
+        keys[nid].append(2000)
+    keys[99].append(3000)  # singleton bucket -> no pairs
+    df = spark.createDataFrame(
+        list(keys.items()), "nid long, band_keys array<bigint>"
+    )
     cfg = PipelineConfig()
-    with_dedup, _ = nid_pairs_from_buckets(df, cfg, dedup_buckets=True)
-    without, _ = nid_pairs_from_buckets(df, cfg, dedup_buckets=False)
+    with_dedup, _ = nid_pairs_from_buckets(
+        df, "band_keys", cfg.max_bucket_size, cfg.salt_buckets,
+        dedup_buckets=True,
+    )
+    without, _ = nid_pairs_from_buckets(
+        df, "band_keys", cfg.max_bucket_size, cfg.salt_buckets,
+        dedup_buckets=False,
+    )
     a = {(r["nid_a"], r["nid_b"]) for r in with_dedup.collect()}
     b = {(r["nid_a"], r["nid_b"]) for r in without.collect()}
     assert a == b
@@ -212,20 +220,17 @@ def test_pairs_from_buckets_distinct_without_url_dedup(spark):
     # buckets and assert the output carries no duplicate url pair.
     from cargo_dupes_spark.operators.lsh import pairs_from_buckets
 
-    urls = spark.createDataFrame(
-        [(f"u{i}",) for i in range(6)], "url string"
-    )
-    rows = []
+    keys = {f"u{i}": [] for i in range(6)}
     for band in range(8):  # same member set collides in 8 bands
         for i in (0, 1, 2):
-            rows.append((f"u{i}", band, 5000 + band))
+            keys[f"u{i}"].append(5000 + band)
     for i in (1, 2, 3):  # overlapping distinct bucket
-        rows.append((f"u{i}", 0, 9000))
-    bucketed = spark.createDataFrame(
-        rows, "url string, band_id int, band_key long"
+        keys[f"u{i}"].append(9000)
+    docs = spark.createDataFrame(
+        list(keys.items()), "url string, band_keys array<bigint>"
     )
     pairs, _ = pairs_from_buckets(
-        bucketed, CFG, "near", urls=urls, collect_flagged=False
+        docs, "band_keys", CFG, "near", collect_flagged=False
     )
     got = [(r["url_a"], r["url_b"]) for r in pairs.collect()]
     assert len(got) == len(set(got))  # no duplicate url pairs
