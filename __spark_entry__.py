@@ -840,6 +840,44 @@ _NEAR_EDGES = f"""
 """
 
 
+# near_dup_clusters and near_dup_clusters_wide (64- vs 128-bit ids) must
+# return the same clusters
+_NEAR_CLUSTERS = f"""
+    with recursive {_NEAR_EDGES},
+    bidir as (select id_a a, id_b b from edges
+              union select id_b, id_a from edges),
+    reach(src, dst) as (
+      select a, a from bidir
+      union
+      select r.src, e.b from reach r join bidir e on r.dst = e.a
+    )
+    select src as doc_id, min(dst) as cluster_min
+    from reach group by src order by doc_id
+"""
+
+# ann_lsh_topk / ann_ivf_topk: the Spark side runs the REAL operators in
+# their exhaustive-candidate configurations (n_planes=0 / one IVF cell —
+# candidate set provably complete), so the emitted rows must equal exact
+# all-pairs top-k — which this SQL recomputes from scratch: cosine
+# arithmetic, rank contiguity, k-bound, symmetry all hash-checked per row
+# (the reference's verify discipline, similarity.rs:13-46)
+_ANN_TOPK = """
+    with c as (select vec_id,
+                      list_transform(embedding, x -> x::double) as emb
+               from embeddings),
+    scored as (
+      select a.vec_id as query_id, b.vec_id as neighbor_id,
+             round(list_cosine_similarity(a.emb, b.emb)
+                   * 1e6)::bigint as cosine_e6
+      from c a join c b on a.vec_id != b.vec_id
+    )
+    select query_id, neighbor_id, cosine_e6,
+           row_number() over (partition by query_id
+                              order by cosine_e6 desc, neighbor_id) as rank
+    from scored qualify rank <= 5 order by query_id, rank
+"""
+
+
 _SEGMENTS_SQL = (
     segment_paragraphs_sql(
         "(select doc_id, "
@@ -954,30 +992,8 @@ def oracle_sql() -> dict[str, str]:
             where bit_count(xor(a.sim, b.sim)) <= {CFG.hamming_threshold}
             order by id_a, id_b
         """,
-        "near_dup_clusters": f"""
-            with recursive {_NEAR_EDGES},
-            bidir as (select id_a a, id_b b from edges
-                      union select id_b, id_a from edges),
-            reach(src, dst) as (
-              select a, a from bidir
-              union
-              select r.src, e.b from reach r join bidir e on r.dst = e.a
-            )
-            select src as doc_id, min(dst) as cluster_min
-            from reach group by src order by doc_id
-        """,
-        "near_dup_clusters_wide": f"""
-            with recursive {_NEAR_EDGES},
-            bidir as (select id_a a, id_b b from edges
-                      union select id_b, id_a from edges),
-            reach(src, dst) as (
-              select a, a from bidir
-              union
-              select r.src, e.b from reach r join bidir e on r.dst = e.a
-            )
-            select src as doc_id, min(dst) as cluster_min
-            from reach group by src order by doc_id
-        """,
+        "near_dup_clusters": _NEAR_CLUSTERS,
+        "near_dup_clusters_wide": _NEAR_CLUSTERS,
         "ngram_jaccard_pairs": f"""
             with norm as (
               select doc_id, lang, {nt} as nt_ from documents where doc_id < 60
@@ -1102,43 +1118,8 @@ def oracle_sql() -> dict[str, str]:
               from planted where i % 6 = 1
             ) order by id_a, id_b
         """,
-        # ann_lsh_topk / ann_ivf_topk: the Spark side runs the REAL operators
-        # in their exhaustive-candidate configurations (n_planes=0 / one IVF
-        # cell — candidate set provably complete), so the emitted rows must
-        # equal exact all-pairs top-k — which this SQL recomputes from
-        # scratch: cosine arithmetic, rank contiguity, k-bound, symmetry all
-        # hash-checked per row (the reference's verify discipline,
-        # similarity.rs:13-46)
-        "ann_lsh_topk": """
-            with c as (select vec_id,
-                              list_transform(embedding, x -> x::double) as emb
-                       from embeddings),
-            scored as (
-              select a.vec_id as query_id, b.vec_id as neighbor_id,
-                     round(list_cosine_similarity(a.emb, b.emb)
-                           * 1e6)::bigint as cosine_e6
-              from c a join c b on a.vec_id != b.vec_id
-            )
-            select query_id, neighbor_id, cosine_e6,
-                   row_number() over (partition by query_id
-                                      order by cosine_e6 desc, neighbor_id) as rank
-            from scored qualify rank <= 5 order by query_id, rank
-        """,
-        "ann_ivf_topk": """
-            with c as (select vec_id,
-                              list_transform(embedding, x -> x::double) as emb
-                       from embeddings),
-            scored as (
-              select a.vec_id as query_id, b.vec_id as neighbor_id,
-                     round(list_cosine_similarity(a.emb, b.emb)
-                           * 1e6)::bigint as cosine_e6
-              from c a join c b on a.vec_id != b.vec_id
-            )
-            select query_id, neighbor_id, cosine_e6,
-                   row_number() over (partition by query_id
-                                      order by cosine_e6 desc, neighbor_id) as rank
-            from scored qualify rank <= 5 order by query_id, rank
-        """,
+        "ann_lsh_topk": _ANN_TOPK,
+        "ann_ivf_topk": _ANN_TOPK,
         # ann_planted_recall: every vec_id < 1000 has an exact copy at
         # vec_id + 1e6 (cosine exactly 1.0); the ANN candidate stage finds
         # each pair in every hash table by construction, so the output IS

@@ -1,12 +1,12 @@
 """CLI entry point [O3/O4/O5] — report / stats / check / ignore / ignored /
-cleanup subcommands.
+cleanup / stream subcommands.
 
 Mirrors the reference CLI surface (``cargo-dupes/src/main.rs:60-87``,
 ``dupes-core/src/cli.rs:234-440``): `report` is the flagship path, `check`
 the CI gate with exit codes 0/1/2, `ignore`/`ignored`/`cleanup` manage the
-ignore table. Ships to a cluster as
-``spark-submit --py-files dist/cargo_dupes_spark.zip -m cargo_dupes_spark.cli``
-(packaging: `python -m cargo_dupes_spark.package`).
+ignore table, `stream` drains a parquet drop dir incrementally. Ships to a
+cluster as ``scripts/package.sh && spark-submit --py-files dist/pipeline.zip
+main.py <subcommand>`` (``main.py`` forwards to this module).
 
 Input selection: --input is a parquet path/dir with web_pages columns, or
 'fixtures' (the seeded synthetic corpus), or 'documents:<sf_dir>' for the
@@ -78,7 +78,8 @@ def _build_parser() -> argparse.ArgumentParser:
 
     stm = sub.add_parser(
         "stream",
-        help="incremental exact dedup over a web_pages parquet drop dir",
+        help="incremental dedup (exact; near with --near) over a web_pages "
+             "parquet drop dir",
     )
     stm.add_argument("drop_dir", help="directory watched for parquet drops")
     stm.add_argument("--checkpoint", default=None,

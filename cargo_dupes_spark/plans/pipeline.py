@@ -41,6 +41,20 @@ from ..sources.ignore import load_ignore
 
 ALL_DETECTORS = ("minhash", "simhash", "substring")
 
+# lineage n_in: the stage whose committed n_out feeds each stage. Fixed, so
+# n_in does not depend on which CC regime or thread committed a stage; an
+# upstream skipped on resume (or absent, for fingerprints) records NULL.
+UPSTREAM = {
+    "exact_memberships": "fingerprints",
+    "representatives": "fingerprints",
+    "signatures": "representatives",
+    "candidate_pairs": "signatures",
+    "verified_edges": "candidate_pairs",
+    "clusters": "verified_edges",
+    "memberships": "verified_edges",
+    "stats": "memberships",
+}
+
 
 class Pipeline:
     def __init__(
@@ -62,13 +76,10 @@ class Pipeline:
         self.detectors = detectors
         self.resume = resume
         self.stage_log: list[str] = []  # executed vs skipped, for tests
-        self._prev_rows: int | None = None  # lineage n_in chain
         self.stage_rows: dict[str, int | None] = {}  # committed row counts
 
-    _CHAIN = object()  # sentinel: n_in = previous stage's count
-
     # ------------------------------------------------------------------
-    def _stage(self, name: str, build, n_in=_CHAIN) -> DataFrame:
+    def _stage(self, name: str, build) -> DataFrame:
         """Run-or-resume one stage: skip if committed under this config.
 
         Lineage contract (O6): per-partition n_out comes from the committed
@@ -76,21 +87,13 @@ class Pipeline:
         error_sample) ride a write-time Observation over the stage's
         ``extract_error`` column when present — the reference's warning
         channel (lib.rs:50-66), computed INSIDE the write job so failure
-        accounting costs zero additional Spark jobs. n_in chains the
-        previous stage's committed row count by default; concurrent stages
-        pass their shared upstream count explicitly (and do NOT advance the
-        chain — the caller does, from whichever branch feeds the next
-        serial stage).
+        accounting costs zero additional Spark jobs. n_in is the committed
+        row count of the stage's ``UPSTREAM`` stage.
         """
-        chained = n_in is Pipeline._CHAIN
-        if chained:
-            n_in = self._prev_rows
         if self.resume and self.catalog.is_complete(name):
             self.stage_log.append(f"skip:{name}")
             out = self.catalog.read(name)
             self.stage_rows[name] = None
-            if chained:
-                self._prev_rows = None  # chain broken by skip; n_in unknown
             return out
         t0 = time.monotonic()
         # label the stage's jobs in the UI/REST metrics (guide §1.5);
@@ -112,7 +115,7 @@ class Pipeline:
         n_rows = self.catalog.record_lineage(
             out,
             name,
-            n_in=n_in,
+            n_in=self.stage_rows.get(UPSTREAM.get(name)),
             n_failed=failed.get("n_failed"),
             error_sample=failed.get("error_sample"),
         )
@@ -126,8 +129,6 @@ class Pipeline:
         self.spark.sparkContext.setJobDescription(None)
         self.stage_log.append(f"run:{name}")
         self.stage_rows[name] = n_rows
-        if chained:
-            self._prev_rows = n_rows
         return out
 
     def _stages_concurrent(self, *specs) -> list[DataFrame]:
@@ -138,20 +139,12 @@ class Pipeline:
         on fingerprints — and running them serially adds one full stage of
         fixed commit latency to the critical path per branch: pure
         non-scaling cost at every cluster size. Resume, lineage and metrics
-        are per-stage as ever (both branches record the same upstream n_in);
-        the n_in chain continues from the LAST spec, which by convention is
-        the branch the next serial stage consumes."""
+        are per-stage as ever."""
         from concurrent.futures import ThreadPoolExecutor
 
-        upstream = self._prev_rows
         with ThreadPoolExecutor(max_workers=len(specs)) as ex:
-            futs = [
-                ex.submit(self._stage, name, build, upstream)
-                for name, build in specs
-            ]
-            outs = [f.result() for f in futs]
-        self._prev_rows = self.stage_rows.get(specs[-1][0])
-        return outs
+            futs = [ex.submit(self._stage, name, build) for name, build in specs]
+            return [f.result() for f in futs]
 
     def _fan_out_input(self, web_pages: DataFrame) -> DataFrame:
         """Parallelize an under-partitioned input before the fingerprints
@@ -196,9 +189,8 @@ class Pipeline:
 
         # exact tier and representatives are independent branches off the
         # fingerprints table — their stage commits run concurrently.
-        # representatives last: the next serial stage (signatures) chains
-        # its n_in from it. (J1 pre-exclusion: near/substring tiers operate
-        # on one representative per distinct fingerprint, grouper.rs:100-108)
+        # (J1 pre-exclusion: near/substring tiers operate on one
+        # representative per distinct fingerprint, grouper.rs:100-108)
         exact, reps = self._stages_concurrent(
             ("exact_memberships", lambda: exact_memberships(fingerprints)),
             ("representatives", lambda: exact_representatives(fingerprints)),
@@ -359,7 +351,7 @@ class Pipeline:
                 # joins) don't re-run the label joins per job
                 mem_clusters = build_clusters().localCheckpoint(eager=False)
                 clusters_fut = ex.submit(
-                    self._stage, "clusters", lambda: mem_clusters, edges_rows
+                    self._stage, "clusters", lambda: mem_clusters
                 )
             else:
                 clusters = self._stage("clusters", build_clusters)
@@ -384,13 +376,9 @@ class Pipeline:
                     out, load_ignore(self.catalog, bits=cfg.fingerprint_bits)
                 )
 
-            memberships = self._stage(
-                "memberships", build_memberships,
-                n_in=edges_rows if clusters_fut is not None else Pipeline._CHAIN,
-            )
+            memberships = self._stage("memberships", build_memberships)
             if clusters_fut is not None:
                 clusters = clusters_fut.result()
-                self._prev_rows = self.stage_rows.get("memberships")
 
             stats = self._stage(
                 "stats",

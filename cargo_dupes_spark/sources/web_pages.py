@@ -225,95 +225,6 @@ def generate_web_pages(
     return df, corpus
 
 
-def synthetic_web_pages_at_scale(
-    spark: SparkSession,
-    n_docs: int,
-    seed: int = 7,
-    langs: tuple[str, ...] = ("en", "de", "fr", "es"),
-    exact_mod: int = 10,
-    near_mod: int = 7,
-    vocab_size: int = 30000,
-    num_partitions: int | None = None,
-    min_doc_tokens: int = 55,
-    token_spread: int = 32,
-) -> DataFrame:
-    """Deterministic web_pages corpus at arbitrary scale, generated entirely
-    JVM-side (spark.range + xxhash64 token synthesis — no driver data, no
-    Python). Dup structure is LINEAR in n_docs: every ``exact_mod``-th doc
-    gets a byte-exact copy and every ``near_mod``-th doc a one-token near
-    copy (token-shingle Jaccard ≈ (n-2)/(n-1) ≈ 0.98), so verify/cluster
-    work scales with the corpus instead of quadratically in replica-group
-    size. Used by the scaling benchmark (BASELINE.md protocol) and usable as
-    a fixture source at any size.
-    """
-    sid = F.col("id")
-    base = (
-        spark.range(0, n_docs, 1, num_partitions)
-        if num_partitions
-        else spark.range(n_docs)
-    )
-    n_tok = (
-        F.lit(min_doc_tokens)
-        + F.pmod(F.xxhash64(F.lit(seed), sid), F.lit(token_spread))
-    ).cast("int")
-    # words must SURVIVE normalization (digits would be masked to <num>,
-    # collapsing every doc to the same norm_text): build 6-letter words from
-    # the hash via three 2-letter slices of a fixed alphabet => 26^3 = 17576
-    # distinct words, one xxhash64 + three substrings per token
-    alphabet = F.lit("abcdefghijklmnopqrstuvwxyza")
-
-    def _word(j):
-        h = F.pmod(F.xxhash64(F.lit(seed + 1), sid, j), F.lit(vocab_size))
-        return F.concat(
-            F.substring(alphabet, (F.pmod(h, F.lit(26)) + 1).cast("int"), 2),
-            F.substring(
-                alphabet,
-                (F.pmod((h / 26).cast("long"), F.lit(26)) + 1).cast("int"),
-                2,
-            ),
-            F.substring(
-                alphabet,
-                (F.pmod((h / 676).cast("long"), F.lit(26)) + 1).cast("int"),
-                2,
-            ),
-        )
-
-    words = F.transform(F.sequence(F.lit(1), n_tok), _word)
-    lang = F.element_at(
-        F.array(*[F.lit(lg) for lg in langs]),
-        (F.pmod(sid, F.lit(len(langs))) + 1).cast("int"),
-    )
-    gen = base.select(
-        sid,
-        F.array_join(words, " ").alias("text"),
-        lang.alias("lang"),
-        F.timestamp_seconds(F.lit(1704067200) + sid).alias("warc_ts"),
-    )
-
-    def rows(df: DataFrame, prefix: str, text_col):
-        return df.select(
-            F.concat(
-                F.lit("http://synth"),
-                F.pmod(F.xxhash64(F.lit(seed + 2), sid), F.lit(997)).cast("string"),
-                F.lit(f".example/{prefix}"),
-                sid.cast("string"),
-            ).alias("url"),
-            F.col("warc_ts"),
-            F.lit(None).cast("binary").alias("html"),
-            text_col.alias("text"),
-            F.col("lang"),
-        )
-
-    originals = rows(gen, "d", F.col("text"))
-    exacts = rows(gen.filter(F.pmod(sid, F.lit(exact_mod)) == 0), "x", F.col("text"))
-    nears = rows(
-        gen.filter(F.pmod(sid, F.lit(near_mod)) == 0),
-        "n",
-        F.concat(F.col("text"), F.lit(" extrazz")),
-    )
-    return originals.unionByName(exacts).unionByName(nears)
-
-
 def documents_as_web_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapter: driver-provided documents.parquet -> web_pages shape
     (FIXTURES.md §2: url := doc://source/doc_id, html NULL, fixed-epoch ts)."""

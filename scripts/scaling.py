@@ -1,29 +1,28 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling evidence).
+"""N-vs-4N strong-scaling protocol for the dedup pipeline.
 
 Modes
 -----
-default            Run the headline queries at $SPARK_GRAFT_SF_DIR (default
-                   /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and
-                   print ONE JSON line:
-                     {"metric": ..., "value": total_sec, "unit": "sec",
-                      "queries": {name: sec, ...}, "sf": ...}
+--scaling          Synthesize one --docs corpus, then run --pipeline-once at
+                   local[N] and local[4N] (fresh JVMs, same input,
+                   interleaved) and print ONE JSON line with throughput at
+                   both levels and scaling efficiency = (thr_4N / thr_N) / 4,
+                   next to the host's pure-CPU and DRAM-bandwidth ceilings.
 --pipeline-once    Run the full dedup pipeline (normalize -> fingerprint ->
                    exact tier -> MinHash/LSH -> verify -> CC -> stats, all
-                   stages checkpointed) over a deterministically replicated
-                   corpus at a given --cpus level; print a JSON line with
-                   docs/sec. Used as the unit of work for scaling runs.
---scaling          Spawn --pipeline-once at local[N] and local[4N] (fresh
-                   JVMs, same input) and report throughput at both plus
-                   scaling efficiency = (thr_4N / thr_N) / 4 — the sandbox
-                   proxy for the north_rule's N-vs-4N-executor criterion
-                   (no real cluster available here).
+                   stages checkpointed) over the synthetic corpus at --cpus;
+                   print a JSON line with docs/sec. The unit of work of a
+                   scaling run.
+--membw            Print the DRAM streaming-bandwidth ceiling at
+                   --scaling-base-cpus vs 4x and exit.
 
-The replicated corpus (--mult M) is deterministic: replica 0 keeps the
-original text; replicas of every 10th doc are byte-exact copies (exact-tier
-work); all other replicas append a one-token suffix (near-tier work, Jaccard
-~0.94 between variants), so every stage of the pipeline does real work that
-grows linearly with M.
+Run from the repository root: the pipeline's Python UDF workers import the
+package from the working directory.
+
+    python scripts/scaling.py --scaling --scaling-base-cpus 1 --docs 3000 --repeats 1
+
+The measurement protocol and the recorded runs are in BASELINE.md and the
+SCALING_*.json files.
 """
 
 from __future__ import annotations
@@ -37,69 +36,122 @@ import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-DEFAULT_MULT = int(os.environ.get("BENCH_MULT", "8"))
 
-REPLICA_OFFSET = 10_000_000
-EXACT_REPLICA_MOD = 10
-
-
-def _noop_write(df) -> None:
-    """Force full execution without driver-side materialization."""
-    df.write.format("noop").mode("overwrite").save()
-
-
-def replicated_web_pages(spark, sf_dir: str, mult: int):
-    """documents.parquet -> web_pages-shaped input, replicated x mult."""
+def synthetic_web_pages_at_scale(
+    spark,
+    n_docs: int,
+    seed: int = 7,
+    langs: tuple[str, ...] = ("en", "de", "fr", "es"),
+    exact_mod: int = 10,
+    near_mod: int = 7,
+    vocab_size: int = 30000,
+    num_partitions: int | None = None,
+    min_doc_tokens: int = 55,
+    token_spread: int = 32,
+):
+    """Deterministic web_pages corpus at arbitrary scale, generated entirely
+    JVM-side (spark.range + xxhash64 token synthesis — no driver data, no
+    Python). Dup structure is LINEAR in n_docs: every ``exact_mod``-th doc
+    gets a byte-exact copy and every ``near_mod``-th doc a one-token near
+    copy (token-shingle Jaccard ≈ (n-2)/(n-1) ≈ 0.98), so verify/cluster
+    work scales with the corpus instead of quadratically in replica-group
+    size.
+    """
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if mult <= 1:
-        return docs.select(
-            F.col("doc_id").cast("string").alias("url"),
-            "text",
-            "lang",
-        )
-    reps = spark.range(mult).select(F.col("id").alias("replica"))
-    exact_copy = (F.col("doc_id") % EXACT_REPLICA_MOD == 0) | (
-        F.col("replica") == 0
+    sid = F.col("id")
+    base = (
+        spark.range(0, n_docs, 1, num_partitions)
+        if num_partitions
+        else spark.range(n_docs)
     )
-    return docs.crossJoin(F.broadcast(reps)).select(
-        (F.col("doc_id") + F.col("replica") * REPLICA_OFFSET)
-        .cast("string")
-        .alias("url"),
-        F.when(exact_copy, F.col("text"))
-        .otherwise(
-            F.concat(F.col("text"), F.lit(" zz"), F.col("replica").cast("string"))
+    n_tok = (
+        F.lit(min_doc_tokens)
+        + F.pmod(F.xxhash64(F.lit(seed), sid), F.lit(token_spread))
+    ).cast("int")
+    # words must SURVIVE normalization (digits would be masked to <num>,
+    # collapsing every doc to the same norm_text): build 6-letter words from
+    # the hash via three 2-letter slices of a fixed alphabet => 26^3 = 17576
+    # distinct words, one xxhash64 + three substrings per token
+    alphabet = F.lit("abcdefghijklmnopqrstuvwxyza")
+
+    def _word(j):
+        h = F.pmod(F.xxhash64(F.lit(seed + 1), sid, j), F.lit(vocab_size))
+        return F.concat(
+            F.substring(alphabet, (F.pmod(h, F.lit(26)) + 1).cast("int"), 2),
+            F.substring(
+                alphabet,
+                (F.pmod((h / 26).cast("long"), F.lit(26)) + 1).cast("int"),
+                2,
+            ),
+            F.substring(
+                alphabet,
+                (F.pmod((h / 676).cast("long"), F.lit(26)) + 1).cast("int"),
+                2,
+            ),
         )
-        .alias("text"),
-        "lang",
+
+    words = F.transform(F.sequence(F.lit(1), n_tok), _word)
+    lang = F.element_at(
+        F.array(*[F.lit(lg) for lg in langs]),
+        (F.pmod(sid, F.lit(len(langs))) + 1).cast("int"),
+    )
+    gen = base.select(
+        sid,
+        F.array_join(words, " ").alias("text"),
+        lang.alias("lang"),
+        F.timestamp_seconds(F.lit(1704067200) + sid).alias("warc_ts"),
+    )
+
+    def rows(df, prefix: str, text_col):
+        return df.select(
+            F.concat(
+                F.lit("http://synth"),
+                F.pmod(F.xxhash64(F.lit(seed + 2), sid), F.lit(997)).cast("string"),
+                F.lit(f".example/{prefix}"),
+                sid.cast("string"),
+            ).alias("url"),
+            F.col("warc_ts"),
+            F.lit(None).cast("binary").alias("html"),
+            text_col.alias("text"),
+            F.col("lang"),
+        )
+
+    originals = rows(gen, "d", F.col("text"))
+    exacts = rows(gen.filter(F.pmod(sid, F.lit(exact_mod)) == 0), "x", F.col("text"))
+    nears = rows(
+        gen.filter(F.pmod(sid, F.lit(near_mod)) == 0),
+        "n",
+        F.concat(F.col("text"), F.lit(" extrazz")),
+    )
+    return originals.unionByName(exacts).unionByName(nears)
+
+
+def _scaling_corpus(spark, docs: int):
+    # partition count fixed independently of cpus so both scaling levels
+    # process the identical input split; ~200-token docs (~1.4 KB)
+    # approximate Common-Crawl extracted-text sizes
+    return synthetic_web_pages_at_scale(
+        spark, docs, num_partitions=64, min_doc_tokens=140, token_spread=120,
     )
 
 
-def run_pipeline_once(
-    sf_dir: str,
-    cpus: int,
-    mult: int,
-    docs: int | None = None,
-    input_path: str | None = None,
-) -> dict:
+def run_pipeline_once(cpus: int, docs: int, input_path: str | None = None) -> dict:
     from cargo_dupes_spark.config import PipelineConfig
     from cargo_dupes_spark.plans.pipeline import Pipeline
     from cargo_dupes_spark.session import build_session
 
-    warehouse = tempfile.mkdtemp(prefix=f"bench_wh_{cpus}_")
+    warehouse = tempfile.mkdtemp(prefix=f"scaling_wh_{cpus}_")
     # 4 tasks per core: with exactly one task per core a single straggler
     # (host steal, skewed partition) stretches the whole stage — measured as
     # candidate_pairs scaling only ~1.9x over 4x cores. AQE's
     # parallelism-first coalescing only merges sub-1MB partitions, so the
     # slack survives for real shuffles.
     spark = build_session(
-        app_name=f"bench-pipeline-{cpus}", parallelism=cpus,
+        app_name=f"scaling-pipeline-{cpus}", parallelism=cpus,
         shuffle_partitions=max(4 * cpus, 16),
     )
     try:
@@ -108,44 +160,30 @@ def run_pipeline_once(
             checkpoint_dir=os.path.join(warehouse, "ckpt"),
         )
         if input_path is None:
-            if docs:
-                from cargo_dupes_spark.sources.web_pages import (
-                    synthetic_web_pages_at_scale,
-                )
-
-                # partition count fixed independently of cpus so both scaling
-                # levels process the identical input split; ~200-token docs
-                # (~1.4 KB) approximate Common-Crawl extracted-text sizes
-                web_pages = synthetic_web_pages_at_scale(
-                    spark, docs, num_partitions=64,
-                    min_doc_tokens=140, token_spread=120,
-                )
-            else:
-                web_pages = replicated_web_pages(spark, sf_dir, mult)
             # materialize the input corpus OUTSIDE the timed window: the
-            # north_star input is an Iceberg/parquet table of web pages, so
-            # the measured job starts from a table scan, not from synthesis
+            # input is a parquet table of web pages, so the measured job
+            # starts from a table scan, not from synthesis
             input_path = os.path.join(warehouse, "input_web_pages")
-            web_pages.write.mode("overwrite").parquet(input_path)
+            _scaling_corpus(spark, docs).write.mode("overwrite").parquet(
+                input_path
+            )
         web_pages = spark.read.parquet(input_path)
         n_docs = web_pages.count()
 
         # JIT/codegen warm-up, excluded from timing (BASELINE.md protocol):
         # a miniature pipeline run compiles every hot code path (regex
         # normalize, shingle windows, Arrow UDF round-trip, shuffle + parquet
-        # write) so the measured run reflects steady-state throughput — the
-        # regime a real cluster job lives in. ~10 s; without it the first
-        # ~15 s of the measured run is C2-compiler time, a fixed cost that
-        # poisons the N-vs-4N strong-scaling comparison.
+        # write) so the measured run reflects steady-state throughput.
+        # Without it the first ~15 s of the measured run is C2-compiler
+        # time, a fixed cost that poisons the N-vs-4N comparison.
         warm_wh = os.path.join(warehouse, "warmup")
-        from cargo_dupes_spark.sources.web_pages import (
-            synthetic_web_pages_at_scale as _synth,
-        )
         warm_cfg = PipelineConfig(
             warehouse=warm_wh, checkpoint_dir=os.path.join(warm_wh, "ckpt")
         )
         warm_pipe = Pipeline(spark, warm_cfg, detectors=("minhash",))
-        warm_out = warm_pipe.run(_synth(spark, 3000, num_partitions=8))
+        warm_out = warm_pipe.run(
+            synthetic_web_pages_at_scale(spark, 3000, num_partitions=8)
+        )
         warm_out["memberships"].count()
         warm_out["stats"].collect()
         shutil.rmtree(warm_wh, ignore_errors=True)
@@ -165,7 +203,6 @@ def run_pipeline_once(
         return {
             "stage_walls": stage_walls,
             "cpus": cpus,
-            "mult": mult if not docs else None,
             "synthetic_docs": docs,
             "docs": n_docs,
             "memberships": n_members,
@@ -178,22 +215,19 @@ def run_pipeline_once(
 
 
 def _cpu_spin(_):
-    import time as _t
-
     x = 0
-    t0 = _t.monotonic()
+    t0 = time.monotonic()
     for i in range(30_000_000):
         x += i * i
-    return _t.monotonic() - t0
+    return time.monotonic() - t0
 
 
 def calibrate_cpu(n: int, repeats: int = 3) -> float:
     """Aggregate pure-CPU throughput (tasks/s) of n concurrent Python
     processes — embarrassingly parallel integer work, no Spark, no memory
     pressure. This is the HARDWARE ceiling: no distributed job can scale
-    better than the host's vCPUs do. The sandbox's 32 vCPUs measurably
-    deliver only ~2.6-3x the throughput of 8 (host oversubscription), so
-    scaling efficiency is reported both raw and normalized by this ceiling.
+    better than the host's vCPUs do, so scaling efficiency is reported both
+    raw and normalized by this ceiling.
     """
     import multiprocessing as mp
 
@@ -212,7 +246,7 @@ def _mem_stream(_):
     caller times the pool wall. The traffic is ~256 MB written (the
     ``full`` fill) + 24 x 256 MB read = ~6.25 GB per task, all of it
     forced through the memory bus (a.sum() over 32M contiguous doubles
-    cannot cache-resident)."""
+    cannot stay cache-resident)."""
     import numpy as _np
 
     a = _np.full(32 * 1024 * 1024, 1.0, dtype=_np.float64)  # 256 MB
@@ -228,15 +262,14 @@ _MEM_BYTES_PER_TASK = 32 * 1024 * 1024 * 8 * 25  # 1 write + 24 read passes
 def calibrate_membw(n: int, repeats: int = 3) -> float:
     """Aggregate DRAM streaming bandwidth (GB/s) of n concurrent
     processes. This is the OTHER hardware ceiling beside calibrate_cpu's
-    pure-CPU one: on this host the memory bus saturates at ~2-3 streaming
-    cores, so any bandwidth-bound stage (the Arrow sketch kernels + parquet
-    writes of the signatures stage, the shingle-array shuffles of verify)
-    cannot scale 4x over 4x cores NO MATTER WHAT THE PLAN DOES — each
-    executor on a real cluster owns its DRAM, so this ceiling is sandbox
-    physics, not plan shape. Reported as an INSTRUMENT next to the raw and
-    CPU-normalized efficiencies; deliberately NOT folded into the
-    normalization (a job grading itself on a bandwidth curve it sets would
-    be circular — see BASELINE.md host pathology #2)."""
+    pure-CPU one: on a shared-bus host the memory bus can saturate at a few
+    streaming cores, so any bandwidth-bound stage (the Arrow sketch kernels
+    + parquet writes of the signatures stage, the shingle-array shuffles of
+    verify) cannot scale 4x over 4x cores NO MATTER WHAT THE PLAN DOES —
+    each executor on a real cluster owns its DRAM. Reported as an
+    INSTRUMENT next to the raw and CPU-normalized efficiencies; deliberately
+    NOT folded into the normalization (a job grading itself on a bandwidth
+    curve it sets would be circular — see BASELINE.md host pathology #2)."""
     import multiprocessing as mp
 
     best = 0.0
@@ -290,10 +323,8 @@ def probe_window(
 
 
 def run_scaling(
-    sf_dir: str,
     base_cpus: int,
-    mult: int,
-    docs: int | None,
+    docs: int,
     repeats: int = 2,
     probe_gate: bool = False,
     probe_max_waits: int = 6,
@@ -341,25 +372,16 @@ def run_scaling(
     membw_4n = calibrate_membw(base_cpus * 4)
     membw_ceiling = (membw_4n / membw_n) / 4.0 if membw_n else 0.0
 
-    input_dir = tempfile.mkdtemp(prefix="bench_scaling_input_")
+    input_dir = tempfile.mkdtemp(prefix="scaling_input_")
     input_path = os.path.join(input_dir, "web_pages")
     try:
         from cargo_dupes_spark.session import build_session
 
-        gen = build_session(app_name="bench-scaling-gen")
+        gen = build_session(app_name="scaling-gen")
         try:
-            if docs:
-                from cargo_dupes_spark.sources.web_pages import (
-                    synthetic_web_pages_at_scale,
-                )
-
-                corpus = synthetic_web_pages_at_scale(
-                    gen, docs, num_partitions=64,
-                    min_doc_tokens=140, token_spread=120,
-                )
-            else:
-                corpus = replicated_web_pages(gen, sf_dir, mult)
-            corpus.write.mode("overwrite").parquet(input_path)
+            _scaling_corpus(gen, docs).write.mode("overwrite").parquet(
+                input_path
+            )
         finally:
             gen.stop()
 
@@ -381,11 +403,8 @@ def run_scaling(
                 cmd = [
                     sys.executable, os.path.abspath(__file__),
                     "--pipeline-once", "--cpus", str(cpus),
-                    "--mult", str(mult), "--sf-dir", sf_dir,
-                    "--input-path", input_path,
+                    "--docs", str(docs), "--input-path", input_path,
                 ]
-                if docs:
-                    cmd += ["--docs", str(docs)]
                 proc = subprocess.run(
                     cmd, capture_output=True, text=True, cwd=REPO
                 )
@@ -432,150 +451,39 @@ def run_scaling(
         "normalized_eff_unclamped": round(min(raw_eff / hw_ceiling, 1.0), 4)
         if hw_ceiling > 0
         else None,
-        # pre-launch host-weather probe + gate outcome (VERDICT r4 #6):
-        # window_ok = the probe the run LAUNCHED under; window_ok_in_run =
-        # the in-run interleaved calibration stayed clean too
         # DRAM streaming bandwidth at N and 4N procs (GB/s) + its N->4N
         # ceiling: the measured upper bound for any bandwidth-bound stage
-        # on this shared-bus host (instrument only — see calibrate_membw)
+        # on a shared-bus host (instrument only — see calibrate_membw)
         "membw_gbps": {
             str(base_cpus): membw_n,
             str(base_cpus * 4): membw_4n,
         },
         "membw_ceiling": round(membw_ceiling, 4),
+        # pre-launch host-weather probe + gate outcome (VERDICT r4 #6):
+        # window_ok = the probe the run LAUNCHED under; window_ok_in_run =
+        # the in-run interleaved calibration stayed clean too
         "probe": probe,
         "window_ok": probe["ok"],
         "window_ok_in_run": bool(hw_ceiling >= 0.85),
         "skipped_windows": skipped,
         "runs": {str(c): rs for c, rs in results.items()},
-        "sf": sf_dir if not docs else f"synthetic:{docs}",
+        "sf": f"synthetic:{docs}",
     }
 
 
-# ---------------------------------------------------------------------------
-# headline suite (driver default mode)
-# ---------------------------------------------------------------------------
-HEADLINE = (
-    "exact_dup_groups",
-    "minhash_near_pairs",
-    "simhash_hamming_pairs",
-    "near_dup_clusters",
-    "substring_containment_pairs",
-    "doc_segments",
-    "dedup_stats",
-    "quality_scores",
-    "lang_id",
-    "token_counts",
-    "topk_cosine",
-    "embedding_near_dups",
-    "events_topk",
-)
-
-
-def run_headline(sf_dir: str, cpus: int, mult: int, repeats: int = 3) -> dict:
-    """Best-of-``repeats`` per query. Identical work on this host varies
-    ±25-40% with sustained interference windows (eleven (2,8) protocol runs,
-    BASELINE.md), so a single sample made round-over-round comparison
-    noise-dominated (VERDICT r3 #2); the per-query minimum estimates the
-    achievable wall and ``samples`` carries every observation so the spread
-    is auditable."""
-    import __spark_entry__ as entry_mod
-    from cargo_dupes_spark.session import build_session
-
-    spark = build_session(
-        app_name="bench-headline", parallelism=cpus,
-        shuffle_partitions=max(cpus, 8),
-    )
-    try:
-        qs = entry_mod.queries()
-        # warm-up: JVM + Arrow path, excluded from timings
-        _noop_write(qs["normalize_docs"](spark, sf_dir))
-
-        samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
-        # round-robin over the suite (all queries once, then again): a slow
-        # host window hits ALL queries' sample k, not one query's every
-        # sample, so per-query minima stay comparable
-        for _ in range(repeats):
-            for name in HEADLINE:
-                t0 = time.monotonic()
-                _noop_write(qs[name](spark, sf_dir))
-                samples[name].append(round(time.monotonic() - t0, 3))
-        timings = {n: min(s) for n, s in samples.items()}
-
-        # the headline throughput number: full pipeline over the replicated
-        # corpus in THIS session (same JVM; scaling mode uses fresh JVMs)
-        pipes = [
-            _pipeline_in_session(spark, sf_dir, mult) for _ in range(repeats)
-        ]
-        pipe = min(pipes, key=lambda p: p["wall_s"])
-        samples["full_pipeline"] = [p["wall_s"] for p in pipes]
-        timings["full_pipeline"] = pipe["wall_s"]
-
-        total = round(sum(timings.values()), 3)
-        spread = {
-            n: round((max(s) - min(s)) / min(s), 3) if min(s) > 0 else 0.0
-            for n, s in samples.items()
-        }
-        return {
-            "metric": "dedup_suite_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "repeats": repeats,
-            "samples": samples,
-            "spread_frac": spread,
-            "sf": sf_dir,
-            "cpus": cpus,
-            "pipeline_docs": pipe["docs"],
-            "pipeline_docs_per_sec": pipe["docs_per_sec"],
-        }
-    finally:
-        spark.stop()
-
-
-def _pipeline_in_session(spark, sf_dir: str, mult: int) -> dict:
-    from cargo_dupes_spark.config import PipelineConfig
-    from cargo_dupes_spark.plans.pipeline import Pipeline
-
-    warehouse = tempfile.mkdtemp(prefix="bench_wh_inline_")
-    try:
-        cfg = PipelineConfig(
-            warehouse=warehouse,
-            checkpoint_dir=os.path.join(warehouse, "ckpt"),
-        )
-        web_pages = replicated_web_pages(spark, sf_dir, mult)
-        n_docs = web_pages.count()
-        t0 = time.monotonic()
-        outputs = Pipeline(spark, cfg, detectors=("minhash",)).run(web_pages)
-        outputs["memberships"].count()
-        outputs["stats"].collect()
-        wall = time.monotonic() - t0
-        return {
-            "docs": n_docs,
-            "wall_s": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 1),
-        }
-    finally:
-        shutil.rmtree(warehouse, ignore_errors=True)
-
-
 def main() -> int:
-    p = argparse.ArgumentParser()
-    p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
-    p.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
-    p.add_argument("--mult", type=int, default=DEFAULT_MULT)
+    p = argparse.ArgumentParser(
+        description="N-vs-4N strong-scaling protocol (run from the repo root)"
+    )
+    p.add_argument("--cpus", type=int, default=os.cpu_count())
     p.add_argument("--pipeline-once", action="store_true")
     p.add_argument("--scaling", action="store_true")
     p.add_argument("--scaling-base-cpus", type=int, default=8)
     p.add_argument("--repeats", type=int, default=2)
     p.add_argument(
-        "--bench-repeats", type=int, default=3,
-        help="samples per headline query (best-of-N reported)",
-    )
-    p.add_argument(
-        "--docs", type=int, default=None,
-        help="use the deterministic synthetic corpus at this many base docs "
-             "(linear dup structure) instead of replicating the sf dir",
+        "--docs", type=int, default=300_000,
+        help="base docs of the deterministic synthetic corpus (plus 10%% "
+             "exact and ~14%% near copies)",
     )
     p.add_argument(
         "--input-path", default=None,
@@ -596,13 +504,13 @@ def main() -> int:
     p.add_argument(
         "--probe-min-rate", type=float, default=0.55,
         help="probe gate: minimum absolute per-cpu task rate to launch "
-             "(healthy windows on this host read >= ~0.6)",
+             "(healthy windows read >= ~0.6)",
     )
     p.add_argument(
         "--probe-min-membw", type=float, default=0.0,
         help="probe gate: also require the DRAM-streaming N->4N ceiling "
              ">= this (0 = don't gate on the bus; launch-adjacent samples "
-             "on this host range 0.55-0.88)",
+             "on a shared-bus host ranged 0.55-0.88)",
     )
     p.add_argument(
         "--membw", action="store_true",
@@ -621,17 +529,12 @@ def main() -> int:
             "unit": "fraction",
             "membw_gbps": {str(n): bw_n, str(n * 4): bw_4n},
         }
-        print(json.dumps(out))
-        return 0
-
-    if args.pipeline_once:
-        out = run_pipeline_once(
-            args.sf_dir, args.cpus, args.mult, args.docs, args.input_path
-        )
+    elif args.pipeline_once:
+        out = run_pipeline_once(args.cpus, args.docs, args.input_path)
     elif args.scaling:
         out = run_scaling(
-            args.sf_dir, args.scaling_base_cpus, args.mult, args.docs,
-            args.repeats, probe_gate=args.probe_gate,
+            args.scaling_base_cpus, args.docs, args.repeats,
+            probe_gate=args.probe_gate,
             probe_max_waits=args.probe_max_waits,
             probe_wait_s=args.probe_wait_s,
             probe_min_ceiling=args.probe_min_ceiling,
@@ -639,7 +542,7 @@ def main() -> int:
             probe_min_membw=args.probe_min_membw,
         )
     else:
-        out = run_headline(args.sf_dir, args.cpus, args.mult, args.bench_repeats)
+        p.error("choose one of --scaling, --pipeline-once or --membw")
     print(json.dumps(out))
     return 0
 

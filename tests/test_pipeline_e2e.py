@@ -167,11 +167,43 @@ def test_lineage_and_metrics_written(spark, pipeline_run):
     )
     assert summary[0]["n_out"] == parts_total == df.count()
     assert summary[0]["n_failed"] == 0  # clean corpus
-    # n_in chains the previous stage's committed count
-    exact_summary = lineage.filter(
-        (F.col("stage") == "exact_memberships") & (F.col("partition_id") == -1)
-    ).collect()[0]
-    assert exact_summary["n_in"] == summary[0]["n_out"]
+
+
+# lineage contract: each stage's n_in is this upstream stage's n_out
+_LINEAGE_UPSTREAM = {
+    "exact_memberships": "fingerprints",
+    "representatives": "fingerprints",
+    "signatures": "representatives",
+    "candidate_pairs": "signatures",
+    "verified_edges": "candidate_pairs",
+    "clusters": "verified_edges",
+    "memberships": "verified_edges",
+    "stats": "memberships",
+}
+
+
+@pytest.mark.parametrize("regime", ["threaded", "serial"])
+def test_lineage_n_in_is_upstream_n_out(spark, tmp_path, monkeypatch, regime):
+    """n_in does not depend on the CC regime: a small edge set commits
+    clusters on a driver thread beside memberships, a large one (forced
+    here by a negative threshold) commits the two serially."""
+    from cargo_dupes_spark.plans import pipeline as pipeline_mod
+
+    if regime == "serial":
+        monkeypatch.setattr(pipeline_mod, "DRIVER_CC_THRESHOLD", -1)
+    cfg = PipelineConfig(warehouse=str(tmp_path / "wh_lineage"))
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    Pipeline(spark, cfg, detectors=("minhash", "substring")).run(df)
+    summary = {
+        r["stage"]: r
+        for r in spark.read.parquet(f"{cfg.warehouse}/lineage")
+        .filter(F.col("partition_id") == -1)
+        .collect()
+    }
+    assert set(summary) == {"fingerprints", *_LINEAGE_UPSTREAM}
+    assert summary["fingerprints"]["n_in"] is None
+    for stage, upstream in _LINEAGE_UPSTREAM.items():
+        assert summary[stage]["n_in"] == summary[upstream]["n_out"], stage
 
 
 def test_corrupt_html_counted_in_lineage(spark, tmp_path):
