@@ -97,8 +97,13 @@ class PipelineConfig:
     def config_hash(self) -> str:
         """Deterministic hash of all knobs — recorded with every metrics row
         so a resume only skips stages produced under the identical config
-        (reference analog: a changed dupes.toml invalidates prior results)."""
-        payload = json.dumps(dataclasses.asdict(self), sort_keys=True, default=str)
+        (reference analog: a changed dupes.toml invalidates prior results).
+        The IO paths are left out: they say where outputs live, not what
+        they hold, so a moved warehouse still resumes."""
+        knobs = dataclasses.asdict(self)
+        for io_path in ("warehouse", "checkpoint_dir"):
+            del knobs[io_path]
+        payload = json.dumps(knobs, sort_keys=True, default=str)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
     def validate(self) -> "PipelineConfig":

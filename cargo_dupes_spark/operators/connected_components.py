@@ -7,12 +7,13 @@ BASELINE.json north_rule) is the alternating large-star/small-star
 algorithm of Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SOCC'14): each round is two groupBy-min + join passes over the edge list,
 converging in O(log n) rounds to star graphs whose centers are the
-component minima. Execution is HYBRID: edge sets at or below
-DRIVER_CC_THRESHOLD solve with a driver-side union-find (identical labels,
-one collect instead of log n shuffle rounds — per-round job latency is
-pure fixed cost on small inputs); larger sets run the distributed loop.
-Both paths are pinned against each other and a union-find oracle in
-tests/test_cc.py.
+component minima. Execution picks its regime with one bounded collect:
+at most DRIVER_CC_THRESHOLD + 1 id edges reach the driver, and when they
+all fit, a vectorized driver-side union-find labels the nodes (identical
+labels, one collect instead of log n shuffle rounds — per-round job latency
+is pure fixed cost on small inputs). Larger sets run the distributed loop.
+This module is the only place that decides; both paths are pinned against
+each other and a union-find oracle in tests/test_cc.py.
 
 Node ids default to xxhash64(url) (8-byte shuffle keys instead of url
 strings; collision bound ~n²/2^65 — negligible below ~10^9 docs). For
@@ -101,7 +102,7 @@ def _numpy_components(a: "np.ndarray", b: "np.ndarray"):
     reference's union-find (grouper.rs:277-290), which tests/test_cc.py
     (``_uf``) pins this path against.
 
-    Replaces the per-edge Python union-find on the hybrid driver path
+    Replaces the per-edge Python union-find of the driver regime
     (ADVICE r3: 1M collected Rows + a dict of Python ints is hundreds of MB
     of objects; two int64 numpy columns via Arrow are ~16 MB flat, and the
     propagation loop is O((E+V) log V) numpy ops with no object churn).
@@ -131,44 +132,28 @@ DRIVER_CC_THRESHOLD = 1_000_000
 CC_MAX_ITERATIONS = 50  # large/small-star rounds before non-convergence raises
 
 
-def connected_components_ids(
-    edges: DataFrame,
-    driver_threshold: int = DRIVER_CC_THRESHOLD,
-) -> DataFrame:
+def connected_components_ids(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the minimum
     node id in the node's component. Id type is whatever the caller keyed
     with (BIGINT default, 32-char hex string at id_bits=128) — every
     operator below is type-agnostic.
 
-    HYBRID execution: the distinct canonical edge count comes free with the
-    first convergence fingerprint; at or below ``driver_threshold`` edges
-    (~16 MB at 1M BIGINT pairs) the component labels are computed with a
-    driver-side union-find — identical output, ONE collect instead of
-    O(log n) rounds of shuffle jobs whose fixed per-job latency dominates
-    small inputs (a measured strong-scaling limiter). Above the threshold
-    the distributed large-star/small-star loop runs unchanged; the collect
-    is bounded by the threshold, never by data size.
+    The regime is read from ``DRIVER_CC_THRESHOLD`` at call time. One
+    bounded Arrow collect takes at most threshold + 1 (src, dst) rows —
+    two primitive columns, ~16 MB at the 1M default, never a list of Row
+    objects (ADVICE r3). If they all fit, ``_numpy_components`` labels the
+    nodes on the driver. Otherwise the collected rows are thrown away and
+    the distributed large-star/small-star loop runs over the
+    localCheckpointed edges; the collect is bounded by the threshold, never
+    by data size.
     """
-    # ONE Spark job per round: the convergence-fingerprint aggregate is the
-    # action that materializes the LAZY localCheckpoint (eager checkpointing
-    # plus a separate fingerprint job doubled the fixed per-round driver
-    # cost, a measured strong-scaling limiter on short rounds)
     cur = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    cur = cur.localCheckpoint(eager=False)
-    prev_fp = _edge_fingerprint(cur)
-    if prev_fp[0] <= driver_threshold:
-        # Arrow collect (toPandas): two primitive columns, ~16 MB at the 1M
-        # threshold — never a list of Row objects (ADVICE r3)
-        canon = (
-            cur.select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .distinct()
-            .toPandas()
-        )
+    pdf = cur.limit(DRIVER_CC_THRESHOLD + 1).toPandas()
+    if len(pdf) <= DRIVER_CC_THRESHOLD:
+        import pandas as pd
+
         nodes, comps = _numpy_components(
-            canon["a"].to_numpy(), canon["b"].to_numpy()
+            pdf["src"].to_numpy(), pdf["dst"].to_numpy()
         )
         id_type = edges.schema["src"].dataType
         schema = T.StructType(
@@ -177,8 +162,6 @@ def connected_components_ids(
                 T.StructField("component", id_type, False),
             ]
         )
-        import pandas as pd
-
         # Arrow-path createDataFrame (pandas in, not a row list): a local
         # row list becomes a pickled-Python RDD that EVERY consuming job
         # re-deserializes through Python workers (measured ~20 CPU-s per
@@ -186,6 +169,12 @@ def connected_components_ids(
         return edges.sparkSession.createDataFrame(
             pd.DataFrame({"node": nodes, "component": comps}), schema
         )
+    # ONE Spark job per round: the convergence-fingerprint aggregate is the
+    # action that materializes the LAZY localCheckpoint (eager checkpointing
+    # plus a separate fingerprint job doubled the fixed per-round driver
+    # cost, a measured strong-scaling limiter on short rounds)
+    cur = cur.localCheckpoint(eager=False)
+    prev_fp = _edge_fingerprint(cur)
     for _ in range(CC_MAX_ITERATIONS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         fp = _edge_fingerprint(cur)

@@ -21,7 +21,7 @@ from ..config import PipelineConfig
 from ..functions.normalize import normalize_text_col, n_tokens_col
 from ..operators.connected_components import connected_components
 from ..operators.lsh import chunk_keys_col, pairs_from_buckets, signatures
-from ..operators.verify import verify_pairs
+from ..operators.verify import reassemble_pairs, verify_pairs
 
 CFG = PipelineConfig()  # shared shingle/signature config for the oracle
 
@@ -215,39 +215,7 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
     sigs, pairs = _near_candidates(spark, sf_dir)
-    if id_bits == 64:
-        # The slice is bounded by construction (NEAR_SLICE docs), far under
-        # DRIVER_CC_THRESHOLD — connected_components would take its numpy
-        # driver path anyway, but wrapped in hash-id derivation, center-url
-        # recovery joins and a min-doc_id relabel groupBy (~10 extra AQE
-        # jobs of pure fixed latency at this size). Run the SAME numpy
-        # kernel directly on the numeric doc ids: labels are component
-        # minima, which IS cluster_min — identical output, one Arrow
-        # collect. The 128-bit variant below keeps the full operator path
-        # (its purpose is pinning string-id CC end-to-end), and tests pin
-        # this shortcut against it.
-        from .connected_components import DRIVER_CC_THRESHOLD, _numpy_components
-
-        edges = verify_pairs(pairs, sigs, CFG)
-        # bound the collect BEFORE it happens: at most threshold+1 rows
-        # reach the driver, and one more than the threshold means oversized
-        pdf = edges.select(
-            F.col("url_a").cast("long").alias("a"),
-            F.col("url_b").cast("long").alias("b"),
-        ).limit(DRIVER_CC_THRESHOLD + 1).toPandas()
-        if len(pdf) <= DRIVER_CC_THRESHOLD:
-            import pandas as pd
-
-            nodes, comps = _numpy_components(
-                pdf["a"].to_numpy(), pdf["b"].to_numpy()
-            )
-            out = pd.DataFrame({"doc_id": nodes, "cluster_min": comps})
-            return spark.createDataFrame(
-                out.sort_values("doc_id"),  # Arrow path, JVM-side convert
-                "doc_id long, cluster_min long",
-            ).coalesce(1)
-        # fall through to the full operator on oversized edge sets
-    # CC reads the edge set repeatedly (node extraction + round 0) — pin it
+    # CC reads the edge set twice (node extraction + the id edges) — pin it
     edges = verify_pairs(pairs, sigs, CFG).localCheckpoint(eager=False)
     clusters = connected_components(edges, id_bits=id_bits).select(
         F.col("url").cast("long").alias("doc_id"), "cluster_id"
@@ -276,12 +244,11 @@ def near_dup_clusters_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     they shuffle 8-byte url-hash surrogates and neutralize collisions at the
     url join-back, operators/lsh.py) feeding connected_components at
     id_bits=128: node ids become the 32-char hex double-xxhash64
-    (functions/fingerprint.py), every min/groupBy/join and BOTH CC execution
-    paths (numpy driver union-find / large-small-star) running on string
-    ids. The cluster relabeling by min doc_id makes the output identical to
-    near_dup_clusters, so the SAME recursive-CTE oracle checks it — a green
-    row proves the 128-bit id path end-to-end, not just the exact tier
-    (exact_dup_groups_wide)."""
+    (functions/fingerprint.py), and every min/groupBy/join of either CC
+    regime runs on string ids. The cluster relabeling by min doc_id makes
+    the output identical to near_dup_clusters, so the SAME recursive-CTE
+    oracle checks it — a green row proves the 128-bit id path end-to-end,
+    not just the exact tier (exact_dup_groups_wide)."""
     return _near_clusters(spark, sf_dir, id_bits=128)
 
 
@@ -322,14 +289,12 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simhash",
         collect_flagged=False,
     )
-    a = sigs.select(F.col("url").alias("url_a"), F.col("simhash").alias("sh_a"))
-    b = sigs.select(F.col("url").alias("url_b"), F.col("simhash").alias("sh_b"))
-    joined = pairs.join(a, "url_a").join(b, "url_b")
+    joined = reassemble_pairs(pairs, sigs, "url", ["simhash"])
     return (
         joined.select(
             F.least(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_a"),
             F.greatest(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_b"),
-            hamming_col("sh_a", "sh_b").cast("long").alias("hamming"),
+            hamming_col("simhash_a", "simhash_b").cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= CFG.hamming_threshold)
         .transform(lambda d: single_sorted(d, "id_a", "id_b"))

@@ -28,43 +28,47 @@ def cluster_memberships(
     fingerprints: DataFrame,
     tier: str,
 ) -> DataFrame:
-    """clusters(url, cluster_id) + verified edges -> memberships rows.
+    """clusters(url, cluster_id) + verified edges -> memberships rows, in
+    one pass keyed by cluster.
 
     group_fp is the order-independent composite of member doc fingerprints;
     group similarity is the min verified edge similarity inside the cluster
     (the reference's conservative min-pairwise, J7 — our version takes min
     over the verified edge set rather than all pairs, which is the same
     value whenever the clustering is induced by those edges' endpoints).
+    Each member row gets its fingerprint, n_tokens and the min similarity of
+    the edges it starts from; ONE groupBy on cluster_id then computes the
+    composite and the min once per cluster and carries the members through
+    as (url, n_tokens) structs that explode back to one row each — no join
+    back. (A cluster window would evaluate the sort-join-hash once per
+    member row: O(n² log n) for an n-member cluster.) n_tokens is
+    denormalized onto the row (8 B/row) so the stats/report aggregates over
+    memberships run without a corpus-sized join back to fingerprints.
     """
     # fingerprint width is self-describing: a 128-bit fp column is a 32-char
     # hex STRING (functions/fingerprint.py), so the composite follows suit
     bits = 128 if dict(fingerprints.dtypes).get("fingerprint") == "string" else 64
-    member_fps = clusters.join(fingerprints.select("url", "fingerprint"), "url")
-    group_fp = member_fps.groupBy("cluster_id").agg(
-        composite_fingerprint_col("fingerprint", bits=bits).alias("group_fp")
-    )
-    edge_min = (
-        edges.join(
-            clusters.select(F.col("url").alias("url_a"), "cluster_id"), "url_a"
-        )
-        .groupBy("cluster_id")
-        .agg(F.min("similarity").alias("similarity"))
+    edge_min = edges.groupBy(F.col("url_a").alias("url")).agg(
+        F.min("similarity").alias("edge_min")
     )
     return (
-        clusters.join(group_fp, "cluster_id")
-        .join(edge_min, "cluster_id", "left")
-        # n_tokens denormalized onto the membership row (8 B/row): the
-        # stats/report aggregates over memberships then run WITHOUT a
-        # corpus-sized join back to fingerprints — this relocates the one
-        # url join stats used to pay (same join count in the pipeline,
-        # strictly fewer in every downstream consumer)
-        .join(fingerprints.select("url", "n_tokens"), "url", "left")
+        clusters.join(
+            fingerprints.select("url", "fingerprint", "n_tokens"), "url", "left"
+        )
+        .join(edge_min, "url", "left")
+        .groupBy("cluster_id")
+        .agg(
+            composite_fingerprint_col("fingerprint", bits=bits).alias("group_fp"),
+            F.min("edge_min").alias("similarity"),
+            F.collect_list(F.struct("url", "n_tokens")).alias("members"),
+        )
+        .select("group_fp", "similarity", F.explode("members").alias("m"))
         .select(
-            "url",
+            "m.url",
             "group_fp",
             F.lit(tier).alias("tier"),
             "similarity",
-            "n_tokens",
+            "m.n_tokens",
         )
     )
 

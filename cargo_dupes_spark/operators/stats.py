@@ -86,15 +86,13 @@ def compute_stats(fingerprints: DataFrame, memberships: DataFrame) -> DataFrame:
 # fixed-latency-regime variant (VERDICT r4 #2a): the crossJoin plan above is
 # one serial multi-stage Spark job whose 3-5 s wall is the SAME at 2 and 32
 # cores (BASELINE.md cap #1). The split below computes the identical row
-# from (a) one corpus-totals aggregate the pipeline overlaps with the
-# clusters/memberships commits, and (b) ONE groupBy-tier pass over
-# memberships, assembled driver-side. (An Observation on the memberships
-# write cannot replace (b): observe() forbids distinct aggregates, and
-# {tier}_groups is a countDistinct.)
+# from (a) one corpus-totals aggregate over fingerprints, and (b) ONE
+# groupBy-tier pass over memberships, assembled driver-side. (An
+# Observation on the memberships write cannot replace (b): observe()
+# forbids distinct aggregates, and {tier}_groups is a countDistinct.)
 # ---------------------------------------------------------------------------
 def stats_totals(fingerprints: DataFrame) -> DataFrame:
-    """Corpus totals half of the stats row — depends ONLY on fingerprints,
-    so the caller can run it concurrently with anything downstream."""
+    """Corpus totals half of the stats row — depends ONLY on fingerprints."""
     return fingerprints.agg(
         F.count(F.lit(1)).cast("long").alias("total_docs"),
         F.coalesce(F.sum("n_tokens"), F.lit(0))

@@ -31,7 +31,6 @@ from ..operators.exact import (
 )
 from ..operators.groups import cluster_memberships, filter_ignored
 from ..operators import lsh
-from ..operators.connected_components import DRIVER_CC_THRESHOLD
 from ..operators.stats import assemble_stats_row, stats_totals, tier_aggregates
 from ..operators.substring import substring_candidates, verify_substring_pairs
 from ..operators.verify import verify_pairs
@@ -42,8 +41,8 @@ from ..sources.ignore import load_ignore
 ALL_DETECTORS = ("minhash", "simhash", "substring")
 
 # lineage n_in: the stage whose committed n_out feeds each stage. Fixed, so
-# n_in does not depend on which CC regime or thread committed a stage; an
-# upstream skipped on resume (or absent, for fingerprints) records NULL.
+# n_in does not depend on the CC regime or on commit order; an upstream
+# skipped on resume (or absent, for fingerprints) records NULL.
 UPSTREAM = {
     "exact_memberships": "fingerprints",
     "representatives": "fingerprints",
@@ -310,84 +309,37 @@ class Pipeline:
                 out = out.unionByName(p)
             return out
 
-        # ------------------------------------------------------------------
-        # trailing stages (clusters -> memberships -> stats) are the
-        # FIXED-LATENCY regime: each processes a few MB yet costs a serial
-        # Spark job at ANY core count (BASELINE.md cap #1, VERDICT r4 #2a).
-        # Three structural cuts:
-        #   * the stats corpus-totals aggregate depends only on fingerprints
-        #     — it runs on a driver thread UNDER the clusters/memberships
-        #     commits instead of serially after them;
-        #   * in the small-edge regime (edge count <= the CC driver
-        #     threshold, where connected_components returned a driver-backed
-        #     frame and re-deriving cluster labels is two tiny joins) the
-        #     clusters COMMIT runs on a thread while memberships consumes
-        #     the in-memory frame — one full stage of commit latency off the
-        #     critical path. Large edge sets keep the committed-read chain
-        #     (re-executing a corpus-sized cluster join to dodge a parquet
-        #     scan would be a bad trade at 100 TB);
-        #   * stats itself becomes ONE groupBy-tier pass + a driver-side
-        #     assembly (operators/stats.py) instead of the 4-branch
-        #     crossJoin job. Identical row, pinned by test.
-        # Resume contract unchanged: every stage still commits its table;
-        # a crash between the concurrent commits resumes whichever is
-        # missing (same config + inputs -> same output).
-        # ------------------------------------------------------------------
-        from concurrent.futures import ThreadPoolExecutor
+        clusters = self._stage("clusters", build_clusters)
 
-        edges_rows = self.stage_rows.get("verified_edges")
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            totals_fut = ex.submit(
-                lambda: stats_totals(fingerprints).collect()[0]
-            )
-
-            clusters_fut = None
-            if self.resume and self.catalog.is_complete("clusters"):
-                clusters = self._stage("clusters", build_clusters)  # skip
-                mem_clusters = clusters
-            elif edges_rows is not None and edges_rows <= DRIVER_CC_THRESHOLD:
-                # eager CC work happens here; localCheckpoint pins the frame
-                # so its 3+ consumers (clusters commit, per-tier membership
-                # joins) don't re-run the label joins per job
-                mem_clusters = build_clusters().localCheckpoint(eager=False)
-                clusters_fut = ex.submit(
-                    self._stage, "clusters", lambda: mem_clusters
+        def build_memberships() -> DataFrame:
+            parts = [exact]
+            for tier in active_tiers:
+                tier_clusters = clusters.filter(F.col("tier") == tier).select(
+                    "url", "cluster_id"
                 )
-            else:
-                clusters = self._stage("clusters", build_clusters)
-                mem_clusters = clusters
-
-            def build_memberships() -> DataFrame:
-                parts = [exact]
-                for tier in active_tiers:
-                    tier_clusters = mem_clusters.filter(
-                        F.col("tier") == tier
-                    ).select("url", "cluster_id")
-                    tier_edges = edges.filter(F.col("tier") == tier)
-                    parts.append(
-                        cluster_memberships(
-                            tier_clusters, tier_edges, fingerprints, tier
-                        )
+                tier_edges = edges.filter(F.col("tier") == tier)
+                parts.append(
+                    cluster_memberships(
+                        tier_clusters, tier_edges, fingerprints, tier
                     )
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                return filter_ignored(
-                    out, load_ignore(self.catalog, bits=cfg.fingerprint_bits)
                 )
-
-            memberships = self._stage("memberships", build_memberships)
-            if clusters_fut is not None:
-                clusters = clusters_fut.result()
-
-            stats = self._stage(
-                "stats",
-                lambda: assemble_stats_row(
-                    self.spark,
-                    totals_fut.result(),
-                    tier_aggregates(fingerprints, memberships).collect(),
-                ),
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+            return filter_ignored(
+                out, load_ignore(self.catalog, bits=cfg.fingerprint_bits)
             )
+
+        memberships = self._stage("memberships", build_memberships)
+
+        stats = self._stage(
+            "stats",
+            lambda: assemble_stats_row(
+                self.spark,
+                stats_totals(fingerprints).collect()[0],
+                tier_aggregates(fingerprints, memberships).collect(),
+            ),
+        )
 
         return {
             "fingerprints": fingerprints,

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from cargo_dupes_spark.operators import connected_components as cc
 from cargo_dupes_spark.operators.connected_components import (
     connected_components,
     connected_components_ids,
@@ -44,9 +45,10 @@ def _uf(edges, nodes):
         ("self_loops", [(1, 1), (1, 2), (3, 3)]),
     ],
 )
-def test_against_union_find(spark, name, edges, driver_threshold):
+def test_against_union_find(spark, monkeypatch, name, edges, driver_threshold):
     """threshold=0 forces the distributed large/small-star loop;
     threshold=1M takes the driver union-find — identical labels required."""
+    monkeypatch.setattr(cc, "DRIVER_CC_THRESHOLD", driver_threshold)
     edges_ne = [(a, b) for a, b in edges if a != b]
     nodes = sorted({x for e in edges_ne for x in e})
     if not nodes:
@@ -55,14 +57,12 @@ def test_against_union_find(spark, name, edges, driver_threshold):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r.node: r.component
-        for r in connected_components_ids(
-            df, driver_threshold=driver_threshold
-        ).collect()
+        for r in connected_components_ids(df).collect()
     }
     assert got == expected
 
 
-def test_random_graphs(spark):
+def test_random_graphs(spark, monkeypatch):
     rng = random.Random(7)
     for _ in range(2):
         n = 300
@@ -72,11 +72,10 @@ def test_random_graphs(spark):
         expected = _uf(edges, nodes)
         df = spark.createDataFrame(edges, "src long, dst long")
         for thr in (0, 1_000_000):  # both execution paths, same labels
+            monkeypatch.setattr(cc, "DRIVER_CC_THRESHOLD", thr)
             got = {
                 r.node: r.component
-                for r in connected_components_ids(
-                    df, driver_threshold=thr
-                ).collect()
+                for r in connected_components_ids(df).collect()
             }
             assert got == expected
 

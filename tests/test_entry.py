@@ -83,8 +83,8 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_near_clusters_bounds_collect_before_guard(spark, monkeypatch):
-    """The numpy shortcut in _near_clusters collects at most threshold+1
-    edges: an oversized edge set falls through to the full operator path
+    """The regime collect in connected_components_ids takes at most
+    threshold+1 edges: an oversized edge set goes to the distributed loop
     without a full driver collect, and the output stays the same."""
     import sys
 
@@ -100,7 +100,7 @@ def test_near_clusters_bounds_collect_before_guard(spark, monkeypatch):
 
     def recording_to_pandas(self):
         pdf = to_pandas(self)
-        if sys._getframe(1).f_code.co_name == "_near_clusters":
+        if sys._getframe(1).f_code.co_name == "connected_components_ids":
             collected.append(len(pdf))
         return pdf
 

@@ -148,6 +148,26 @@ def test_resume_skips_and_matches(spark, tmp_path):
     assert out2["memberships"].count() == n1
 
 
+def test_resume_from_moved_warehouse(spark, tmp_path):
+    """The config hash leaves out IO paths: a committed warehouse copied to
+    a new path resumes there with every stage skipped."""
+    import shutil
+
+    old = tmp_path / "wh_old"
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    Pipeline(spark, PipelineConfig(warehouse=str(old)), detectors=("minhash",)).run(df)
+    new = tmp_path / "wh_new"
+    shutil.copytree(old, new)
+    p = Pipeline(
+        spark,
+        PipelineConfig(warehouse=str(new)),
+        detectors=("minhash",),
+        resume=True,
+    )
+    p.run(df)
+    assert p.stage_log and all(s.startswith("skip:") for s in p.stage_log)
+
+
 def test_lineage_and_metrics_written(spark, pipeline_run):
     cfg, df, corpus, out = pipeline_run
 
@@ -182,28 +202,49 @@ _LINEAGE_UPSTREAM = {
 }
 
 
-@pytest.mark.parametrize("regime", ["threaded", "serial"])
-def test_lineage_n_in_is_upstream_n_out(spark, tmp_path, monkeypatch, regime):
-    """n_in does not depend on the CC regime: a small edge set commits
-    clusters on a driver thread beside memberships, a large one (forced
-    here by a negative threshold) commits the two serially."""
-    from cargo_dupes_spark.plans import pipeline as pipeline_mod
+@pytest.fixture(scope="module")
+def regime_runs(spark, tmp_path_factory):
+    """One small pipeline run per CC regime: the driver union-find at the
+    default threshold, and the distributed large/small-star loop forced by
+    a zero threshold. Each regime maps to (lineage summary by stage, sorted
+    rows of the clusters, memberships and stats tables)."""
+    from cargo_dupes_spark.operators import connected_components as cc
 
-    if regime == "serial":
-        monkeypatch.setattr(pipeline_mod, "DRIVER_CC_THRESHOLD", -1)
-    cfg = PipelineConfig(warehouse=str(tmp_path / "wh_lineage"))
     df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
-    Pipeline(spark, cfg, detectors=("minhash", "substring")).run(df)
-    summary = {
-        r["stage"]: r
-        for r in spark.read.parquet(f"{cfg.warehouse}/lineage")
-        .filter(F.col("partition_id") == -1)
-        .collect()
-    }
+    runs = {}
+    for regime, threshold in (
+        ("driver", cc.DRIVER_CC_THRESHOLD),
+        ("distributed", 0),
+    ):
+        wh = tmp_path_factory.mktemp(f"wh_lineage_{regime}")
+        cfg = PipelineConfig(warehouse=str(wh))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "DRIVER_CC_THRESHOLD", threshold)
+            out = Pipeline(spark, cfg, detectors=("minhash", "substring")).run(df)
+        rows = {
+            name: sorted(tuple(r) for r in out[name].collect())
+            for name in ("clusters", "memberships", "stats")
+        }
+        summary = {
+            r["stage"]: r
+            for r in spark.read.parquet(f"{cfg.warehouse}/lineage")
+            .filter(F.col("partition_id") == -1)
+            .collect()
+        }
+        runs[regime] = (summary, rows)
+    return runs
+
+
+@pytest.mark.parametrize("regime", ["driver", "distributed"])
+def test_lineage_n_in_is_upstream_n_out(regime_runs, regime):
+    """n_in does not depend on the CC regime, and neither do the clusters,
+    memberships and stats rows."""
+    summary, rows = regime_runs[regime]
     assert set(summary) == {"fingerprints", *_LINEAGE_UPSTREAM}
     assert summary["fingerprints"]["n_in"] is None
     for stage, upstream in _LINEAGE_UPSTREAM.items():
         assert summary[stage]["n_in"] == summary[upstream]["n_out"], stage
+    assert rows == regime_runs["driver"][1]
 
 
 def test_corrupt_html_counted_in_lineage(spark, tmp_path):

@@ -17,7 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cargo_dupes_spark.operators.exact import apply_gates, prepare_columns
-from cargo_dupes_spark.operators.groups import filter_ignored
+from cargo_dupes_spark.functions.fingerprint import composite_fingerprint_col
+from cargo_dupes_spark.operators.groups import cluster_memberships, filter_ignored
 from cargo_dupes_spark.operators.lsh import pairs_from_buckets
 from cargo_dupes_spark.operators.verify import verify_pairs
 
@@ -85,6 +86,48 @@ def test_ignore_anti_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert out.count() < 1000
+
+
+def test_memberships_one_pass_per_cluster(spark):
+    """cluster_memberships computes each cluster's composite and min
+    similarity once: two joins onto the member rows (fingerprints, per-url
+    min edge similarity), one groupBy on cluster_id, no join back and no
+    window (a window evaluates the composite once per member row, O(n²) for
+    an n-member cluster)."""
+    clusters = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")],
+        "url string, cluster_id string",
+    )
+    fps = spark.createDataFrame(
+        [(u, i, 10 * i) for i, u in enumerate("abcxy", 1)],
+        "url string, fingerprint bigint, n_tokens bigint",
+    )
+    edges = spark.createDataFrame(
+        [("a", "b", 0.9), ("b", "c", 0.8), ("x", "y", 0.95)],
+        "url_a string, url_b string, similarity double",
+    )
+    out = cluster_memberships(clusters, edges, fps, "near")
+    plan = _plan(out)
+    assert "Window" not in plan, plan
+    joins = re.findall(
+        r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)\b", plan
+    )
+    assert len(joins) == 2, plan
+    want_fp = {
+        r.cluster_id: r.c
+        for r in clusters.join(fps, "url")
+        .groupBy("cluster_id")
+        .agg(composite_fingerprint_col("fingerprint").alias("c"))
+        .collect()
+    }
+    got = {r.url: tuple(r)[1:] for r in out.collect()}
+    assert got == {
+        "a": (want_fp["a"], "near", 0.8, 10),
+        "b": (want_fp["a"], "near", 0.8, 20),
+        "c": (want_fp["a"], "near", 0.8, 30),
+        "x": (want_fp["x"], "near", 0.95, 40),
+        "y": (want_fp["x"], "near", 0.95, 50),
+    }
 
 
 def test_candidate_verify_plan_has_no_cartesian(spark, tmp_cfg):

@@ -151,8 +151,9 @@ def test_pipeline_fan_out_is_conditional(spark):
 
 
 def test_near_clusters_shortcut_matches_full_operator(spark):
-    # near_dup_clusters (numpy driver shortcut) must label identically to
-    # near_dup_clusters_wide (full connected_components operator path)
+    # 64-vs-128-bit regression: near_dup_clusters (BIGINT node ids) must
+    # label identically to near_dup_clusters_wide (32-char hex node ids);
+    # both run the same connected_components operator
     got = dedup.near_dup_clusters(spark, "/root/testdata/sf0.01").collect()
     want = dedup.near_dup_clusters_wide(spark, "/root/testdata/sf0.01").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
