@@ -445,10 +445,8 @@ def _q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_embeddings(spark, sf).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    dim = _embedding_dim_at(sf, emb)
     out = ivf_topk(
-        emb, k=5, dim=dim, n_centroids=1, nprobe=1,
-        max_bucket_size=10_000_000,
+        emb, k=5, n_centroids=1, nprobe=1, max_bucket_size=10_000_000
     )
     return out.select(
         "query_id",
@@ -478,10 +476,8 @@ def _q_ann_ivf_planted_recall(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     both = emb.unionByName(copies)
-    dim = _embedding_dim_at(sf, emb)
     out = ivf_topk(
-        both, k=3, dim=dim, n_centroids=16, nprobe=2,
-        max_bucket_size=1_000_000,
+        both, k=3, n_centroids=16, nprobe=2, max_bucket_size=1_000_000
     )
     return (
         out.filter(

@@ -21,7 +21,11 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import PipelineConfig, load_config
-from .operators.groups import assemble_groups, filter_ignored
+from .operators.groups import (
+    assemble_groups,
+    filter_ignored,
+    stale_ignore_entries,
+)
 from .plans.check import EXIT_ERROR, run_check
 from .plans.pipeline import ALL_DETECTORS, Pipeline
 from .plans.report import json_report, text_report
@@ -182,10 +186,14 @@ def main(argv: list[str] | None = None) -> int:
         out = pipe.run(web_pages)
 
         if cmd == "cleanup":
-            stale = remove_stale(catalog, out["memberships"])
-            rows = stale.collect()
-            if args.dry_run:
+            if args.dry_run:  # list only (ignore.rs:105-137)
+                rows = stale_ignore_entries(
+                    load_ignore(catalog, bits=cfg.fingerprint_bits),
+                    out["memberships"],
+                ).collect()
                 print(f"{len(rows)} stale entries (dry run, not removed)")
+            else:
+                rows = remove_stale(catalog, out["memberships"]).collect()
             for r in rows:
                 print(f"stale: {_fp_hex(r.fingerprint)}")
             return 0
@@ -205,7 +213,7 @@ def main(argv: list[str] | None = None) -> int:
 
         groups = filter_ignored(
             assemble_groups(out["memberships"], out["fingerprints"]),
-            load_ignore(catalog),
+            load_ignore(catalog, bits=cfg.fingerprint_bits),
         )
         if cmd == "stats":
             out["stats"].show(truncate=False)

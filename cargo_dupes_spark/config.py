@@ -160,6 +160,3 @@ def load_config(
         if key in values and isinstance(values[key], list):
             values[key] = tuple(values[key])
     return PipelineConfig(**values).validate()
-
-
-DEFAULT_CONFIG = PipelineConfig()

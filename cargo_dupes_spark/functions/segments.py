@@ -3,9 +3,9 @@
 The reference segments code into statement/block sub-units with line ranges
 (``dupes-rust/src/normalizer/expr.rs:255-303``, spans kept on the CodeUnit,
 ``dupes-core/src/code_unit.rs:41-55``); the webtext analog splits a document
-into paragraphs on a separator and keeps each segment's half-open character
-span [char_start, char_end) in the original text — the same coordinate
-system the substring tier's span offsets use.
+into paragraphs on a blank line (``"\n\n"``) and keeps each segment's
+half-open character span [char_start, char_end) in the original text — the
+same coordinate system the substring tier's span offsets use.
 
 Fully JVM-side: split + posexplode + a running-offset window sum (one
 shuffle on doc_id — each doc's segments land on one task, the narrow shape
@@ -18,39 +18,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-PARAGRAPH_SEP = "\n\n"
 
-
-def segment_paragraphs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = PARAGRAPH_SEP,
-) -> DataFrame:
-    """(id, text) -> (id, seg_idx, char_start, char_end, seg_text).
+def segment_paragraphs(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, seg_idx, char_start, char_end, seg_text).
 
     Offsets satisfy text[char_start:char_end] == seg_text. Empty segments
     (leading/trailing/doubled separators) are dropped AFTER offsets are
-    computed, so surviving spans stay exact. ``sep`` must be a literal with
-    no regex metacharacters (the default is).
+    computed, so surviving spans stay exact.
     """
-    sep_len = len(sep)
     seg = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), sep, -1)).alias(
+        "doc_id", F.posexplode(F.split(F.col("text"), "\n\n", -1)).alias(
             "seg_idx", "seg_text"
         )
     )
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("seg_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     char_start = F.coalesce(
-        F.sum(F.length("seg_text") + sep_len).over(w), F.lit(0)
+        F.sum(F.length("seg_text") + 2).over(w), F.lit(0)
     ).cast("long")
     return (
         seg.select(
-            id_col,
+            "doc_id",
             F.col("seg_idx").cast("long").alias("seg_idx"),
             char_start.alias("char_start"),
             (char_start + F.length("seg_text")).cast("long").alias("char_end"),
@@ -60,13 +51,11 @@ def segment_paragraphs(
     )
 
 
-def segment_paragraphs_sql(
-    table_expr: str, id_expr: str = "doc_id", text_expr: str = "text"
-) -> str:
-    """DuckDB equivalent for the correctness oracle (e'\\n\\n' separator)."""
+def segment_paragraphs_sql(table_expr: str) -> str:
+    """DuckDB equivalent for the correctness oracle: ``table_expr`` yields
+    (doc_id, text)."""
     return f"""
-        with __t as (select {id_expr} as doc_id, {text_expr} as t2
-                     from {table_expr}),
+        with __t as (select doc_id, text as t2 from {table_expr}),
         __segs as (select doc_id,
             unnest(string_split(t2, e'\\n\\n')) as seg_text,
             unnest(range(0, len(string_split(t2, e'\\n\\n')))) as seg_idx

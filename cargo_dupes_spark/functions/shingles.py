@@ -105,13 +105,18 @@ def oracle_shingle_hash_sql(shingle_list_expr: str) -> str:
 
 
 def jaccard_col(a: Column | str, b: Column | str) -> Column:
-    """Exact Jaccard over two distinct-shingle arrays [J4] — built-in set ops
-    (array_intersect/array_union), JVM-side; the conservative-zip Dice of the
-    reference (similarity.rs:26-46) becomes an exact set intersection here."""
+    """Exact Jaccard over two distinct-shingle arrays [J4] — one built-in set
+    op (array_intersect), JVM-side; the conservative-zip Dice of the
+    reference (similarity.rs:26-46) becomes an exact set intersection here.
+
+    PRECONDITION: each array holds distinct elements (``shingles_from_tokens``
+    ends in ``array_distinct``). Then |A∪B| = |A| + |B| − |A∩B|, so only the
+    intersection builds a hash set; an ``array_union`` would build a second
+    one per pair for the same integer."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
-    union = F.size(F.array_union(ca, cb))
     inter = F.size(F.array_intersect(ca, cb))
+    union = F.size(ca) + F.size(cb) - inter
     return F.when(union == 0, F.lit(0.0)).otherwise(
         inter.cast("double") / union.cast("double")
     )

@@ -90,7 +90,7 @@ def with_span_copies(docs: DataFrame) -> DataFrame:
     return docs.unionByName(copies)
 
 
-def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition to the session's core count (guide §2.5: input skew from
     an unsplittable file -> repartition right after the read). The driver
     tables are ONE parquet file with ONE row group, so a scan — and every
@@ -100,17 +100,17 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     full-core parallelism for everything downstream. Sized from
     defaultParallelism (cluster-adaptive), never a constant.
 
-    HASH-partitioned on a unique id column when one exists: a keyless
-    ``repartition(n)`` is round-robin, which first locally sorts its input
-    so retried map tasks reproduce the same row-to-partition assignment
-    (SPARK-23207, guide §2.5) — a full sort of the single upstream task's
-    rows, serial by construction here. Hashing a deterministic unique key
-    needs no such sort (retries re-hash identically) and spreads evenly
-    (distinct keys >> partitions). Measured: the fingerprint projection
-    over a 320k-doc single-task expansion dropped 1.80 -> 1.12 s."""
+    HASH-partitioned on the unique id column (``doc_id``, else ``url``)
+    when one exists: a keyless ``repartition(n)`` is round-robin, which
+    first locally sorts its input so retried map tasks reproduce the same
+    row-to-partition assignment (SPARK-23207, guide §2.5) — a full sort of
+    the single upstream task's rows, serial by construction here. Hashing
+    a deterministic unique key needs no such sort (retries re-hash
+    identically) and spreads evenly (distinct keys >> partitions).
+    Measured: the fingerprint projection over a 320k-doc single-task
+    expansion dropped 1.80 -> 1.12 s."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    if key is None:
-        key = next((c for c in ("doc_id", "url") if c in df.columns), None)
+    key = next((c for c in ("doc_id", "url") if c in df.columns), None)
     if key is not None:
         return df.repartition(n, F.col(key))
     return df.repartition(n)

@@ -236,9 +236,7 @@ def media_features(
     return _bits_to_i64(np.asarray(bits)), vec
 
 
-def extract_features(
-    media: DataFrame, strict: bool = False, batch_label: str = "media_features"
-) -> DataFrame:
+def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
     """media table -> (media_id, media_type, phash, feature) via mapInPandas.
 
     Partition-parallel, Arrow-batched; the phash is the first 8 bytes of the
@@ -275,8 +273,6 @@ def near_media_dupes(
     features: DataFrame,
     hamming_threshold: int = 3,
     n_chunks: int = 4,
-    max_bucket_size: int = 2000,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """NEAR-duplicate media pairs: Hamming-ball bucketing over the 64-bit
     perceptual hash — the media twin of the text SimHash tier (VERDICT r4
@@ -289,45 +285,39 @@ def near_media_dupes(
     (hamming <= d implies >= 1 of d+1 bit-slices equal,
     functions/simhash.py) with media_type folded into the band key so
     cross-type pairs never co-locate, candidates through the
-    capped/salted/accounted ``nid_pairs_from_buckets``, then an exact
-    bit_count(xor) verify. Scale shape: the candidate shuffle carries
-    (8-byte media_id, 8-byte band_key) only; the verify joins an 8-byte
-    phash — nothing payload-sized moves.
+    capped/salted/accounted ``nid_pairs_from_buckets`` (buckets above 2000
+    members salted 16 ways), then an exact bit_count(xor) verify. Scale
+    shape: the candidate shuffle carries (8-byte media_id, 8-byte band_key)
+    only; ``reassemble_pairs`` brings each pair its (media_type, phash) in
+    one join — nothing payload-sized moves.
 
     Returns (id_a < id_b, media_type, hamming <= hamming_threshold)."""
     from ..functions.simhash import hamming_col
     from .lsh import chunk_keys_col, nid_pairs_from_buckets
+    from .verify import reassemble_pairs
 
     if n_chunks < hamming_threshold + 1:
         raise ValueError("pigeonhole requires n_chunks >= hamming_threshold+1")
     nid_pairs, _ = nid_pairs_from_buckets(
         features.withColumnRenamed("media_id", "nid"),
         chunk_keys_col("phash", "media_type", n_chunks),
-        max_bucket_size,
-        salt_buckets,
+        max_bucket_size=2000,
+        salt_buckets=16,
         collect_flagged=False,
     )
-    a = features.select(
-        F.col("media_id").alias("nid_a"),
-        F.col("media_type").alias("type_a"),
-        F.col("phash").alias("ph_a"),
-    )
-    b = features.select(
-        F.col("media_id").alias("nid_b"),
-        F.col("media_type").alias("type_b"),
-        F.col("phash").alias("ph_b"),
+    payload = features.select(
+        F.col("media_id").alias("nid"), "media_type", "phash"
     )
     return (
-        nid_pairs.join(a, "nid_a")
-        .join(b, "nid_b")
+        reassemble_pairs(nid_pairs, payload, "nid", ["media_type", "phash"])
         # band keys fold the type in, so cross-type pairs can only arise
         # from a 2^-64 key collision — re-check anyway (never silent)
-        .filter(F.col("type_a") == F.col("type_b"))
+        .filter(F.col("media_type_a") == F.col("media_type_b"))
         .select(
             F.col("nid_a").alias("id_a"),
             F.col("nid_b").alias("id_b"),
-            F.col("type_a").alias("media_type"),
-            hamming_col("ph_a", "ph_b").cast("long").alias("hamming"),
+            F.col("media_type_a").alias("media_type"),
+            hamming_col("phash_a", "phash_b").cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= hamming_threshold)
     )

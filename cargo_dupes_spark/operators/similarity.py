@@ -7,6 +7,10 @@ the exactness baseline (and the DuckDB-oracle-checkable one); the
 random-hyperplane LSH path is the 100 TB shape: candidates only meet inside
 buckets, turning the O(n²) cross join into per-bucket self-joins — the same
 bucket-then-verify skeleton as the near-dup tier.
+
+Column names are fixed: every operator here reads ``vec_id`` (BIGINT, one
+row per id) and ``embedding`` (a numeric array), the embeddings table's own
+names.
 """
 
 from __future__ import annotations
@@ -20,6 +24,12 @@ from pyspark.sql.window import Window
 
 from ..contracts import assert_unique_ids
 from .verify import reassemble_pairs
+
+# mega-bucket salting fan-out of every ANN pair generator (lsh.py)
+SALT_BUCKETS = 16
+# hyperplane seed (table t draws rng(LSH_SEED + t)) and k-means init seed
+LSH_SEED = 13
+IVF_SEED = 17
 
 
 def cosine_col(a: Column | str, b: Column | str) -> Column:
@@ -42,8 +52,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query (cross join + window rank).
 
@@ -52,10 +60,12 @@ def brute_force_topk(
     cross join is then a broadcast nested loop, no shuffle of the corpus).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cand_vec")
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cand_vec"),
     )
     scored = (
         q.crossJoin(c)
@@ -76,14 +86,14 @@ def brute_force_topk(
     )
 
 
-def multi_table_sketch_udf(dim: int, n_planes: int, n_tables: int, seed: int = 13):
+def multi_table_sketch_udf(dim: int, n_planes: int, n_tables: int):
     """Sign-sketches of an embedding for ALL hash tables in one pass:
     n_tables × n_planes random hyperplanes -> array of n_tables bit keys.
     (Charikar'02 SimHash for angular distance — the embedding-space twin of
     the text SimHash tier.) One Arrow transfer + one matmul computes every
     table's key (the previous per-table UDFs re-scanned the input n_tables
-    times); per-table planes keep the rng(seed + t) derivation so keys are
-    bit-identical to the old per-table sketches.
+    times); per-table planes keep the rng(LSH_SEED + t) derivation so keys
+    are bit-identical to the old per-table sketches.
 
     ``n_planes=0`` is a valid degenerate configuration: zero hyperplanes
     means every vector sketches to key 0 in every table — one bucket per
@@ -92,7 +102,7 @@ def multi_table_sketch_udf(dim: int, n_planes: int, n_tables: int, seed: int = 1
     set provably complete, so the emitted top-k must equal brute force."""
     planes = np.hstack(
         [
-            np.random.default_rng(seed + t)
+            np.random.default_rng(LSH_SEED + t)
             .standard_normal((dim, n_planes))
             .astype(np.float32)
             for t in range(n_tables)
@@ -115,11 +125,7 @@ def _ann_candidate_pairs(
     dim: int,
     n_planes: int,
     n_tables: int,
-    id_col: str,
-    vec_col: str,
-    seed: int,
     max_bucket_size: int,
-    salt_buckets: int,
 ):
     """ids-only LSH candidate generation with the SAME cap/salt/account
     machinery as the text tiers (operators/lsh.py): a dense embedding region
@@ -132,30 +138,26 @@ def _ann_candidate_pairs(
     the accounting."""
     from .lsh import nid_pairs_from_buckets
 
-    sketch = multi_table_sketch_udf(dim, n_planes, n_tables, seed)
+    sketch = multi_table_sketch_udf(dim, n_planes, n_tables)
     # independent hyperplane tables rarely produce identical member sets —
     # the bucket-level dedup pass would be a pure extra exchange here
     # flagged accounting is discarded by every ANN caller -> lazy PASS 1
     return nid_pairs_from_buckets(
         embeddings.select(
-            F.col(id_col).alias("nid"), sketch(F.col(vec_col)).alias("raw_keys")
+            F.col("vec_id").alias("nid"),
+            sketch(F.col("embedding")).alias("raw_keys"),
         ),
         # raw sketch keys span only 2^n_planes values — fold the table id
         # in and widen to 64 bits so buckets never merge across tables
         F.transform("raw_keys", lambda k, t: F.xxhash64(t, k)),
         max_bucket_size,
-        salt_buckets,
+        SALT_BUCKETS,
         dedup_buckets=False,
         collect_flagged=False,
     )
 
 
-def _pair_vectors(
-    nid_pairs: DataFrame,
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _pair_vectors(nid_pairs: DataFrame, embeddings: DataFrame) -> DataFrame:
     """(nid_a, nid_b) -> (nid_a, nid_b, va, vb): both sides' vectors via
     ``reassemble_pairs`` (operators/verify.py) — one join, one exchange of
     the vector payload sized by the candidate set, not the corpus.
@@ -168,25 +170,23 @@ def _pair_vectors(
 
     Set CARGO_DUPES_DEBUG_CONTRACTS=1 to assert the contract per call
     (one id-only aggregate; see cargo_dupes_spark/contracts.py)."""
-    assert_unique_ids(embeddings, id_col, "_pair_vectors(embeddings)")
-    vecs = embeddings.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+    assert_unique_ids(embeddings, "vec_id", "_pair_vectors(embeddings)")
+    vecs = embeddings.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("v")
+    )
     return reassemble_pairs(nid_pairs, vecs, "nid", ["v"]).select(
         "nid_a", "nid_b", F.col("v_a").alias("va"), F.col("v_b").alias("vb")
     )
 
 
 def _topk_from_pairs(
-    nid_pairs: DataFrame,
-    embeddings: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
+    nid_pairs: DataFrame, embeddings: DataFrame, k: int
 ) -> DataFrame:
     """Undirected candidate pairs -> per-query top-k: score each pair ONCE
     (cosine is symmetric — the old shape directed the pairs first and
     computed every cosine twice), then expand to both orientations with a
     shuffle-free projection and window-rank."""
-    scored = _pair_vectors(nid_pairs, embeddings, id_col, vec_col).select(
+    scored = _pair_vectors(nid_pairs, embeddings).select(
         "nid_a", "nid_b", F.round(cosine_col("va", "vb"), 6).alias("cosine")
     )
     directed = scored.select(
@@ -216,39 +216,33 @@ def lsh_topk(
     dim: int,
     n_planes: int = 12,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
     max_bucket_size: int = 2000,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Approximate all-pairs top-k: n_tables independent hyperplane sketches,
     candidates meet when any sketch matches, exact cosine re-rank on the
     candidate set. Recall grows with n_tables; bucket sizes shrink with
-    n_planes; buckets above max_bucket_size are salted (up to salt_buckets
+    n_planes; buckets above max_bucket_size are salted (up to SALT_BUCKETS
     sub-buckets) or dropped with accounting, bounding the worst case.
 
     The candidate shuffle carries 8-byte ids only; vectors meet the (small)
     pair set through the single-shuffle reassembly of ``_pair_vectors``."""
     nid_pairs, _ = _ann_candidate_pairs(
-        embeddings, dim, n_planes, n_tables, id_col, vec_col, seed,
-        max_bucket_size, salt_buckets,
+        embeddings, dim, n_planes, n_tables, max_bucket_size
     )
-    return _topk_from_pairs(nid_pairs, embeddings, k, id_col, vec_col)
+    return _topk_from_pairs(nid_pairs, embeddings, k)
 
 
-def _kmeans_centroids(
-    sample: np.ndarray, n_centroids: int, iters: int = 8, seed: int = 17
-) -> np.ndarray:
-    """Lloyd's k-means on a driver-side SAMPLE (the standard IVF training
-    shape: the coarse quantizer is trained on ~10^4-10^5 sampled vectors
-    even for billion-vector indexes, then broadcast). Deterministic."""
-    rng = np.random.default_rng(seed)
+def _kmeans_centroids(sample: np.ndarray, n_centroids: int) -> np.ndarray:
+    """Lloyd's k-means (8 iterations) on a driver-side SAMPLE (the standard
+    IVF training shape: the coarse quantizer is trained on ~10^4-10^5
+    sampled vectors even for billion-vector indexes, then broadcast).
+    Deterministic."""
+    rng = np.random.default_rng(IVF_SEED)
     sample = sample / np.maximum(
         np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
     )
     cent = sample[rng.choice(len(sample), size=n_centroids, replace=False)]
-    for _ in range(iters):
+    for _ in range(8):
         sims = sample @ cent.T
         assign = sims.argmax(axis=1)
         for c in range(n_centroids):
@@ -262,20 +256,15 @@ def _kmeans_centroids(
 def ivf_topk(
     embeddings: DataFrame,
     k: int,
-    dim: int,
     n_centroids: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 17,
-    train_sample: int = 10_000,
     max_bucket_size: int = 4000,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """IVF approximate top-k — the second ANN scale path (coarse-quantizer
     bucketing, vs lsh_topk's hyperplane bucketing):
 
-      1. train k-means centroids on a driver-side sample (broadcast),
+      1. train k-means centroids on a driver-side sample of the 10^4
+         lowest ids (broadcast),
       2. assign every vector to its nprobe nearest centroids (one Arrow
          pass; multi-assignment replaces a separate query-time probe so the
          all-pairs semantics stay symmetric),
@@ -291,18 +280,16 @@ def ivf_topk(
     # orderBy before limit: TakeOrderedAndProject keeps the training sample
     # deterministic across runs/partitionings (a bare limit() is not)
     sample_rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(train_sample)
-        .select(vec_col)
+        embeddings.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(10_000)
+        .select("embedding")
         .collect()
     )
     if not sample_rows:
         raise ValueError("embeddings table is empty")
     sample = np.array([r[0] for r in sample_rows], dtype=np.float32)
-    cent = _kmeans_centroids(
-        sample, min(n_centroids, len(sample)), seed=seed
-    )
+    cent = _kmeans_centroids(sample, min(n_centroids, len(sample)))
     nprobe_eff = min(nprobe, len(cent))
     cent_t = cent.T.astype(np.float32)
 
@@ -317,42 +304,37 @@ def ivf_topk(
     # one bucket per centroid — member sets don't repeat
     nid_pairs, _ = nid_pairs_from_buckets(
         embeddings.select(
-            F.col(id_col).alias("nid"), _assign(F.col(vec_col)).alias("cells")
+            F.col("vec_id").alias("nid"),
+            _assign(F.col("embedding")).alias("cells"),
         ),
         F.transform("cells", lambda c: F.xxhash64(c)),
         max_bucket_size,
-        salt_buckets,
+        SALT_BUCKETS,
         dedup_buckets=False,
         collect_flagged=False,
     )
-    return _topk_from_pairs(nid_pairs, embeddings, k, id_col, vec_col)
+    return _topk_from_pairs(nid_pairs, embeddings, k)
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float,
     dim: int,
-    n_planes: int = 10,
-    n_tables: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
     max_bucket_size: int = 2000,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= threshold), the
-    semantic-dedup detector: LSH-bucketed candidates + exact cosine verify,
+    semantic-dedup detector: LSH-bucketed candidates (6 tables of 10
+    hyperplanes) + exact cosine verify,
     emitting (id_a < id_b) edges ready for the same CC clustering.
 
     Threshold-filters ALL verified candidates — no top-k truncation, so a
     node with hundreds of neighbors above threshold keeps every edge (the
     old top-50 construction silently lost edges in dense clusters)."""
     nid_pairs, _ = _ann_candidate_pairs(
-        embeddings, dim, n_planes, n_tables, id_col, vec_col, seed,
-        max_bucket_size, salt_buckets,
+        embeddings, dim, 10, 6, max_bucket_size
     )
     return (
-        _pair_vectors(nid_pairs, embeddings, id_col, vec_col)
+        _pair_vectors(nid_pairs, embeddings)
         .select(
             F.col("nid_a").alias("id_a"),
             F.col("nid_b").alias("id_b"),

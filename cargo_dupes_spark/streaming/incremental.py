@@ -538,19 +538,15 @@ def load_stream_substring_dups(catalog: Catalog) -> DataFrame:
                       "batch_id BIGINT")
 
 
-def windowed_doc_stats(
-    stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "15 minutes",
-) -> DataFrame:
+def windowed_doc_stats(stream: DataFrame) -> DataFrame:
     """Watermarked windowed ingest stats: docs + token-ish volume per
-    (event-time window, lang). Late pages inside the watermark update their
-    window; older ones are dropped by the engine (bounded state — the whole
-    point of the watermark at 10^12-doc scale).
+    (1-hour event-time window, lang). Pages up to 15 minutes late update
+    their window; older ones are dropped by the engine (bounded state — the
+    whole point of the watermark at 10^12-doc scale).
     """
     return (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
+        stream.withWatermark("warc_ts", "15 minutes")
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.length("text")).alias("n_chars"),

@@ -60,11 +60,11 @@ def test_ann_real_config_still_runs_deterministically(spark):
     )
     dim = len(emb.select("embedding").first()[0])
     for fn, kw in (
-        (lsh_topk, {"n_planes": 8, "n_tables": 8}),
+        (lsh_topk, {"dim": dim, "n_planes": 8, "n_tables": 8}),
         (ivf_topk, {"n_centroids": 16, "nprobe": 2}),
     ):
-        df1 = fn(emb, k=5, dim=dim, **kw).toPandas()
-        df2 = fn(emb, k=5, dim=dim, **kw).toPandas()
+        df1 = fn(emb, k=5, **kw).toPandas()
+        df2 = fn(emb, k=5, **kw).toPandas()
         assert len(df1) > 0
         assert set(df1.columns) == {"query_id", "neighbor_id", "cosine", "rank"}
         pd.testing.assert_frame_equal(_canon(df1), _canon(df2))

@@ -162,7 +162,7 @@ def _verify_case(spark, cfg, name):
             [(i, [float(i)] * 4) for i in range(1, 4)],
             "vec_id bigint, embedding array<double>",
         )
-        out = _pair_vectors(pairs, emb, "vec_id", "embedding")
+        out = _pair_vectors(pairs, emb)
         return out, {(1, 2), (1, 3)}
     if name == "verify_substring_pairs":
         pairs = spark.createDataFrame(

@@ -5,7 +5,8 @@ CLAUDE.md:74); these tests go one step further and pin the vectorized
 kernels against naive pure-Python oracles over RANDOMIZED inputs, plus the
 algebraic identities the sketches must satisfy (MinHash union = elementwise
 min, SimHash determinism, LCS symmetry). No SparkSession needed — these run
-the kernels directly on synthetic batches, so the whole module is fast.
+the kernels directly on synthetic batches, so the module is fast; the one
+Spark test (``jaccard_col``) evaluates each example batch in one query.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from cargo_dupes_spark.functions.minhash import (
     minhash_batch,
     perm_params,
 )
+from cargo_dupes_spark.functions.shingles import jaccard_col
 from cargo_dupes_spark.functions.simhash import simhash_batch
 from cargo_dupes_spark.operators.substring import (
     longest_common_substring_len,
@@ -243,3 +245,41 @@ def test_audio_exact_doubling_never_changes_hash(seed, n):
     ph0, _ = _audio_features(x)
     ph1, _ = _audio_features((x.astype(np.int32) * 2).astype(np.int16))
     assert _ham64(ph0, ph1) == 0
+
+
+# ---------------------------------------------------------------------------
+# jaccard_col — one set build (|A∪B| = |A| + |B| − |A∩B| over distinct
+# arrays) against the two-set formula and exact rationals
+# ---------------------------------------------------------------------------
+
+distinct_row = st.one_of(
+    # a narrow range makes overlaps (and identical arrays) common
+    st.lists(st.integers(-12, 12), unique=True, max_size=12),
+    st.lists(
+        st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
+        unique=True, max_size=12,
+    ),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.tuples(distinct_row, distinct_row), min_size=1,
+                max_size=40))
+def test_jaccard_one_set_matches_two_set_formula(spark, pairs):
+    from fractions import Fraction
+
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pairs, "a array<bigint>, b array<bigint>")
+    union = F.size(F.array_union("a", "b"))
+    two_set = F.when(union == 0, F.lit(0.0)).otherwise(
+        F.size(F.array_intersect("a", "b")).cast("double")
+        / union.cast("double")
+    )
+    rows = df.select(
+        "a", "b", jaccard_col("a", "b").alias("j"), two_set.alias("j2")
+    ).collect()
+    for r in rows:
+        sa, sb = set(r.a), set(r.b)
+        exact = Fraction(len(sa & sb), len(sa | sb)) if sa | sb else 0
+        assert r.j == r.j2 == float(exact)

@@ -128,7 +128,7 @@ def test_ivf_topk_recall_on_clustered(spark):
         rows, "vec_id long, embedding array<double>, label int"
     )
     bf = brute_force_topk(df, df, k=1).collect()
-    iv = ivf_topk(df, k=1, dim=16, n_centroids=10, nprobe=2).collect()
+    iv = ivf_topk(df, k=1, n_centroids=10, nprobe=2).collect()
     bf_top = {r.query_id: r.neighbor_id for r in bf}
     iv_top = {r.query_id: r.neighbor_id for r in iv}
     hits = sum(1 for q, n in bf_top.items() if iv_top.get(q) == n)
