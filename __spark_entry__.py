@@ -59,39 +59,8 @@ from cargo_dupes_spark.operators.similarity import (
     embedding_near_dup_pairs,
 )
 
-_NORM = normalize_text_sql("text", CFG)
+_NORM = normalize_text_sql("text")
 _K = CFG.shingle_k
-
-
-def _embedding_dim(emb: DataFrame) -> int:
-    """Vector width from one row — fails with a clear message on an empty
-    table instead of a TypeError on None[0]."""
-    first = emb.select("embedding").first()
-    if first is None or first[0] is None:
-        raise ValueError("embeddings table is empty (or embedding is NULL)")
-    return len(first[0])
-
-
-def _embedding_dim_at(sf: str, emb: DataFrame) -> int:
-    """Vector width read driver-side from the parquet file (pyarrow, one
-    row) — ``emb.first()`` costs a full Spark job (scan task + py4j round
-    trip) per query invocation for one scalar. Reads the INPUT per call
-    (nothing cached); falls back to the DataFrame path when the table is
-    not a single readable parquet file with an ``embedding`` column."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        pf = pq.ParquetFile(f"{sf}/embeddings.parquet")
-        batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-        # by name: a file without the column yields a zero-column batch
-        col = batch.column("embedding")
-    except (OSError, StopIteration, pa.ArrowInvalid, KeyError):
-        return _embedding_dim(emb)
-    v = col[0].as_py() if batch.num_rows else None
-    if v is None:
-        raise ValueError("embeddings table is empty (or embedding is NULL)")
-    return len(v)
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +79,7 @@ def _q_normalize(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_documents(spark, sf)
     return docs.select(
         "doc_id",
-        normalize_text_col("text", CFG).alias("norm_text"),
+        normalize_text_col("text").alias("norm_text"),
     ).withColumn("n_tokens", n_tokens_col("norm_text")).orderBy("doc_id")
 
 
@@ -194,7 +163,7 @@ def _q_boilerplate(spark: SparkSession, sf: str) -> DataFrame:
     # contains pattern — a separate projection keeps the regex chain single
     return (
         both.select(
-            "doc_id", normalize_text_col("text", CFG).alias("_norm")
+            "doc_id", normalize_text_col("text").alias("_norm")
         )
         .select(
             "doc_id", is_boilerplate_col("_norm").alias("is_boilerplate")
@@ -234,7 +203,7 @@ def _q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     # discipline; codegen CSE does not catch the conditional branches)
     return single_sorted(
         docs.select(
-            "doc_id", normalize_text_col("text", CFG).alias("_norm")
+            "doc_id", normalize_text_col("text").alias("_norm")
         ).select("doc_id", lang_id_col("_norm").alias("lang_guess")),
         "doc_id",
     )
@@ -282,8 +251,7 @@ def _q_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
         "label",
     )
     both = emb.unionByName(scaled)
-    dim = _embedding_dim_at(sf, emb)
-    pairs = embedding_near_dup_pairs(both, threshold=0.99, dim=dim)
+    pairs = embedding_near_dup_pairs(both, threshold=0.99)
     return single_sorted(
         pairs.select(
             "id_a",
@@ -387,9 +355,8 @@ def _q_ann_planted_recall(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     both = emb.unionByName(copies)
-    dim = _embedding_dim_at(sf, emb)
     pairs = embedding_near_dup_pairs(
-        both, threshold=0.999999, dim=dim, max_bucket_size=1_000_000
+        both, threshold=0.999999, max_bucket_size=1_000_000
     )
     return (
         pairs.filter(F.col("id_b") == F.col("id_a") + 1_000_000)
@@ -419,10 +386,8 @@ def _q_ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_embeddings(spark, sf).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    dim = _embedding_dim_at(sf, emb)
     out = lsh_topk(
-        emb, k=5, dim=dim, n_planes=0, n_tables=2,
-        max_bucket_size=10_000_000,
+        emb, k=5, n_planes=0, n_tables=2, max_bucket_size=10_000_000
     )
     return out.select(
         "query_id",
@@ -729,7 +694,7 @@ def _q_doc_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.conv(
-            F.substring(F.md5(normalize_text_col("text", CFG)), 1, 15), 16, 10
+            F.substring(F.md5(normalize_text_col("text")), 1, 15), 16, 10
         )
         .cast("long")
         .alias("fp"),
@@ -1159,8 +1124,8 @@ def oracle_sql() -> dict[str, str]:
             ),
             norm as (
               select doc_id,
-                     {normalize_text_sql("text", CFG)} as nt0,
-                     {normalize_text_sql(f"text || '{NEAR_SUFFIX}'", CFG)} as nt1
+                     {normalize_text_sql("text")} as nt0,
+                     {normalize_text_sql(f"text || '{NEAR_SUFFIX}'")} as nt1
               from docs
             ),
             t as (select doc_id, string_split(nt0, ' ') as tk0,
@@ -1193,8 +1158,8 @@ def oracle_sql() -> dict[str, str]:
             ),
             norm as (
               select doc_id,
-                     {normalize_text_sql("text", CFG)} as nt_orig,
-                     {normalize_text_sql("substring(text, 50, 300)", CFG)}
+                     {normalize_text_sql("text")} as nt_orig,
+                     {normalize_text_sql("substring(text, 50, 300)")}
                        as nt_frag
               from docs
             )

@@ -15,6 +15,26 @@ Knob lineage (reference -> here):
   exclude patterns        -> url_exclude
   exclude_tests           -> exclude_boilerplate
   CI thresholds (cli.rs:304-374) -> max_exact_groups etc.
+
+What stays settable, and why:
+  - the reference's knobs above;
+  - input selection and format: content_type (the EXTRACTION_RULES key,
+    the NodeMapping analog) and langs;
+  - scale settings that tests set to reach their code paths:
+    max_bucket_size, salt_buckets, fingerprint_bits;
+  - IO paths: warehouse, checkpoint_dir.
+
+Fixed, not settable: the shingle/signature geometry below is a block of
+ClassVars, the number/URL/email masks of functions/normalize.py are always
+on, and the streaming state's partition count is a constant of
+streaming/incremental.py. Recall is measured "at the same shingle/signature
+config" (north_rule), so the geometry is part of what a result means, not an
+input. The streaming tiers also persist keys built from it and never compare
+a config against the state they probe: a changed seed, k, band shape, winnow
+size or mask would make keys that never match the stored state, and a
+changed partition count would probe the wrong partitions. Either way dups
+would go missing without an error. A ClassVar is not a dataclass field, so
+the constructor and load_config reject it and config_hash() leaves it out.
 """
 
 from __future__ import annotations
@@ -25,7 +45,7 @@ import json
 import tomllib
 from dataclasses import dataclass
 from pathlib import Path
-from typing import Any
+from typing import Any, ClassVar
 
 
 @dataclass(frozen=True)
@@ -37,30 +57,11 @@ class PipelineConfig:
     # functions/extract.py EXTRACTION_RULES — the NodeMapping analog) ---
     content_type: str = "text/html"
 
-    # --- normalization (reference N1-N7) ---
-    mask_numbers: bool = True
-    mask_urls: bool = True
-    mask_emails: bool = True
-
-    # --- shingling / MinHash / LSH (F5-F7, J3) ---
-    shingle_k: int = 3            # tokens per shingle
-    num_perm: int = 128           # MinHash signature length
-    lsh_bands: int = 32           # bands * rows_per_band == num_perm
-    lsh_rows: int = 4
-    minhash_seed: int = 1          # fixed: recall is measured "at identical
-    shingle_seed: int = 42         # shingle/signature config" (north_rule)
-
     # --- verification threshold (J4; Dice->Jaccard mapping documented above) ---
     jaccard_threshold: float = 0.7
 
-    # --- SimHash tier (F6) ---
-    hamming_threshold: int = 3
-    simhash_chunks: int = 4       # pigeonhole: d<=3 pairs share >=1 of 4 chunks
-
     # --- substring tier (X1-X3) ---
     min_substring_len: int = 64    # chars; reference min_sub_nodes=5 analog
-    winnow_kgram: int = 16         # winnowing k-gram size (chars)
-    winnow_window: int = 49        # guarantee: matches >= k + w - 1 = 64 chars
 
     # --- filters (S1-S2, P4) ---
     url_exclude: tuple[str, ...] = ()
@@ -78,12 +79,6 @@ class PipelineConfig:
     # through exact tier, composites, CC node ids, ignore lists, streaming.
     fingerprint_bits: int = 64
 
-    # --- streaming state layout ---
-    # stream_fps is hive/Iceberg-partitioned by pmod(fingerprint, N): the
-    # per-batch state probe prunes to the partitions the batch's own
-    # fingerprints can live in, instead of scanning the whole corpus state
-    stream_fp_buckets: int = 64
-
     # --- CI gate thresholds (O4: cli.rs:304-374); None = not enforced ---
     max_exact_groups: int | None = None
     max_near_groups: int | None = None
@@ -93,6 +88,21 @@ class PipelineConfig:
     # --- IO ---
     warehouse: str = "/tmp/cargo_dupes_spark/warehouse"
     checkpoint_dir: str = "/tmp/cargo_dupes_spark/checkpoints"
+
+    # --- fixed signature geometry (class constants, not fields) ---
+    # shingling / MinHash / LSH (F5-F7, J3)
+    shingle_k: ClassVar[int] = 3       # tokens per shingle
+    num_perm: ClassVar[int] = 128      # MinHash signature length
+    lsh_bands: ClassVar[int] = 32      # bands * rows == num_perm
+    lsh_rows: ClassVar[int] = 4
+    minhash_seed: ClassVar[int] = 1
+    shingle_seed: ClassVar[int] = 42
+    # SimHash tier (F6): pigeonhole, pairs within 3 bits share 1 of 4 chunks
+    hamming_threshold: ClassVar[int] = 3
+    simhash_chunks: ClassVar[int] = 4
+    # winnowing (X1): every match of >= k + w - 1 = 64 chars is found
+    winnow_kgram: ClassVar[int] = 16   # k-gram size (chars)
+    winnow_window: ClassVar[int] = 49
 
     def config_hash(self) -> str:
         """Deterministic hash of all knobs — recorded with every metrics row
@@ -114,19 +124,10 @@ class PipelineConfig:
                 f"no extraction rules for {self.content_type!r}; "
                 f"known: {sorted(EXTRACTION_RULES)}"
             )
-        if self.lsh_bands * self.lsh_rows != self.num_perm:
-            raise ValueError(
-                f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows}) "
-                f"must equal num_perm ({self.num_perm})"
-            )
         if not 0.0 < self.jaccard_threshold <= 1.0:
             raise ValueError("jaccard_threshold must be in (0, 1]")
         if self.fingerprint_bits not in (64, 128):
             raise ValueError("fingerprint_bits must be 64 or 128")
-        if self.simhash_chunks < self.hamming_threshold + 1:
-            raise ValueError(
-                "pigeonhole requires simhash_chunks >= hamming_threshold+1"
-            )
         if self.winnow_kgram + self.winnow_window - 1 > self.min_substring_len:
             raise ValueError(
                 "winnowing guarantee k+w-1 must be <= min_substring_len"

@@ -26,17 +26,18 @@ from pyspark.sql import functions as F
 _TRANSLATE_FROM = "‘’“”–— "
 _TRANSLATE_TO = "''\"\"-- "
 
-# (pattern, replacement, config_flag) applied in order after lower+translate.
-# config_flag names the PipelineConfig attribute gating the step (None=always).
-NORM_STEPS: list[tuple[str, str, str | None]] = [
-    (r"https?://[^\s]+", " <url> ", "mask_urls"),
-    (r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}", " <email> ", "mask_emails"),
-    (r"[0-9]+(?:\.[0-9]+)?", " <num> ", "mask_numbers"),
+# (pattern, replacement) applied in order after lower+translate. Every step
+# always runs: the masks shape the fingerprints and shingles the streaming
+# state persists, so they are not options (config.py docstring).
+NORM_STEPS: list[tuple[str, str]] = [
+    (r"https?://[^\s]+", " <url> "),
+    (r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}", " <email> "),
+    (r"[0-9]+(?:\.[0-9]+)?", " <num> "),
     # one pass strips punctuation AND collapses whitespace: any run of
     # chars outside {letter, digit, <, >} — spaces included — becomes a
     # single space. Exactly equivalent to the former two-pass
     # strip-then-collapse sequence, one fewer full-string regex scan.
-    (r"[^\p{L}\p{N}<>]+", " ", None),
+    (r"[^\p{L}\p{N}<>]+", " "),
 ]
 
 
@@ -51,7 +52,7 @@ _MASK_GUARDS: dict[str, str] = {
 }
 
 
-def normalize_text_col(col: Column | str, cfg=None) -> Column:
+def normalize_text_col(col: Column | str) -> Column:
     """norm_text as a pure built-in expression chain (lower → translate →
     regexp masks → collapse → trim). Stays inside WholeStageCodegen; the
     guarded masks rely on codegen subexpression elimination evaluating the
@@ -59,9 +60,7 @@ def normalize_text_col(col: Column | str, cfg=None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     c = F.lower(c)
     c = F.translate(c, _TRANSLATE_FROM, _TRANSLATE_TO)
-    for pattern, repl, flag in NORM_STEPS:
-        if flag is not None and cfg is not None and not getattr(cfg, flag):
-            continue
+    for pattern, repl in NORM_STEPS:
         guard = _MASK_GUARDS.get(pattern)
         if guard is not None:
             c = F.when(
@@ -72,7 +71,7 @@ def normalize_text_col(col: Column | str, cfg=None) -> Column:
     return F.trim(c)
 
 
-def normalize_text_sql(expr: str, cfg=None) -> str:
+def normalize_text_sql(expr: str) -> str:
     """The same normalization as DuckDB SQL, for oracle_sql()/pytest oracles.
 
     DuckDB regexp_replace is RE2 and needs the 'g' flag for global
@@ -82,9 +81,7 @@ def normalize_text_sql(expr: str, cfg=None) -> str:
     frm = _TRANSLATE_FROM
     to = _TRANSLATE_TO.replace("'", "''")
     out = f"translate({out}, '{frm}', '{to}')"
-    for pattern, repl, flag in NORM_STEPS:
-        if flag is not None and cfg is not None and not getattr(cfg, flag):
-            continue
+    for pattern, repl in NORM_STEPS:
         # RE2 spells unicode classes \p{L}/\p{N} identically — reuse as-is
         pat_sql = pattern.replace("'", "''")
         out = f"regexp_replace({out}, '{pat_sql}', '{repl}', 'g')"

@@ -131,7 +131,7 @@ def normalized(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         "lang",
-        normalize_text_col("text", CFG).alias("norm_text"),
+        normalize_text_col("text").alias("norm_text"),
     ).withColumn("n_tokens", n_tokens_col("norm_text"))
 
 

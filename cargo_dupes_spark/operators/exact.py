@@ -86,7 +86,7 @@ def prepare_columns(web_pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     df = df.select(
         "url",
         "lang",
-        normalize_text_col("extracted_text", cfg).alias("norm_text"),
+        normalize_text_col("extracted_text").alias("norm_text"),
         F.length("extracted_text").cast("int").alias("n_chars"),
         "extract_error",
     )

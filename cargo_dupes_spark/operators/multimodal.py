@@ -337,19 +337,13 @@ def exact_media_dupes(features: DataFrame) -> DataFrame:
 
 
 def synthetic_wav(rng: np.random.Generator, n_samples: int = 4000) -> bytes:
-    """Deterministic 16-bit mono PCM WAV (stdlib wave encoder)."""
+    """Deterministic 16-bit mono PCM WAV at 8 kHz."""
     t = np.arange(n_samples)
     freq = float(rng.uniform(0.01, 0.2))
     x = (10000 * np.sin(freq * t) + rng.normal(0, 500, n_samples)).astype(
         np.int16
     )
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(8000)
-        f.writeframes(x.tobytes())
-    return buf.getvalue()
+    return _wav_from_samples(x)
 
 
 NEAR_MEDIA_OFFSET = 10_000
@@ -387,6 +381,7 @@ def swap_extreme_blocks(img: np.ndarray) -> np.ndarray:
 
 
 def _wav_from_samples(x: np.ndarray, rate: int = 8000) -> bytes:
+    """16-bit mono PCM WAV of the samples (stdlib wave encoder)."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as f:
         f.setnchannels(1)

@@ -86,34 +86,40 @@ def brute_force_topk(
     )
 
 
-def multi_table_sketch_udf(dim: int, n_planes: int, n_tables: int):
+def multi_table_sketch_udf(n_planes: int, n_tables: int):
     """Sign-sketches of an embedding for ALL hash tables in one pass:
     n_tables × n_planes random hyperplanes -> array of n_tables bit keys.
     (Charikar'02 SimHash for angular distance — the embedding-space twin of
     the text SimHash tier.) One Arrow transfer + one matmul computes every
     table's key (the previous per-table UDFs re-scanned the input n_tables
     times); per-table planes keep the rng(LSH_SEED + t) derivation so keys
-    are bit-identical to the old per-table sketches.
+    are bit-identical to the old per-table sketches. The planes take their
+    height from the vectors' width, drawn once per width and cached.
 
     ``n_planes=0`` is a valid degenerate configuration: zero hyperplanes
     means every vector sketches to key 0 in every table — one bucket per
     table, i.e. the EXHAUSTIVE-candidate configuration. The driver's
     scoring-exactness oracle (ann_lsh_topk) uses it to make the candidate
     set provably complete, so the emitted top-k must equal brute force."""
-    planes = np.hstack(
-        [
-            np.random.default_rng(LSH_SEED + t)
-            .standard_normal((dim, n_planes))
-            .astype(np.float32)
-            for t in range(n_tables)
-        ]
-    )
+    planes_by_dim: dict[int, np.ndarray] = {}
     weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+    def planes(dim: int) -> np.ndarray:
+        if dim not in planes_by_dim:
+            planes_by_dim[dim] = np.hstack(
+                [
+                    np.random.default_rng(LSH_SEED + t)
+                    .standard_normal((dim, n_planes))
+                    .astype(np.float32)
+                    for t in range(n_tables)
+                ]
+            )
+        return planes_by_dim[dim]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sketch(vecs: pd.Series) -> pd.Series:
         mat = np.stack([np.asarray(v, dtype=np.float32) for v in vecs])
-        bits = (mat @ planes) > 0  # (rows, tables*planes)
+        bits = (mat @ planes(mat.shape[1])) > 0  # (rows, tables*planes)
         keys = bits.reshape(len(mat), n_tables, n_planes) @ weights
         return pd.Series(list(keys))
 
@@ -122,7 +128,6 @@ def multi_table_sketch_udf(dim: int, n_planes: int, n_tables: int):
 
 def _ann_candidate_pairs(
     embeddings: DataFrame,
-    dim: int,
     n_planes: int,
     n_tables: int,
     max_bucket_size: int,
@@ -138,7 +143,7 @@ def _ann_candidate_pairs(
     the accounting."""
     from .lsh import nid_pairs_from_buckets
 
-    sketch = multi_table_sketch_udf(dim, n_planes, n_tables)
+    sketch = multi_table_sketch_udf(n_planes, n_tables)
     # independent hyperplane tables rarely produce identical member sets —
     # the bucket-level dedup pass would be a pure extra exchange here
     # flagged accounting is discarded by every ANN caller -> lazy PASS 1
@@ -213,7 +218,6 @@ def _topk_from_pairs(
 def lsh_topk(
     embeddings: DataFrame,
     k: int,
-    dim: int,
     n_planes: int = 12,
     n_tables: int = 4,
     max_bucket_size: int = 2000,
@@ -227,7 +231,7 @@ def lsh_topk(
     The candidate shuffle carries 8-byte ids only; vectors meet the (small)
     pair set through the single-shuffle reassembly of ``_pair_vectors``."""
     nid_pairs, _ = _ann_candidate_pairs(
-        embeddings, dim, n_planes, n_tables, max_bucket_size
+        embeddings, n_planes, n_tables, max_bucket_size
     )
     return _topk_from_pairs(nid_pairs, embeddings, k)
 
@@ -319,7 +323,6 @@ def ivf_topk(
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float,
-    dim: int,
     max_bucket_size: int = 2000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= threshold), the
@@ -330,9 +333,7 @@ def embedding_near_dup_pairs(
     Threshold-filters ALL verified candidates — no top-k truncation, so a
     node with hundreds of neighbors above threshold keeps every edge (the
     old top-50 construction silently lost edges in dense clusters)."""
-    nid_pairs, _ = _ann_candidate_pairs(
-        embeddings, dim, 10, 6, max_bucket_size
-    )
+    nid_pairs, _ = _ann_candidate_pairs(embeddings, 10, 6, max_bucket_size)
     return (
         _pair_vectors(nid_pairs, embeddings)
         .select(

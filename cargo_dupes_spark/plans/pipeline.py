@@ -4,9 +4,9 @@ Reference flow (``dupes-core/src/lib.rs:41-154``): read → parse → filter →
 exact groups → near groups → sub-units → ignore filter → stats. Here each
 stage commits its output through the Catalog (checkpoint = Iceberg snapshot
 or parquet + meta sidecar) and a resumed run SKIPS stages whose output
-already exists under the same config hash — the north_rule "resumes
-mid-run" contract. Per-stage lineage and wall-clock metrics are appended as
-they complete.
+already exists under the same config hash and detector set — the north_rule
+"resumes mid-run" contract. Per-stage lineage and wall-clock metrics are
+appended as they complete.
 
 Detector composition: 'minhash' and 'simhash' are interchangeable
 candidate generators for the near tier (both verified by exact Jaccard);
@@ -79,7 +79,8 @@ class Pipeline:
 
     # ------------------------------------------------------------------
     def _stage(self, name: str, build) -> DataFrame:
-        """Run-or-resume one stage: skip if committed under this config.
+        """Run-or-resume one stage: skip if committed under this config and
+        this detector set.
 
         Lineage contract (O6): per-partition n_out comes from the committed
         parquet footers (no extra job); failure totals (n_failed +
@@ -89,7 +90,7 @@ class Pipeline:
         accounting costs zero additional Spark jobs. n_in is the committed
         row count of the stage's ``UPSTREAM`` stage.
         """
-        if self.resume and self.catalog.is_complete(name):
+        if self.resume and self.catalog.is_complete(name, self.detectors):
             self.stage_log.append(f"skip:{name}")
             out = self.catalog.read(name)
             self.stage_rows[name] = None
@@ -109,7 +110,7 @@ class Pipeline:
                 ).alias("n_failed"),
                 F.max("extract_error").alias("error_sample"),
             )
-        out = self.catalog.checkpoint(df, name)
+        out = self.catalog.checkpoint(df, name, self.detectors)
         failed = obs.get if obs is not None else {}
         n_rows = self.catalog.record_lineage(
             out,

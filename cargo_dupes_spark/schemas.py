@@ -1,17 +1,20 @@
-"""Fixed StructType schemas for every table in the pipeline.
+"""Declared StructType schemas for the pipeline's tables.
 
 The reference's schema is fixed at compile time (Rust structs,
-``dupes-core/src/code_unit.rs:41-55``); here each table is declared once and
-never inferred. Table roles:
+``dupes-core/src/code_unit.rs:41-55``). Here a schema is declared where code
+builds a table from rows or needs an empty frame of the right shape: the
+web_pages input, the empty candidate/edge/cluster frames of a run with no
+candidates, the driver-side metrics and lineage appends, the ignore list,
+and the memberships shape the report tests build frames of. Stage outputs
+are not checked against these declarations: ``Catalog.read`` lets Spark
+infer each committed table's schema from its parquet files.
 
   web_pages       — input (BASELINE.json input_hint shape)
-  fingerprints    — per-doc derived columns (CodeUnit analog)
   candidate_pairs — LSH/SimHash/substring candidates pre-verification
   verified_edges  — pairs passing Jaccard/Hamming/substring verification
   clusters        — connected-components labels (url -> cluster_id)
-  dup_groups      — DuplicateGroup analog (grouper.rs:9-17)
   memberships     — normalized group membership (scales past collect_list)
-  metrics         — DuplicationStats analog (grouper.rs:21-57), one row/run
+  metrics         — per-stage run metrics, long format
   lineage         — per-stage per-partition row accounting (north_rule)
   ignore          — IgnoreFile analog (ignore.rs:12-29)
 """
@@ -27,37 +30,6 @@ WEB_PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-FINGERPRINTS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("norm_text", T.StringType(), True),
-        T.StructField("fingerprint", T.LongType(), True),
-        T.StructField("n_tokens", T.IntegerType(), True),
-        T.StructField("n_chars", T.IntegerType(), True),
-        T.StructField("is_boilerplate", T.BooleanType(), True),
-        # S3/O6: NULL on success; decode/extraction failures are tagged
-        # (never dropped) and counted into the stage lineage summary
-        T.StructField("extract_error", T.StringType(), True),
-    ]
-)
-
-SIGNATURES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("shingles", T.ArrayType(T.LongType()), True),
-        T.StructField("simhash", T.LongType(), True),
-        # precomputed LSH keys: the candidate stage prunes its scans to
-        # these (32+4 x 8 B); the raw 1 KB/doc minhash exists only inside
-        # the signatures stage to derive band_keys and is NOT committed
-        # (nothing downstream reads it — dropping it cut the stage's
-        # DRAM-bound write volume ~35-40%)
-        T.StructField("band_keys", T.ArrayType(T.LongType()), True),
-        T.StructField("chunk_keys", T.ArrayType(T.LongType()), True),
     ]
 )
 
@@ -106,17 +78,6 @@ MEMBERSHIPS = T.StructType(
     ]
 )
 
-DUP_GROUPS = T.StructType(
-    [
-        T.StructField("group_fp", T.LongType(), False),
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("n_members", T.IntegerType(), False),
-        T.StructField("similarity", T.DoubleType(), True),
-        T.StructField("total_tokens", T.LongType(), True),
-        T.StructField("members", T.ArrayType(T.StringType()), True),
-    ]
-)
-
 METRICS = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -147,22 +108,13 @@ IGNORE = T.StructType(
 )
 
 # fingerprint_bits=128 variant: fingerprints are 32-char lowercase hex
-# strings (functions/fingerprint.py); same shape for FINGERPRINTS /
-# MEMBERSHIPS / DUP_GROUPS — their fp columns widen to StringType when the
-# pipeline runs at 128 bits (schemas are never inferred, but the width is
-# cfg-driven at the column builders, so only the ignore table needs a
-# second declared schema for empty-frame creation)
+# strings (functions/fingerprint.py); the fp columns of the fingerprints
+# and memberships tables widen to StringType the same way, but their width
+# is cfg-driven at the column builders, so only the ignore table needs a
+# second declared schema for empty-frame creation
 IGNORE_WIDE = T.StructType(
     [
         T.StructField("fingerprint", T.StringType(), False),
         T.StructField("reason", T.StringType(), True),
-    ]
-)
-
-ORACLE_PAIRS = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("tier", T.StringType(), False),
     ]
 )

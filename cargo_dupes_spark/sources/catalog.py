@@ -3,9 +3,9 @@
 The reference holds everything in RAM for one `analyze()` call
 (``dupes-core/src/lib.rs:41-154``); at 10^12-doc scale every stage instead
 commits to a table and the pipeline resumes by skipping stages whose output
-was produced under the same config hash (north_rule: "resumes mid-run ...
-every stage checkpoints to Iceberg with per-partition lineage and metrics
-tables").
+was produced under the same config hash and detector set (north_rule:
+"resumes mid-run ... every stage checkpoints to Iceberg with per-partition
+lineage and metrics tables").
 
 Iceberg needs its runtime jar on the classpath; this sandbox image doesn't
 ship it, so the catalog probes for it and falls back to plain parquet with a
@@ -101,24 +101,37 @@ class Catalog:
             return False
         return next(iter(path.rglob("*.parquet")), None) is not None
 
-    def checkpoint(self, df: DataFrame, name: str) -> DataFrame:
+    def checkpoint(
+        self, df: DataFrame, name: str, detectors: tuple[str, ...] = ()
+    ) -> DataFrame:
         """Write + read back: commits the stage AND cuts lineage (the
-        DataFrame equivalent of the reference finishing a pipeline step)."""
+        DataFrame equivalent of the reference finishing a pipeline step).
+        The sidecar also records the run's detector set, which is not part
+        of the config hash; it is stamped after the data and the hash, so a
+        crash in between leaves a sidecar that ``is_complete`` rejects."""
         self.write(df, name)
+        meta = self._read_meta(name)
+        meta["detectors"] = sorted(detectors)
+        self._meta_path(name).write_text(json.dumps(meta))
         return self.read(name)
 
-    def is_complete(self, name: str) -> bool:
-        """Resume check: the stage output exists and was produced under the
-        current config (a changed knob invalidates downstream stages, like a
-        changed dupes.toml invalidates a prior run)."""
-        mp = self._meta_path(name)
-        if not mp.exists():
-            return False
+    def _read_meta(self, name: str) -> dict:
         try:
-            meta = json.loads(mp.read_text())
+            return json.loads(self._meta_path(name).read_text())
         except (OSError, json.JSONDecodeError):
-            return False
-        return meta.get("config_hash") == self.config_hash
+            return {}
+
+    def is_complete(self, name: str, detectors: tuple[str, ...] = ()) -> bool:
+        """Resume check: the stage output was committed under the current
+        config AND the same detector set (a changed knob or detector list
+        invalidates the stage, like a changed dupes.toml invalidates a prior
+        run). A sidecar without a detector set, written by older code or cut
+        short by a crash, means recompute."""
+        meta = self._read_meta(name)
+        return (
+            meta.get("config_hash") == self.config_hash
+            and meta.get("detectors") == sorted(detectors)
+        )
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._path(name), ignore_errors=True)
@@ -194,11 +207,6 @@ class Catalog:
         )
         self._append_local(rows, "lineage", LINEAGE)
         return total
-
-    def read_lineage(self) -> DataFrame:
-        if not self._path("lineage").exists():
-            return self.spark.createDataFrame([], LINEAGE)
-        return self.spark.read.parquet(str(self._path("lineage")))
 
     def record_metrics(self, stage: str, metrics: dict[str, float]) -> None:
         rows = [

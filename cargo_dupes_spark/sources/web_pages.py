@@ -170,7 +170,7 @@ def generate_web_pages(
             urls.append(url)
             add_row(url, v, lang)
         corpus.exact_families[f"variant{f_i}"] = urls[:2]  # member 2 differs
-        # the digit-augmented variant is exact iff mask_numbers erased it —
+        # the digit-augmented variant is exact iff the number mask erased it —
         # keep it out of the planted exact set; brute-force oracle decides.
 
     # near families (fixtures/near_dupes analog)

@@ -19,7 +19,7 @@ re-scanning the corpus. This module is that incremental path:
 State lives in Catalog tables (Iceberg/parquet), NOT in executor memory:
 state size is corpus-bounded, so it belongs in a table joined per batch.
 Every state table is partitioned by pmod(hash(column), N)
-(cfg.stream_fp_buckets; ``_BUCKETS`` maps each table to its partition
+(N = ``STATE_BUCKETS``; ``_BUCKETS`` maps each table to its partition
 column), and every probe reads only the partitions the batch's own values
 hash to (``pruned``), so per-batch probe IO is bounded by |batch's
 buckets| / N of the state, not O(corpus). The exact tier probes
@@ -130,7 +130,7 @@ def _process_exact_tier(
     if catalog.exists(STATE_TABLE):
         # only the fp partitions this batch can possibly hit
         state = pruned(
-            catalog, STATE_TABLE, _buckets(in_batch_first, cfg, STATE_TABLE)
+            catalog, STATE_TABLE, _buckets(in_batch_first, STATE_TABLE)
         ).select("fingerprint", F.col("url").alias("state_url"))
         # earliest prior owner per fp (state holds one row per fp;
         # min() is cheap insurance against partial-commit residue)
@@ -177,7 +177,7 @@ def _process_exact_tier(
     catalog.append(
         new_fps.select(
             "url", "fingerprint", "n_tokens", batch_col,
-            _bucket_col(cfg, STATE_TABLE),
+            _bucket_col(STATE_TABLE),
         ),
         STATE_TABLE,
         partition_by=["fp_bucket"],
@@ -256,7 +256,7 @@ def _probe_state(
     replayed = None
     if catalog.exists(tier.keys_table):
         state = pruned(
-            catalog, tier.keys_table, _buckets(keys, cfg, tier.keys_table)
+            catalog, tier.keys_table, _buckets(keys, tier.keys_table)
         ).select(F.col("url").alias("state_url"), "band_key")
         hot = (
             state.groupBy("band_key")
@@ -280,7 +280,7 @@ def _probe_state(
             .select("url", F.col("state_url").alias("matched_url"))
             .distinct()
         )
-        m_buckets = _buckets(cross, cfg, tier.payload_table, "matched_url")
+        m_buckets = _buckets(cross, tier.payload_table, "matched_url")
         if m_buckets:
             texts = texts.unionByName(
                 pruned(catalog, tier.payload_table, m_buckets)
@@ -315,7 +315,7 @@ def _probe_state(
          to_state.select("url", F.explode("band_keys").alias("band_key"))),
     ):
         catalog.append(
-            rows.select("*", batch_col, _bucket_col(cfg, table)),
+            rows.select("*", batch_col, _bucket_col(table)),
             table,
             partition_by=[_BUCKETS[table][0]],
         )
@@ -386,7 +386,7 @@ def incremental_dedup(
         raise ValueError(
             "the 'exact' tier is mandatory ('near'/'substring' build on it)"
         )
-    _migrate_legacy_state(catalog, cfg)
+    _migrate_legacy_state(catalog)
     near = "near" in tiers
     substring = "substring" in tiers
 
@@ -416,6 +416,11 @@ def incremental_dedup(
     return writer.start()
 
 
+# partitions per state table. Fixed: the tables persist across restarts, and
+# a different count would probe the wrong partitions for most keys
+# (repartitioning the state is a job of its own, not a setting)
+STATE_BUCKETS = 64
+
 # table -> (partition column, hashed column). pmod over a re-hash, not the
 # raw value, so one expression buckets BIGINT and hex-string fingerprints
 _BUCKETS = {
@@ -427,23 +432,21 @@ _BUCKETS = {
 }
 
 
-def _bucket_col(cfg: PipelineConfig, table: str, src: str | None = None):
+def _bucket_col(table: str, src: str | None = None):
     """``table``'s partition column, hashed from ``src`` (default: the
     column the table buckets on)."""
     name, hashed = _BUCKETS[table]
     return (
-        F.pmod(F.xxhash64(src or hashed), F.lit(cfg.stream_fp_buckets))
+        F.pmod(F.xxhash64(src or hashed), F.lit(STATE_BUCKETS))
         .cast("int")
         .alias(name)
     )
 
 
-def _buckets(
-    df: DataFrame, cfg: PipelineConfig, table: str, src: str | None = None
-) -> list[int]:
+def _buckets(df: DataFrame, table: str, src: str | None = None) -> list[int]:
     """The ``table`` partitions ``df``'s rows can live in — bounded by
-    stream_fp_buckets, so the collect is tiny."""
-    col = _bucket_col(cfg, table, src)
+    STATE_BUCKETS, so the collect is tiny."""
+    col = _bucket_col(table, src)
     return [r[0] for r in df.select(col).distinct().collect()]
 
 
@@ -458,7 +461,7 @@ def pruned(catalog: Catalog, table: str, buckets: list[int]) -> DataFrame:
     )
 
 
-def _migrate_legacy_state(catalog: Catalog, cfg: PipelineConfig) -> None:
+def _migrate_legacy_state(catalog: Catalog) -> None:
     """One-time layout migration (ADVICE r3): a warehouse written by the
     pre-partitioned revision holds FLAT part-files (no fp_bucket column)
     in the stream_fps root; new appends land under fp_bucket= dirs, and
@@ -485,7 +488,7 @@ def _migrate_legacy_state(catalog: Catalog, cfg: PipelineConfig) -> None:
     if "fp_bucket" not in old.columns:
         old = old.select(
             "url", "fingerprint", "n_tokens", "batch_id",
-            _bucket_col(cfg, STATE_TABLE),
+            _bucket_col(STATE_TABLE),
         )
     tmp = root.parent / f"{STATE_TABLE}__migrate_{uuid.uuid4().hex[:8]}"
     old.write.partitionBy("fp_bucket").parquet(str(tmp))

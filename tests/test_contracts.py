@@ -55,7 +55,7 @@ def test_public_caller_surfaces_violation(spark, monkeypatch):
     ]
     df = _embeddings(spark, rows)
     with pytest.raises(ValueError, match="_pair_vectors"):
-        lsh_topk(df, dim=3, k=2, n_planes=0, n_tables=1).collect()
+        lsh_topk(df, k=2, n_planes=0, n_tables=1).collect()
 
 
 def test_public_caller_clean_input_unaffected(spark, monkeypatch):
@@ -66,11 +66,11 @@ def test_public_caller_clean_input_unaffected(spark, monkeypatch):
     monkeypatch.setenv("CARGO_DUPES_DEBUG_CONTRACTS", "1")
     on = sorted(
         tuple(r)
-        for r in lsh_topk(df, dim=3, k=2, n_planes=0, n_tables=1).collect()
+        for r in lsh_topk(df, k=2, n_planes=0, n_tables=1).collect()
     )
     monkeypatch.delenv("CARGO_DUPES_DEBUG_CONTRACTS")
     off = sorted(
         tuple(r)
-        for r in lsh_topk(df, dim=3, k=2, n_planes=0, n_tables=1).collect()
+        for r in lsh_topk(df, k=2, n_planes=0, n_tables=1).collect()
     )
     assert on == off and len(on) > 0

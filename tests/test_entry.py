@@ -58,9 +58,8 @@ def test_ann_real_config_still_runs_deterministically(spark):
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
     )
-    dim = len(emb.select("embedding").first()[0])
     for fn, kw in (
-        (lsh_topk, {"dim": dim, "n_planes": 8, "n_tables": 8}),
+        (lsh_topk, {"n_planes": 8, "n_tables": 8}),
         (ivf_topk, {"n_centroids": 16, "nprobe": 2}),
     ):
         df1 = fn(emb, k=5, **kw).toPandas()
@@ -109,29 +108,3 @@ def test_near_clusters_bounds_collect_before_guard(spark, monkeypatch):
     got = [tuple(r) for r in dedup.near_dup_clusters(spark, SF).collect()]
     assert collected and max(collected) <= threshold + 1
     assert got == want
-
-
-def test_embedding_dim_falls_back_on_unreadable_parquet(spark, tmp_path):
-    """A corrupt embeddings.parquet, or one without an ``embedding``
-    column, takes the DataFrame fallback; a NULL first vector still
-    raises."""
-    emb = spark.createDataFrame(
-        [(1, [0.5, 0.25, 0.125])], "vec_id bigint, embedding array<double>"
-    )
-    (tmp_path / "embeddings.parquet").write_bytes(b"not a parquet file")
-    assert entry_mod._embedding_dim_at(str(tmp_path), emb) == 3
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table({"vec_id": [1]}), str(tmp_path / "embeddings.parquet")
-    )
-    assert entry_mod._embedding_dim_at(str(tmp_path), emb) == 3
-
-    pq.write_table(
-        pa.table({"embedding": pa.array([None], pa.list_(pa.float64()))}),
-        str(tmp_path / "embeddings.parquet"),
-    )
-    with pytest.raises(ValueError, match="empty"):
-        entry_mod._embedding_dim_at(str(tmp_path), emb)

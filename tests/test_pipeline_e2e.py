@@ -168,6 +168,29 @@ def test_resume_from_moved_warehouse(spark, tmp_path):
     assert p.stage_log and all(s.startswith("skip:") for s in p.stage_log)
 
 
+def _edges(out):
+    return sorted(tuple(r) for r in out["verified_edges"].collect())
+
+
+def test_resume_with_added_detector_recomputes(spark, tmp_path):
+    """The detector set is not in the config hash, so each stage's sidecar
+    records it: a minhash-only run resumed with minhash + substring must
+    recompute, not return the old run's outputs."""
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    both = ("minhash", "substring")
+    wh = str(tmp_path / "wh_det")
+    Pipeline(spark, PipelineConfig(warehouse=wh), detectors=("minhash",)).run(df)
+    p = Pipeline(spark, PipelineConfig(warehouse=wh), detectors=both, resume=True)
+    resumed = p.run(df)
+    assert "run:candidate_pairs" in p.stage_log
+    fresh = Pipeline(
+        spark, PipelineConfig(warehouse=str(tmp_path / "wh_fresh")), detectors=both
+    ).run(df)
+    want = _edges(fresh)
+    assert any(e[2] == "substring" for e in want)
+    assert _edges(resumed) == want
+
+
 def test_lineage_and_metrics_written(spark, pipeline_run):
     cfg, df, corpus, out = pipeline_run
 

@@ -22,7 +22,7 @@ def _old_normalize(col):
     """The pre-guard normalization chain (unconditional regex passes)."""
     c = F.lower(F.col(col))
     c = F.translate(c, nm._TRANSLATE_FROM, nm._TRANSLATE_TO)
-    for pattern, repl, _flag in nm.NORM_STEPS:
+    for pattern, repl in nm.NORM_STEPS:
         c = F.regexp_replace(c, pattern, repl)
     return F.trim(c)
 
@@ -46,7 +46,7 @@ def test_guarded_normalize_identical_to_unguarded(spark):
     diff = (
         df.select(
             _old_normalize("text").alias("a"),
-            nm.normalize_text_col("text", CFG).alias("b"),
+            nm.normalize_text_col("text").alias("b"),
         )
         .filter("a is distinct from b")
         .count()
@@ -59,7 +59,7 @@ def test_guarded_normalize_identical_on_fixture_docs(spark):
     diff = (
         docs.select(
             _old_normalize("text").alias("a"),
-            nm.normalize_text_col("text", CFG).alias("b"),
+            nm.normalize_text_col("text").alias("b"),
         )
         .filter("a is distinct from b")
         .count()

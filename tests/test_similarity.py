@@ -65,7 +65,7 @@ def test_lsh_topk_high_recall_on_planted(spark):
         "label",
     )
     both = df.unionByName(scaled)
-    pairs = embedding_near_dup_pairs(both, threshold=0.999, dim=16)
+    pairs = embedding_near_dup_pairs(both, threshold=0.999)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     want = {(i, i + 1000) for i in range(80)}
     assert want <= got
@@ -99,7 +99,7 @@ def test_near_dup_pairs_dense_cluster_recall(spark):
     assert len(want) > 2000  # genuinely dense: ~C(80,2) edges
     got = {
         (r.id_a, r.id_b)
-        for r in embedding_near_dup_pairs(df, threshold=threshold, dim=16).collect()
+        for r in embedding_near_dup_pairs(df, threshold=threshold).collect()
     }
     recall = len(want & got) / len(want)
     assert recall >= 0.95, f"dense-cluster recall {recall:.4f}"
@@ -149,7 +149,7 @@ def test_lsh_topk_reasonable_recall(spark):
         rows, "vec_id long, embedding array<double>, label int"
     )
     bf = brute_force_topk(df, df, k=1).collect()
-    ls = lsh_topk(df, k=1, dim=16, n_planes=8, n_tables=8).collect()
+    ls = lsh_topk(df, k=1, n_planes=8, n_tables=8).collect()
     bf_top = {r.query_id: r.neighbor_id for r in bf}
     ls_top = {r.query_id: r.neighbor_id for r in ls}
     hits = sum(1 for q, n in bf_top.items() if ls_top.get(q) == n)

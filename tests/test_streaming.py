@@ -422,7 +422,7 @@ def test_incremental_substring_dedup_two_waves(spark, stream_env):
     # similarity == 1.0 (full containment)
     norm_len = len(
         spark.createDataFrame([(_BASE_TEXT,)], "text string")
-        .select(normalize_text_col("text", cfg).alias("n"))
+        .select(normalize_text_col("text").alias("n"))
         .first()
         .n
     )
