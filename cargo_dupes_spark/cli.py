@@ -26,8 +26,9 @@ from .operators.groups import (
     filter_ignored,
     stale_ignore_entries,
 )
+from .operators.lsh import ALL_DETECTORS
 from .plans.check import EXIT_ERROR, run_check
-from .plans.pipeline import ALL_DETECTORS, Pipeline
+from .plans.pipeline import Pipeline
 from .plans.report import json_report, text_report
 from .session import build_session
 from .sources.catalog import Catalog

@@ -29,12 +29,15 @@ ClassVars, the number/URL/email masks of functions/normalize.py are always
 on, and the streaming state's partition count is a constant of
 streaming/incremental.py. Recall is measured "at the same shingle/signature
 config" (north_rule), so the geometry is part of what a result means, not an
-input. The streaming tiers also persist keys built from it and never compare
-a config against the state they probe: a changed seed, k, band shape, winnow
+input. The streaming tiers also persist keys built from it, with nothing
+in the state recording the geometry: a changed seed, k, band shape, winnow
 size or mask would make keys that never match the stored state, and a
 changed partition count would probe the wrong partitions. Either way dups
-would go missing without an error. A ClassVar is not a dataclass field, so
-the constructor and load_config reject it and config_hash() leaves it out.
+would go missing without an error. The one key-shaping field left
+settable, fingerprint_bits, is checked against the stored state's own
+column type when a stream starts, and a mismatch raises. A ClassVar is not
+a dataclass field, so the constructor and load_config reject it and
+config_hash() leaves it out.
 """
 
 from __future__ import annotations

@@ -4,8 +4,10 @@ The pipeline's signature stage needs MinHash and/or SimHash over the SAME
 shingle arrays. Evaluating them as two separate pandas UDFs ships the
 (heavy) shingle arrays across the JVM↔Python Arrow boundary twice and
 flattens them twice; this fused UDF does both from one flat buffer and
-returns a struct. Detector flags zero out the unwanted half (nulls), so a
-minhash-only run does no simhash work.
+returns a struct. ``lsh.signatures`` asks only for the sketches the active
+detectors' keys are built from; the unwanted half comes back NULL, so a
+minhash-only run does no simhash work and a simhash-only run no minhash
+work.
 """
 
 from __future__ import annotations

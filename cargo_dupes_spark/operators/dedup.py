@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..functions.normalize import normalize_text_col, n_tokens_col
 from ..operators.connected_components import connected_components
-from ..operators.lsh import chunk_keys_col, pairs_from_buckets, signatures
-from ..operators.verify import reassemble_pairs, verify_pairs
+from ..operators.lsh import DETECTORS, pairs_from_buckets, signatures
+from ..operators.verify import reassemble_pairs
 
 CFG = PipelineConfig()  # shared shingle/signature config for the oracle
 
@@ -172,28 +172,34 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _near_candidates(
-    spark: SparkSession, sf_dir: str
+def _candidates(
+    docs: DataFrame, detector: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(signatures, MinHash/LSH candidate pairs) over the near-copy union.
+    """(signatures, candidate pairs) of one detector over normalized docs.
 
-    The signature chain (normalize→shingle→sketch UDF) is localCheckpointed:
-    banding and both verify joins read it, and without the checkpoint the
-    UDF chain re-runs once per consumer (the production Pipeline checkpoints
-    every stage to the catalog instead). Only the simhash tier reads
-    simhash, so it is not built."""
-    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
+    The signature chain (normalize→sketch/winnow UDF) is localCheckpointed:
+    banding and the verify join read it, and without the checkpoint the UDF
+    chain re-runs once per consumer (the production Pipeline checkpoints
+    every stage to the catalog instead)."""
+    d = DETECTORS[detector]
     sigs = signatures(
         docs.select(
             F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
         ),
         CFG,
-        simhash=False,
+        (detector,),
     ).localCheckpoint(eager=False)
     pairs, _ = pairs_from_buckets(
-        sigs, "band_keys", CFG, "near", collect_flagged=False
+        sigs, d.keys, CFG, d.label, collect_flagged=False
     )
     return sigs, pairs
+
+
+def _near_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash/LSH candidates over the near-copy union, verified."""
+    docs = normalized(with_near_copies(load_documents(spark, sf_dir)))
+    sigs, pairs = _candidates(docs, "minhash")
+    return DETECTORS["minhash"].verify(pairs, sigs, CFG)
 
 
 def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,8 +207,7 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     union. The ORACLE is brute-force SQL Jaccard over token-shingle sets —
     LSH recall at J≈0.9 with 32×4 bands is 1-3e-9, so the outputs match
     exactly; this is the recall contract made into a checkable query."""
-    sigs, pairs = _near_candidates(spark, sf_dir)
-    edges = verify_pairs(pairs, sigs, CFG)
+    edges = _near_edges(spark, sf_dir)
     return single_sorted(
         edges.select(
             F.least(F.col("url_a").cast("long"), F.col("url_b").cast("long")).alias("id_a"),
@@ -214,9 +219,8 @@ def minhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_clusters(spark: SparkSession, sf_dir: str, id_bits: int) -> DataFrame:
-    sigs, pairs = _near_candidates(spark, sf_dir)
     # CC reads the edge set twice (node extraction + the id edges) — pin it
-    edges = verify_pairs(pairs, sigs, CFG).localCheckpoint(eager=False)
+    edges = _near_edges(spark, sf_dir).localCheckpoint(eager=False)
     clusters = connected_components(edges, id_bits=id_bits).select(
         F.col("url").cast("long").alias("doc_id"), "cluster_id"
     )
@@ -282,12 +286,9 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("url", "lang", "simhash")
         .localCheckpoint(eager=False)
     )
+    d = DETECTORS["simhash"]
     pairs, _ = pairs_from_buckets(
-        sigs,
-        chunk_keys_col("simhash", "lang", CFG.simhash_chunks),
-        CFG,
-        "simhash",
-        collect_flagged=False,
+        sigs, d.build_keys(CFG), CFG, d.label, collect_flagged=False
     )
     joined = reassemble_pairs(pairs, sigs, "url", ["simhash"])
     return (
@@ -334,16 +335,11 @@ def substring_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted pair is a full containment and unrelated docs share no >=L-char
     run (random text): the GSA verify's lcs equals the contained text and
     its first-occurrence offset equals strpos()-1."""
-    from ..operators.substring import substring_candidates, verify_substring_pairs
-
     # fan_out: the winnow UDF over the slice would otherwise run as one task
     # (single-row-group input file)
     docs = normalized(fan_out(with_span_copies(load_documents(spark, sf_dir))))
-    fps = docs.select(
-        F.col("doc_id").cast("string").alias("url"), "lang", "norm_text"
-    ).localCheckpoint(eager=False)
-    pairs, _ = substring_candidates(fps, CFG, collect_flagged=False)
-    edges = verify_substring_pairs(pairs, fps, CFG)
+    sigs, pairs = _candidates(docs, "substring")
+    edges = DETECTORS["substring"].verify(pairs, sigs, CFG)
     la = F.col("url_a").cast("long")
     lb = F.col("url_b").cast("long")
     # url_a/url_b order is lexicographic on the string form; re-orient by

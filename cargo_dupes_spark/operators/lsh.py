@@ -28,6 +28,9 @@ Scale notes (the parts that matter at 10^12 docs):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -35,6 +38,8 @@ from ..config import PipelineConfig
 from ..functions.shingles import with_shingles
 from ..functions.signatures import signature_udf
 from ..functions.simhash import simhash_chunk_col
+from .substring import verify_substring_pairs, winnow_keys
+from .verify import verify_pairs
 
 
 def minhash_band_keys_col(cfg: PipelineConfig):
@@ -69,45 +74,78 @@ def chunk_keys_col(hash_col: str, group_col: str, n_chunks: int) -> Column:
     )
 
 
-def signatures(
-    docs: DataFrame,
-    cfg: PipelineConfig,
-    minhash: bool = True,
-    simhash: bool = True,
-) -> DataFrame:
-    """(url, lang, norm_text) -> (url, lang, shingles, simhash, band_keys,
-    chunk_keys), without the simhash columns (simhash, chunk_keys) or the
-    minhash one (band_keys) that were not asked for. The one near-tier
-    sketch builder: the pipeline's signatures stage, the streaming near
-    tier and the oracle queries all call it.
+@dataclass(frozen=True)
+class Detector:
+    """One candidate generator: how it keys docs into buckets and how its
+    candidates verify. The pipeline, the streaming tiers and the oracle
+    slice queries all read it from ``DETECTORS``."""
 
-    The fused UDF computes both sketches in one Arrow transfer. Of the
-    minhash only its LSH keys are kept: banding reads band_keys and verify
-    reads shingles (+ simhash). The ~1 KB/doc raw signature was never read
-    back; not writing it cuts the signatures stage's write volume ~35-40%,
-    and the candidate scans read 8-byte keys, not the sketch.
+    label: str  # its candidate_pairs.tier value
+    tier: str  # the verified_edges / clusters tier it feeds
+    keys: str  # its bucket-key column
+    build_keys: Callable[[PipelineConfig], Column]
+    sketches: tuple[str, ...]  # fused-UDF outputs its keys are built from
+    payload: str  # the per-doc column its verify compares
+    # detectors of one tier share it: a pair found by two is verified once
+    verify: Callable[[DataFrame, DataFrame, PipelineConfig], DataFrame]
+
+
+DETECTORS = {
+    "minhash": Detector(
+        "near", "near", "band_keys", minhash_band_keys_col,
+        ("minhash",), "shingles", verify_pairs,
+    ),
+    "simhash": Detector(
+        "simhash", "near", "chunk_keys",
+        lambda cfg: chunk_keys_col("simhash", "lang", cfg.simhash_chunks),
+        ("simhash",), "shingles", verify_pairs,
+    ),
+    "substring": Detector(
+        "substring", "substring", "winnow_keys", winnow_keys,
+        (), "norm_text", verify_substring_pairs,
+    ),
+}
+ALL_DETECTORS = tuple(DETECTORS)
+
+
+def signatures(
+    docs: DataFrame, cfg: PipelineConfig, detectors: tuple[str, ...]
+) -> DataFrame:
+    """(url, lang, norm_text) -> (url, lang, [norm_text,] [shingles,]
+    [simhash,] one key column per detector, in ``DETECTORS`` order):
+    exactly what the given detectors read. The one sketch builder: the
+    pipeline's signatures stage, the streaming tiers and the oracle queries
+    all call it.
+
+    Near detectors get shingles and ONE fused UDF pass computing only the
+    sketches their keys need. Of the minhash only its LSH keys are kept:
+    banding reads band_keys and verify reads shingles (+ simhash, for its
+    Hamming prefilter). The ~1 KB/doc raw signature was never read back.
+    norm_text is kept as the substring payload; its keys are the winnowed
+    fingerprints of docs of at least min_substring_len chars, and shorter
+    docs get no keys, so they never enter a bucket.
     """
-    sig = signature_udf(
-        cfg.num_perm, cfg.minhash_seed, want_minhash=minhash, want_simhash=simhash
-    )
-    out = (
-        with_shingles(
-            docs.select("url", "lang", "norm_text"),
-            "norm_text",
-            cfg.shingle_k,
-            cfg.shingle_seed,
+    ds = [d for name, d in DETECTORS.items() if name in detectors]
+    sketches = {s for d in ds for s in d.sketches}
+    reads = sketches | {d.payload for d in ds}
+    text = ["norm_text"] if "norm_text" in reads else []
+    out = docs.select("url", "lang", "norm_text")
+    if "shingles" in reads:
+        sig = signature_udf(
+            cfg.num_perm,
+            cfg.minhash_seed,
+            want_minhash="minhash" in sketches,
+            want_simhash="simhash" in sketches,
         )
-        .drop("norm_text")
-        .withColumn("_sig", sig(F.col("shingles")))
-        .select("url", "lang", "shingles", "_sig.minhash", "_sig.simhash")
-        .withColumn("band_keys", minhash_band_keys_col(cfg))
-        .withColumn(
-            "chunk_keys", chunk_keys_col("simhash", "lang", cfg.simhash_chunks)
+        out = (
+            with_shingles(out, "norm_text", cfg.shingle_k, cfg.shingle_seed)
+            .select("url", "lang", *text, "shingles")
+            .withColumn("_sig", sig(F.col("shingles")))
+            .select("url", "lang", *text, "shingles", "_sig.*")
         )
-    )
-    wanted = {"simhash": simhash, "band_keys": minhash, "chunk_keys": simhash}
+    kept = [c for c in ("norm_text", "shingles", "simhash") if c in reads]
     return out.select(
-        "url", "lang", "shingles", *[c for c, on in wanted.items() if on]
+        "url", "lang", *kept, *[d.build_keys(cfg).alias(d.keys) for d in ds]
     )
 
 

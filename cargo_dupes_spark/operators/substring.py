@@ -20,7 +20,9 @@ string confirmation on hash hits — no false positives).
 
 Scale shape: fingerprints explode to ~n_chars/w rows per doc (≈2% of
 corpus chars at w=49), shuffle once on the 8-byte fingerprint, pair within
-buckets (same cap/accounting as LSH), verify only candidates.
+buckets (same cap/accounting as LSH), verify only candidates. The keys
+(``winnow_keys``) are built in the signatures stage, like every detector's
+in ``lsh.DETECTORS``.
 """
 
 from __future__ import annotations
@@ -77,50 +79,22 @@ def winnow(text: str, k: int, w: int) -> np.ndarray:
     return np.unique(mins).view(np.int64)
 
 
-def winnow_udf(k: int, w: int):
+def winnow_keys(cfg: PipelineConfig):
+    """Column: a (lang, norm_text) doc's winnowed fingerprints as bucket
+    keys, hashed with the doc's language so keys never match across
+    languages. A doc shorter than min_substring_len cannot hold a
+    qualifying repeat (the min_sub_nodes gate, X2): the UDF gets a NULL for
+    it, so it gets no keys and never enters a bucket."""
+    k, w = cfg.winnow_kgram, cfg.winnow_window
+
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _winnow(texts: pd.Series) -> pd.Series:
         return pd.Series([winnow(t or "", k, w) for t in texts])
 
-    return _winnow
-
-
-def winnow_keys(cfg: PipelineConfig):
-    """Column: a (lang, norm_text) doc's winnowed fingerprints as bucket
-    keys, hashed with the doc's language so keys never match across
-    languages."""
-    fph = winnow_udf(cfg.winnow_kgram, cfg.winnow_window)(F.col("norm_text"))
-    return F.transform(fph, lambda h: F.xxhash64(F.col("lang"), h))
-
-
-def substring_candidates(
-    fingerprints: DataFrame,
-    cfg: PipelineConfig,
-    collect_flagged: bool = True,
-) -> tuple[DataFrame, list | None]:
-    """docs -> (candidate pairs tier='substring', flagged mega-bucket rows
-    or None; see ``pairs_from_buckets``).
-
-    Docs shorter than min_substring_len can't contain a qualifying repeat
-    and are gated out before the explode (the min_sub_nodes gate, X2).
-    """
-    from .lsh import pairs_from_buckets
-
-    # pin (url, winnow key array): PASS 1 (mega-bucket sizing) and PASS 2
-    # (pair expansion) in pairs_from_buckets both traverse this plan, and
-    # without the checkpoint the winnow UDF — the expensive per-char kernel
-    # — runs over the whole corpus TWICE per invocation (guide §1.2: don't
-    # compute things twice). The pinned frame is one row per eligible doc
-    # and doubles as the url map; MEMORY_AND_DISK so oversized partitions
-    # spill rather than OOM.
-    keyed = (
-        fingerprints.filter(F.length("norm_text") >= cfg.min_substring_len)
-        .select("url", winnow_keys(cfg).alias("band_keys"))
-        .localCheckpoint(eager=False)
+    text = F.when(
+        F.length("norm_text") >= cfg.min_substring_len, F.col("norm_text")
     )
-    return pairs_from_buckets(
-        keyed, "band_keys", cfg, "substring", collect_flagged=collect_flagged
-    )
+    return F.transform(_winnow(text), lambda h: F.xxhash64(F.col("lang"), h))
 
 
 # ---------------------------------------------------------------------------

@@ -112,8 +112,10 @@ def verify_pairs(
     """(url_a, url_b, tier) -> verified edges with exact similarity.
 
     Shingles (and simhash, when ``signatures`` carries it) reach each pair
-    through ``reassemble_pairs``. The Hamming prefilter applies only then;
-    the streaming near tier's signatures have no simhash column.
+    through ``reassemble_pairs``. The Hamming prefilter applies only then:
+    ``lsh.signatures`` builds simhash only for a run with the simhash
+    detector, so the signatures of every other run (the streaming near
+    tier's included) have no simhash column.
     """
     assert_unique_ids(signatures, "url", "verify_pairs(signatures)")
     has_simhash = "simhash" in signatures.columns

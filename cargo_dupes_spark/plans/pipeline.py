@@ -8,10 +8,11 @@ already exists under the same config hash and detector set — the north_rule
 "resumes mid-run" contract. Per-stage lineage and wall-clock metrics are
 appended as they complete.
 
-Detector composition: 'minhash' and 'simhash' are interchangeable
-candidate generators for the near tier (both verified by exact Jaccard);
-'substring' is its own tier with its own clustering (the reference keeps
-sub-unit groups separate from near groups, lib.rs:89-118).
+Detector composition: the stages loop over the active ``lsh.DETECTORS``.
+'minhash' and 'simhash' are interchangeable candidate generators for the
+near tier (both verified by exact Jaccard); 'substring' is its own tier with
+its own clustering (the reference keeps sub-unit groups separate from near
+groups, lib.rs:89-118).
 """
 
 from __future__ import annotations
@@ -32,13 +33,9 @@ from ..operators.exact import (
 from ..operators.groups import cluster_memberships, filter_ignored
 from ..operators import lsh
 from ..operators.stats import assemble_stats_row, stats_totals, tier_aggregates
-from ..operators.substring import substring_candidates, verify_substring_pairs
-from ..operators.verify import verify_pairs
 from ..schemas import CANDIDATE_PAIRS, CLUSTERS, VERIFIED_EDGES
 from ..sources.catalog import Catalog
 from ..sources.ignore import load_ignore
-
-ALL_DETECTORS = ("minhash", "simhash", "substring")
 
 # lineage n_in: the stage whose committed n_out feeds each stage. Fixed, so
 # n_in does not depend on the CC regime or on commit order; an upstream
@@ -64,7 +61,7 @@ class Pipeline:
         detectors: tuple[str, ...] = ("minhash", "substring"),
         resume: bool = False,
     ):
-        unknown = set(detectors) - set(ALL_DETECTORS)
+        unknown = set(detectors) - set(lsh.DETECTORS)
         if unknown:
             raise ValueError(f"unknown detectors: {sorted(unknown)}")
         self.spark = spark
@@ -72,7 +69,9 @@ class Pipeline:
         self.catalog = catalog or Catalog(
             spark, cfg.warehouse, cfg.config_hash()
         )
-        self.detectors = detectors
+        # one form per set (deduped, in table order) for the stage loops,
+        # the sidecar and the resume check
+        self.detectors = tuple(d for d in lsh.DETECTORS if d in detectors)
         self.resume = resume
         self.stage_log: list[str] = []  # executed vs skipped, for tests
         self.stage_rows: dict[str, int | None] = {}  # committed row counts
@@ -196,11 +195,12 @@ class Pipeline:
             ("representatives", lambda: exact_representatives(fingerprints)),
         )
 
-        # simhash is always kept: verify's Hamming prefilter and the
-        # interchangeable-detector contract both read it
+        active = [lsh.DETECTORS[d] for d in self.detectors]
+        # only what the active detectors read; norm_text, the substring
+        # payload, is verified from representatives, not written twice
         signatures = self._stage(
             "signatures",
-            lambda: lsh.signatures(reps, cfg, minhash="minhash" in self.detectors),
+            lambda: lsh.signatures(reps, cfg, self.detectors).drop("norm_text"),
         )
 
         def build_candidates() -> DataFrame:
@@ -212,19 +212,9 @@ class Pipeline:
             # the accounting (the driver-oracle slice queries) keep
             # collect_flagged=False, which saves them a serial job.
             parts, flagged = [], []
-            for detector, keys, tier in (
-                ("minhash", "band_keys", "near"),
-                ("simhash", "chunk_keys", "simhash"),
-            ):
-                if detector in self.detectors:
-                    pairs, f = lsh.pairs_from_buckets(
-                        signatures, keys, cfg, tier, collect_flagged=True
-                    )
-                    parts.append(pairs)
-                    flagged += f
-            if "substring" in self.detectors:
-                pairs, f = substring_candidates(
-                    reps, cfg, collect_flagged=True
+            for d in active:
+                pairs, f = lsh.pairs_from_buckets(
+                    signatures, d.keys, cfg, d.label, collect_flagged=True
                 )
                 parts.append(pairs)
                 flagged += f
@@ -245,33 +235,43 @@ class Pipeline:
 
         candidates = self._stage("candidate_pairs", build_candidates)
 
+        # tiers with no active detector produce NO edges — running the CC
+        # iteration loop and the membership joins over provably-empty frames
+        # still costs real Spark jobs per tier (a measured fixed cost that
+        # never scales with cores), so inactive tiers are skipped outright
+        by_tier: dict[str, list[lsh.Detector]] = {}
+        for d in active:
+            by_tier.setdefault(d.tier, []).append(d)
+        active_tiers = tuple(by_tier)
+
         def build_edges() -> DataFrame:
             parts = []
-            near_detectors = {"minhash", "simhash"} & set(self.detectors)
-            if near_detectors:
-                near_cand = candidates.filter(
-                    F.col("tier").isin("near", "simhash")
+            for tier, ds in by_tier.items():
+                cand = candidates.filter(
+                    F.col("tier").isin(*[d.label for d in ds])
                 )
-                # a pair found by both detectors verifies once. With a
-                # SINGLE near detector the pairs are already distinct
+                # a pair found by two detectors of a tier verifies once.
+                # With a SINGLE detector the pairs are already distinct
                 # (pairs_from_buckets dedups at the nid level), so the
                 # cross-detector groupBy would be a pure extra shuffle of
-                # the candidate set — skip it (guide §2.4).
-                if len(near_detectors) > 1:
-                    near_cand = (
-                        near_cand.groupBy("url_a", "url_b")
-                        .agg(F.min("tier").alias("tier"))  # 'near' < 'simhash'
+                # the candidate set — skip it (guide §2.4). min() keeps
+                # 'near' for a pair both find, exempting it from simhash's
+                # Hamming prefilter.
+                if len(ds) > 1:
+                    cand = cand.groupBy("url_a", "url_b").agg(
+                        F.min("tier").alias("tier")
                     )
+                # shingles (+ simhash) come from signatures, norm_text from
+                # representatives. Substring edges carry span offsets (X3);
+                # near edges get NULL spans via allowMissingColumns
+                payloads = (
+                    signatures if ds[0].payload in signatures.columns else reps
+                )
                 parts.append(
-                    verify_pairs(near_cand, signatures, cfg).withColumn(
-                        "tier", F.lit("near")
+                    ds[0].verify(cand, payloads, cfg).withColumn(
+                        "tier", F.lit(tier)
                     )
                 )
-            if "substring" in self.detectors:
-                sub_cand = candidates.filter(F.col("tier") == "substring")
-                # substring edges carry span offsets (X3); near edges get
-                # NULL spans via allowMissingColumns
-                parts.append(verify_substring_pairs(sub_cand, reps, cfg))
             if not parts:
                 return self.spark.createDataFrame([], VERIFIED_EDGES)
             out = parts[0]
@@ -280,19 +280,6 @@ class Pipeline:
             return out
 
         edges = self._stage("verified_edges", build_edges)
-
-        # tiers with no active detector produce NO edges — running the CC
-        # iteration loop and the membership joins over provably-empty frames
-        # still costs real Spark jobs per tier (a measured fixed cost that
-        # never scales with cores), so inactive tiers are skipped outright
-        active_tiers = tuple(
-            t
-            for t, on in (
-                ("near", {"minhash", "simhash"} & set(self.detectors)),
-                ("substring", "substring" in self.detectors),
-            )
-            if on
-        )
 
         def build_clusters() -> DataFrame:
             outs = []

@@ -106,12 +106,13 @@ class Catalog:
     ) -> DataFrame:
         """Write + read back: commits the stage AND cuts lineage (the
         DataFrame equivalent of the reference finishing a pipeline step).
-        The sidecar also records the run's detector set, which is not part
-        of the config hash; it is stamped after the data and the hash, so a
-        crash in between leaves a sidecar that ``is_complete`` rejects."""
+        The sidecar also records the run's detector set (the pipeline's one
+        form: deduped, in table order), which is not part of the config
+        hash; it is stamped after the data and the hash, so a crash in
+        between leaves a sidecar that ``is_complete`` rejects."""
         self.write(df, name)
         meta = self._read_meta(name)
-        meta["detectors"] = sorted(detectors)
+        meta["detectors"] = list(detectors)
         self._meta_path(name).write_text(json.dumps(meta))
         return self.read(name)
 
@@ -130,7 +131,7 @@ class Catalog:
         meta = self._read_meta(name)
         return (
             meta.get("config_hash") == self.config_hash
-            and meta.get("detectors") == sorted(detectors)
+            and meta.get("detectors") == list(detectors)
         )
 
     def drop(self, name: str) -> None:

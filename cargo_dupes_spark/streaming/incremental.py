@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import shutil
 import uuid
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,9 +51,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.exact import apply_gates, prepare_columns
-from ..operators.lsh import pairs_from_buckets, signatures
-from ..operators.substring import verify_substring_pairs, winnow_keys
-from ..operators.verify import verify_pairs
+from ..operators.lsh import DETECTORS, pairs_from_buckets, signatures
 from ..schemas import WEB_PAGES
 from ..sources.catalog import Catalog
 
@@ -191,30 +188,45 @@ def _process_exact_tier(
 
 @dataclass(frozen=True)
 class _Tier:
-    """One keyed-state detector tier: where its state lives and how its
-    candidates verify. ``out`` are SQL projections of the verify output
-    kept in the dups table next to (url, matched_url, batch_id)."""
+    """One keyed-state tier: the batch detector it runs (its keys, label,
+    payload and verify come from ``lsh.DETECTORS``) and where its state
+    lives. ``out`` are SQL projections of the verify output kept in the
+    dups table next to (url, matched_url, batch_id)."""
 
-    name: str  # pair tier label; metrics land under stage 'stream_<name>'
+    detector: str
     keys_table: str
     payload_table: str
     dups_table: str
-    payload_col: str
-    dropped_metric: str
-    verify: Callable[[DataFrame, DataFrame, PipelineConfig], DataFrame]
     out: tuple[str, ...]
 
 
-_NEAR = _Tier(
-    "near", BANDS_TABLE, SIGS_TABLE, NEAR_DUPS_TABLE, "shingles",
-    "dropped_band_keys", verify_pairs, ("round(similarity, 6) AS similarity",),
-)
-_SUBSTRING = _Tier(
-    "substring", WINNOW_TABLE, TEXTS_TABLE, SUBSTR_DUPS_TABLE, "norm_text",
-    "dropped_winnow_keys", verify_substring_pairs,
-    ("span_a_end - span_a_start AS lcs_len",
-     "round(similarity, 6) AS similarity"),
-)
+_TIERS = {
+    "near": _Tier(
+        "minhash", BANDS_TABLE, SIGS_TABLE, NEAR_DUPS_TABLE,
+        ("round(similarity, 6) AS similarity",),
+    ),
+    "substring": _Tier(
+        "substring", WINNOW_TABLE, TEXTS_TABLE, SUBSTR_DUPS_TABLE,
+        ("span_a_end - span_a_start AS lcs_len",
+         "round(similarity, 6) AS similarity"),
+    ),
+}
+
+
+def _process_tier(
+    tier: _Tier,
+    new_docs: DataFrame,
+    catalog: Catalog,
+    cfg: PipelineConfig,
+    batch_id: int,
+) -> None:
+    """The batch tier's own sketches and keys of the canonical ``new_docs``
+    (recall is measured at identical config) into ``_probe_state``. A doc
+    with no keys (shorter than min_substring_len) stays out of state."""
+    keys = DETECTORS[tier.detector].keys
+    docs = signatures(new_docs, cfg, (tier.detector,)).filter(F.size(keys) > 0)
+    # one UDF pass; many downstream consumers
+    _probe_state(tier, docs.localCheckpoint(), catalog, cfg, batch_id)
 
 
 def _probe_state(
@@ -225,8 +237,8 @@ def _probe_state(
     batch_id: int,
 ) -> None:
     """One micro-batch of a keyed-state tier: the batch's one-row-per-url
-    (url, lang, payload_col, band_keys) ``docs`` -> verified dups appended
-    to ``tier.dups_table``; the docs that are not dups enter payload state,
+    (url, lang, payload, keys) ``docs`` -> verified dups appended to
+    ``tier.dups_table``; the docs that are not dups enter payload state,
     then key state.
 
     Candidates are the batch's in-batch pairs (the batch tier's
@@ -245,14 +257,15 @@ def _probe_state(
     appends before keys and replay detection keys on keys (the later
     commit): a crash between the two re-appends payload rows as exact-row
     duplicates, collapsed by the full-row dropDuplicates at every read."""
-    keys = docs.select("url", F.explode("band_keys").alias("band_key"))
-    pairs, flagged = pairs_from_buckets(docs, "band_keys", cfg, tier.name)
-    stage = f"stream_{tier.name}"
+    d = DETECTORS[tier.detector]
+    keys = docs.select("url", F.explode(d.keys).alias("band_key"))
+    pairs, flagged = pairs_from_buckets(docs, d.keys, cfg, d.label)
+    stage = f"stream_{d.label}"
     if flagged:
         catalog.record_metrics(
             stage, {"flagged_batch_buckets": float(len(flagged))}
         )
-    texts = docs.select("url", tier.payload_col)
+    texts = docs.select("url", d.payload)
     replayed = None
     if catalog.exists(tier.keys_table):
         state = pruned(
@@ -265,7 +278,7 @@ def _probe_state(
         )
         n_hot = hot.count()
         if n_hot:
-            catalog.record_metrics(stage, {tier.dropped_metric: float(n_hot)})
+            catalog.record_metrics(stage, {f"dropped_{d.keys}": float(n_hot)})
             state = state.join(
                 F.broadcast(hot.select("band_key")), "band_key", "left_anti"
             )
@@ -285,19 +298,19 @@ def _probe_state(
             texts = texts.unionByName(
                 pruned(catalog, tier.payload_table, m_buckets)
                 .dropDuplicates()  # crash-residue insurance (exact-row dups)
-                .select("url", tier.payload_col)
+                .select("url", d.payload)
                 .join(docs.select("url"), "url", "left_anti")
             )
             pairs = pairs.unionByName(
                 cross.select(
                     F.col("matched_url").alias("url_a"),
                     F.col("url").alias("url_b"),
-                    F.lit(tier.name).alias("tier"),
+                    F.lit(d.label).alias("tier"),
                 )
             )
 
     batch_col = F.lit(int(batch_id)).alias("batch_id")
-    dups = tier.verify(pairs, texts, cfg).select(
+    dups = d.verify(pairs, texts, cfg).select(
         F.col("url_b").alias("url"),
         F.col("url_a").alias("matched_url"),
         *[F.expr(e) for e in tier.out],
@@ -310,43 +323,15 @@ def _probe_state(
         to_state = to_state.join(replayed, "url", "left_anti")
     to_state = to_state.localCheckpoint()  # both appends read it
     for table, rows in (
-        (tier.payload_table, to_state.select("url", "lang", tier.payload_col)),
+        (tier.payload_table, to_state.select("url", "lang", d.payload)),
         (tier.keys_table,
-         to_state.select("url", F.explode("band_keys").alias("band_key"))),
+         to_state.select("url", F.explode(d.keys).alias("band_key"))),
     ):
         catalog.append(
             rows.select("*", batch_col, _bucket_col(table)),
             table,
             partition_by=[_BUCKETS[table][0]],
         )
-
-
-def _process_near_tier(
-    new_docs: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
-) -> None:
-    """Near tier: the batch tier's shingles, fused MinHash and 32-band LSH
-    keys (recall is measured at identical shingle/signature config),
-    verified by exact Jaccard."""
-    sigs = signatures(  # one Arrow pass; many downstream consumers
-        new_docs, cfg, simhash=False
-    ).localCheckpoint()
-    _probe_state(_NEAR, sigs, catalog, cfg, batch_id)
-
-
-def _process_substring_tier(
-    new_docs: DataFrame, catalog: Catalog, cfg: PipelineConfig, batch_id: int
-) -> None:
-    """Substring tier: a doc that CONTAINS (or is contained in) another at
-    >= min_substring_len chars, found through the batch tier's winnowed
-    fingerprints and verified by the exact rolling-hash LCS."""
-    eligible = (
-        new_docs.filter(F.length("norm_text") >= cfg.min_substring_len)
-        .select(
-            "url", "lang", "norm_text", winnow_keys(cfg).alias("band_keys")
-        )
-        .localCheckpoint()  # one winnow UDF pass; many downstream consumers
-    )
-    _probe_state(_SUBSTRING, eligible, catalog, cfg, batch_id)
 
 
 def incremental_dedup(
@@ -376,7 +361,7 @@ def incremental_dedup(
     directory and stops — the deterministic test/backfill mode; without it
     the query runs continuously (production tail -f of the drop dir).
     """
-    unknown = set(tiers) - {"exact", "near", "substring"}
+    unknown = set(tiers) - {"exact", *_TIERS}
     if unknown:
         raise ValueError(f"unknown streaming tiers: {sorted(unknown)}")
     if "exact" not in tiers:
@@ -387,8 +372,18 @@ def incremental_dedup(
             "the 'exact' tier is mandatory ('near'/'substring' build on it)"
         )
     _migrate_legacy_state(catalog)
-    near = "near" in tiers
-    substring = "substring" in tiers
+    # the one key-shaping knob still settable: state at another width would
+    # take the batch's fingerprints as a foreign type, match none of them
+    # and fail every later full read, so refuse before any batch runs
+    want = "string" if cfg.fingerprint_bits == 128 else "bigint"
+    if catalog.exists(STATE_TABLE):
+        have = dict(catalog.read(STATE_TABLE).dtypes)["fingerprint"]
+        if have != want:
+            raise ValueError(
+                f"{STATE_TABLE} holds {have} fingerprints, but "
+                f"fingerprint_bits={cfg.fingerprint_bits} needs {want}"
+            )
+    keyed = [t for name, t in _TIERS.items() if name in tiers]
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         # localCheckpoint: the fingerprint UDF chain is referenced by four+
@@ -396,15 +391,13 @@ def incremental_dedup(
         # materialize the batch-sized frame once instead of re-normalizing
         # the batch per consumer
         fps = _fingerprint_batch(
-            batch, cfg, with_text=near or substring
+            batch, cfg, with_text=bool(keyed)
         ).localCheckpoint()
         new_docs = _process_exact_tier(fps, catalog, cfg, batch_id)
         # near and substring are INDEPENDENT detectors over the same
         # exact-canonical docs (the batch pipeline's parallel-detector shape)
-        if near:
-            _process_near_tier(new_docs, catalog, cfg, batch_id)
-        if substring:
-            _process_substring_tier(new_docs, catalog, cfg, batch_id)
+        for tier in keyed:
+            _process_tier(tier, new_docs, catalog, cfg, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(_process)

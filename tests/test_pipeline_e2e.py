@@ -345,23 +345,99 @@ def test_wide_fingerprints_same_grouping(spark, tmp_path, pipeline_run):
     assert filtered.filter(F.col("group_fp") == fp).count() == 0
 
 
+def test_repeated_and_permuted_detectors_are_one_run(spark, tmp_path):
+    """A detector tuple is deduped and put in table order once: a repeated
+    name runs its detector once, and a permuted tuple resumes a run of the
+    same set with all 9 stages skipped."""
+    df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
+    both = ("minhash", "substring")
+    wh = str(tmp_path / "wh_once")
+    single = Pipeline(spark, PipelineConfig(warehouse=wh), detectors=both).run(df)
+    repeated = Pipeline(
+        spark,
+        PipelineConfig(warehouse=str(tmp_path / "wh_twice")),
+        detectors=("minhash", "minhash", "substring", "substring"),
+    ).run(df)
+
+    def cands(out):
+        return sorted(tuple(r) for r in out["candidate_pairs"].collect())
+
+    assert cands(single)
+    assert cands(repeated) == cands(single)
+    p = Pipeline(
+        spark,
+        PipelineConfig(warehouse=wh),
+        detectors=("substring", "minhash"),
+        resume=True,
+    )
+    p.run(df)
+    assert len(p.stage_log) == 9
+    assert all(s.startswith("skip:") for s in p.stage_log)
+
+
+def test_detectors_compose(spark, tmp_path, pipeline_run):
+    """The all-three run's verified edges are the single-detector runs'
+    edges combined, tier by tier, with the same similarity: the near tier
+    is minhash's edges united with simhash's, the substring tier is
+    substring's alone. No detector changes another's output."""
+    _, df, _, out = pipeline_run
+
+    def tier_edges(edges, tier):
+        cols = ["url_a", "url_b", "similarity"]
+        if tier == "substring":  # its edges carry span offsets (X3)
+            cols += [c for c in edges.columns if c.startswith("span_")]
+        rows = edges.filter(F.col("tier") == tier).select(*cols).collect()
+        assert len(rows) == len(set(rows))
+        return set(rows)
+
+    single = {
+        d: Pipeline(
+            spark, PipelineConfig(warehouse=str(tmp_path / d)), detectors=(d,)
+        ).run(df)["verified_edges"]
+        for d in ("minhash", "simhash", "substring")
+    }
+    near = tier_edges(single["minhash"], "near") | tier_edges(
+        single["simhash"], "near"
+    )
+    assert near and tier_edges(out["verified_edges"], "near") == near
+    substring = tier_edges(single["substring"], "substring")
+    assert substring
+    assert tier_edges(out["verified_edges"], "substring") == substring
+    assert tier_edges(single["substring"], "near") == set()
+    assert tier_edges(single["minhash"], "substring") == set()
+
+
 @pytest.mark.parametrize(
     "case, columns",
     [
-        ("minhash", ["url", "lang", "shingles", "simhash", "band_keys", "chunk_keys"]),
+        ("minhash", ["url", "lang", "shingles", "band_keys"]),
         ("simhash", ["url", "lang", "shingles", "simhash", "chunk_keys"]),
+        ("substring", ["url", "lang", "winnow_keys"]),
+        (
+            "all",
+            [
+                "url", "lang", "shingles", "simhash",
+                "band_keys", "chunk_keys", "winnow_keys",
+            ],
+        ),
         ("stream_near", ["url", "lang", "shingles", "band_keys"]),
+        ("stream_substring", ["url", "lang", "norm_text", "winnow_keys"]),
     ],
-    ids=["minhash", "simhash", "stream_near"],
+    ids=[
+        "minhash", "simhash", "substring", "all", "stream_near",
+        "stream_substring",
+    ],
 )
 def test_signature_columns(spark, tmp_path, monkeypatch, case, columns):
     """The sketch builder's columns, by name and order, as each caller gets
     them: the pipeline's committed signatures table (resume and the
-    candidate stage read it by column name) and the streaming near tier's
-    probe input."""
+    candidate stage read it by column name), which holds only what the
+    run's detectors read, and each streaming tier's probe input."""
+    from cargo_dupes_spark.operators.lsh import ALL_DETECTORS
+
     df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
     cfg = PipelineConfig(warehouse=str(tmp_path / "wh_sigs"))
-    if case == "stream_near":
+    if case.startswith("stream_"):
         from cargo_dupes_spark.streaming import incremental
 
         seen = {}
@@ -369,9 +445,11 @@ def test_signature_columns(spark, tmp_path, monkeypatch, case, columns):
             incremental, "_probe_state",
             lambda tier, docs, *a: seen.setdefault("docs", docs),
         )
-        incremental._process_near_tier(prepare(df, cfg), None, cfg, 0)
+        tier = incremental._TIERS[case.removeprefix("stream_")]
+        incremental._process_tier(tier, prepare(df, cfg), None, cfg, 0)
         got = seen["docs"]
     else:
-        got = Pipeline(spark, cfg, detectors=(case,)).run(df)["signatures"]
+        detectors = ALL_DETECTORS if case == "all" else (case,)
+        got = Pipeline(spark, cfg, detectors=detectors).run(df)["signatures"]
     assert got.columns == columns
     assert got.count() > 0

@@ -136,6 +136,47 @@ def test_cli_stream_subcommand(spark, stream_env, tmp_path):
     assert "1 duplicate arrivals recorded" in proc.stdout
 
 
+def test_restart_at_other_fingerprint_width_is_refused(
+    spark, stream_env, monkeypatch, capsys, tmp_path
+):
+    """A stream drained at fingerprint_bits=64 and restarted on the same
+    warehouse at 128 would append STRING fingerprints into the BIGINT
+    state: the cross-wave exact dup would be lost without an error and
+    every later state read would fail. The restart raises before any batch
+    runs (the CLI exits 2), the state still reads, and a restart at the
+    stored width then finds the dup."""
+    import dataclasses
+
+    from cargo_dupes_spark import cli
+
+    cfg, catalog, drop_dir, ckpt = stream_env
+    _pages(spark, WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    _pages(spark, WAVE2).coalesce(1).write.mode("append").parquet(drop_dir)
+
+    wide = dataclasses.replace(cfg, fingerprint_bits=128)
+    with pytest.raises(ValueError, match="fingerprint_bits"):
+        incremental_dedup(
+            read_web_pages_stream(spark, drop_dir), catalog, wide, ckpt
+        )
+    monkeypatch.setattr(cli, "build_session", lambda **_: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    toml = tmp_path / "wide.toml"
+    toml.write_text("[pipeline]\nfingerprint_bits = 128\n")
+    code = cli.main([
+        "--config", str(toml), "--warehouse", cfg.warehouse,
+        "stream", drop_dir, "--checkpoint", ckpt,
+    ])
+    assert code == 2
+    assert "fingerprint_bits" in capsys.readouterr().err
+
+    state = {r.url for r in load_stream_state(catalog).collect()}
+    assert state == {"http://a.example/1", "http://a.example/3"}
+    _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
+    dups = {(r.url, r.matched_url) for r in load_stream_dups(catalog).collect()}
+    assert ("http://b.example/9", "http://a.example/1") in dups
+
+
 def test_windowed_doc_stats(spark, stream_env):
     _, _, drop_dir, ckpt = stream_env
     rows = [

@@ -137,15 +137,19 @@ def test_containment_similarity(spark, fixture_corpus):
     from pyspark.sql import functions as F
 
     from cargo_dupes_spark.operators.exact import prepare
-    from cargo_dupes_spark.operators.substring import (
-        substring_candidates,
-        verify_substring_pairs,
+    from cargo_dupes_spark.operators.lsh import (
+        DETECTORS,
+        pairs_from_buckets,
+        signatures,
     )
+    from cargo_dupes_spark.operators.substring import verify_substring_pairs
 
     df, corpus = fixture_corpus
     cfg = CFG
     fps = prepare(df, cfg)
-    pairs, dropped = substring_candidates(fps, cfg)
+    d = DETECTORS["substring"]
+    sigs = signatures(fps, cfg, ("substring",))
+    pairs, dropped = pairs_from_buckets(sigs, d.keys, cfg, d.label)
     edges = verify_substring_pairs(pairs, fps, cfg)
     texts = {r.url: r.norm_text for r in fps.select("url", "norm_text").collect()}
     found = {}
