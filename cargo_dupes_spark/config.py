@@ -108,14 +108,24 @@ class PipelineConfig:
     winnow_window: ClassVar[int] = 49
 
     def config_hash(self) -> str:
-        """Deterministic hash of all knobs — recorded with every metrics row
-        so a resume only skips stages produced under the identical config
-        (reference analog: a changed dupes.toml invalidates prior results).
-        The IO paths are left out: they say where outputs live, not what
-        they hold, so a moved warehouse still resumes."""
+        """Deterministic hash of the knobs that shape outputs — recorded
+        with every metrics row so a resume only skips stages produced under
+        the identical config (reference analog: a changed dupes.toml
+        invalidates prior results). Left out: the IO paths, which say where
+        outputs live, not what they hold, so a moved warehouse still
+        resumes; and the CI-gate thresholds, which only ``run_check`` reads
+        after the pipeline has run, so a changed gate re-checks committed
+        outputs without recomputing them."""
         knobs = dataclasses.asdict(self)
-        for io_path in ("warehouse", "checkpoint_dir"):
-            del knobs[io_path]
+        for key in (
+            "warehouse",
+            "checkpoint_dir",
+            "max_exact_groups",
+            "max_near_groups",
+            "max_exact_percent",
+            "max_near_percent",
+        ):
+            del knobs[key]
         payload = json.dumps(knobs, sort_keys=True, default=str)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 

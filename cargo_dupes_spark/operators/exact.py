@@ -148,20 +148,20 @@ def exact_memberships(fingerprints: DataFrame) -> DataFrame:
 
 
 def exact_representatives(fingerprints: DataFrame) -> DataFrame:
-    """One representative url per distinct fingerprint (min url — the
-    deterministic member ordering of grouper.rs:82-88). Near-dup stages run
-    on representatives only: the reference excludes exact-matched units from
-    the pairwise pool (J1, grouper.rs:100-108); carrying one representative
-    keeps exact-dup docs participating in near-dup recall accounting
-    (SURVEY §7.4 risk 2).
+    """One representative (url, lang, norm_text) per distinct fingerprint
+    (min url — the deterministic member ordering of grouper.rs:82-88): the
+    input of the signatures stage, which carries only these columns. Near
+    and substring detection run on representatives only: the reference
+    excludes exact-matched units from the pairwise pool (J1,
+    grouper.rs:100-108); carrying one representative keeps exact-dup docs
+    participating in near-dup recall accounting (SURVEY §7.4 risk 2).
     """
-    other = [c for c in fingerprints.columns if c not in ("fingerprint", "url")]
     # min over a struct ordered by url = the whole min-url row in ONE shuffle
     # (a groupBy + join-back would shuffle the full table twice)
     return (
         fingerprints.groupBy("fingerprint")
-        .agg(F.min(F.struct("url", *other)).alias("_rep"))
-        .select("fingerprint", "_rep.url", *[f"_rep.{c}" for c in other])
+        .agg(F.min(F.struct("url", "lang", "norm_text")).alias("_rep"))
+        .select("_rep.url", "_rep.lang", "_rep.norm_text")
     )
 
 

@@ -230,24 +230,6 @@ def longest_common_substring_span(
     return lo, start, sb_text.find(sub)
 
 
-def longest_common_substring_len(sa: str, sb: str, min_len: int) -> int:
-    """Exact LCS length (in code points) if >= min_len else 0 — the same
-    vectorized binary search as longest_common_substring_span, positions
-    discarded."""
-    a = np.frombuffer(sa.encode("utf-32-le"), dtype=np.uint32)
-    b = np.frombuffer(sb.encode("utf-32-le"), dtype=np.uint32)
-    lo, hi = min_len, min(len(a), len(b))
-    if hi < lo or _first_common_kgram(a, b, lo) is None:
-        return 0
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if _first_common_kgram(a, b, mid) is not None:
-            lo = mid
-        else:
-            hi = mid - 1
-    return lo
-
-
 _SPAN_RESULT = T.StructType(
     [
         T.StructField("lcs_len", T.LongType()),

@@ -8,6 +8,12 @@ already exists under the same config hash and detector set — the north_rule
 "resumes mid-run" contract. Per-stage lineage and wall-clock metrics are
 appended as they complete.
 
+The eight stages: fingerprints → exact_memberships ∥ signatures →
+candidate_pairs → verified_edges → clusters → memberships → stats. The
+signatures stage runs on one representative per exact group (J1,
+grouper.rs:100-108) and is the one payload table: it holds each active
+detector's bucket keys and the column its verify reads.
+
 Detector composition: the stages loop over the active ``lsh.DETECTORS``.
 'minhash' and 'simhash' are interchangeable candidate generators for the
 near tier (both verified by exact Jaccard); 'substring' is its own tier with
@@ -33,7 +39,6 @@ from ..operators.exact import (
 from ..operators.groups import cluster_memberships, filter_ignored
 from ..operators import lsh
 from ..operators.stats import assemble_stats_row, stats_totals, tier_aggregates
-from ..schemas import CANDIDATE_PAIRS, CLUSTERS, VERIFIED_EDGES
 from ..sources.catalog import Catalog
 from ..sources.ignore import load_ignore
 
@@ -42,8 +47,7 @@ from ..sources.ignore import load_ignore
 # skipped on resume (or absent, for fingerprints) records NULL.
 UPSTREAM = {
     "exact_memberships": "fingerprints",
-    "representatives": "fingerprints",
-    "signatures": "representatives",
+    "signatures": "fingerprints",
     "candidate_pairs": "signatures",
     "verified_edges": "candidate_pairs",
     "clusters": "verified_edges",
@@ -64,6 +68,10 @@ class Pipeline:
         unknown = set(detectors) - set(lsh.DETECTORS)
         if unknown:
             raise ValueError(f"unknown detectors: {sorted(unknown)}")
+        if not detectors:
+            raise ValueError(
+                f"no detectors; choose from {sorted(lsh.DETECTORS)}"
+            )
         self.spark = spark
         self.cfg = cfg
         self.catalog = catalog or Catalog(
@@ -134,8 +142,8 @@ class Pipeline:
         """Run INDEPENDENT stages' jobs concurrently from driver threads
         (Spark's scheduler interleaves their tasks; concurrent job
         submission is a supported pattern). The stage DAG has genuine
-        branches — exact_memberships and representatives both depend only
-        on fingerprints — and running them serially adds one full stage of
+        branches — exact_memberships and signatures both depend only on
+        fingerprints — and running them serially adds one full stage of
         fixed commit latency to the critical path per branch: pure
         non-scaling cost at every cluster size. Resume, lineage and metrics
         are per-stage as ever."""
@@ -186,22 +194,21 @@ class Pipeline:
             cfg,
         )
 
-        # exact tier and representatives are independent branches off the
-        # fingerprints table — their stage commits run concurrently.
+        # the exact tier and the signatures are independent branches off
+        # the fingerprints table — their stage commits run concurrently.
         # (J1 pre-exclusion: near/substring tiers operate on one
         # representative per distinct fingerprint, grouper.rs:100-108)
-        exact, reps = self._stages_concurrent(
+        exact, signatures = self._stages_concurrent(
             ("exact_memberships", lambda: exact_memberships(fingerprints)),
-            ("representatives", lambda: exact_representatives(fingerprints)),
+            (
+                "signatures",
+                lambda: lsh.signatures(
+                    exact_representatives(fingerprints), cfg, self.detectors
+                ),
+            ),
         )
 
         active = [lsh.DETECTORS[d] for d in self.detectors]
-        # only what the active detectors read; norm_text, the substring
-        # payload, is verified from representatives, not written twice
-        signatures = self._stage(
-            "signatures",
-            lambda: lsh.signatures(reps, cfg, self.detectors).drop("norm_text"),
-        )
 
         def build_candidates() -> DataFrame:
             # collect_flagged=True (eager PASS 1): the pipeline CONSUMES the
@@ -226,8 +233,6 @@ class Pipeline:
                 counts[f"{row['action']}_buckets"] += 1.0
             self.catalog.record_metrics("candidates", counts)
 
-            if not parts:
-                return self.spark.createDataFrame([], CANDIDATE_PAIRS)
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
@@ -261,19 +266,14 @@ class Pipeline:
                     cand = cand.groupBy("url_a", "url_b").agg(
                         F.min("tier").alias("tier")
                     )
-                # shingles (+ simhash) come from signatures, norm_text from
-                # representatives. Substring edges carry span offsets (X3);
-                # near edges get NULL spans via allowMissingColumns
-                payloads = (
-                    signatures if ds[0].payload in signatures.columns else reps
-                )
+                # every payload (shingles, simhash, norm_text) comes from
+                # signatures. Substring edges carry span offsets (X3); near
+                # edges get NULL spans via allowMissingColumns
                 parts.append(
-                    ds[0].verify(cand, payloads, cfg).withColumn(
+                    ds[0].verify(cand, signatures, cfg).withColumn(
                         "tier", F.lit(tier)
                     )
                 )
-            if not parts:
-                return self.spark.createDataFrame([], VERIFIED_EDGES)
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p, allowMissingColumns=True)
@@ -290,8 +290,6 @@ class Pipeline:
                         tier_edges, id_bits=cfg.fingerprint_bits
                     ).withColumn("tier", F.lit(tier))
                 )
-            if not outs:
-                return self.spark.createDataFrame([], CLUSTERS)
             out = outs[0]
             for p in outs[1:]:
                 out = out.unionByName(p)

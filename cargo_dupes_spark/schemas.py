@@ -3,16 +3,12 @@
 The reference's schema is fixed at compile time (Rust structs,
 ``dupes-core/src/code_unit.rs:41-55``). Here a schema is declared where code
 builds a table from rows or needs an empty frame of the right shape: the
-web_pages input, the empty candidate/edge/cluster frames of a run with no
-candidates, the driver-side metrics and lineage appends, the ignore list,
-and the memberships shape the report tests build frames of. Stage outputs
-are not checked against these declarations: ``Catalog.read`` lets Spark
-infer each committed table's schema from its parquet files.
+web_pages input, the driver-side metrics and lineage appends, the ignore
+list, and the memberships shape the report tests build frames of. Stage
+outputs are not checked against these declarations: ``Catalog.read`` lets
+Spark infer each committed table's schema from its parquet files.
 
   web_pages       — input (BASELINE.json input_hint shape)
-  candidate_pairs — LSH/SimHash/substring candidates pre-verification
-  verified_edges  — pairs passing Jaccard/Hamming/substring verification
-  clusters        — connected-components labels (url -> cluster_id)
   memberships     — normalized group membership (scales past collect_list)
   metrics         — per-stage run metrics, long format
   lineage         — per-stage per-partition row accounting (north_rule)
@@ -30,38 +26,6 @@ WEB_PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-CANDIDATE_PAIRS = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("tier", T.StringType(), False),  # near|simhash|substring
-    ]
-)
-
-VERIFIED_EDGES = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("tier", T.StringType(), False),
-        T.StructField("similarity", T.DoubleType(), True),
-        # substring-tier only (NULL on near edges): half-open char spans of
-        # the longest common substring in each side's norm_text — the
-        # reference's member line ranges (code_unit.rs:41-55, SURVEY X3)
-        T.StructField("span_a_start", T.LongType(), True),
-        T.StructField("span_a_end", T.LongType(), True),
-        T.StructField("span_b_start", T.LongType(), True),
-        T.StructField("span_b_end", T.LongType(), True),
-    ]
-)
-
-CLUSTERS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-        T.StructField("tier", T.StringType(), False),
     ]
 )
 

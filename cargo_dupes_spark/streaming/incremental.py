@@ -42,8 +42,6 @@ deterministic. The dups loaders likewise dedup on (url, matched_url).
 
 from __future__ import annotations
 
-import shutil
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -371,7 +369,18 @@ def incremental_dedup(
         raise ValueError(
             "the 'exact' tier is mandatory ('near'/'substring' build on it)"
         )
-    _migrate_legacy_state(catalog)
+    # refuse state this layout cannot read, before the width check reads
+    # it: flat part-files in the stream_fps root (the layout before the
+    # state was partitioned) beside the fp_bucket= dirs a batch appends
+    # make a mixed-depth listing Spark will not read
+    if not catalog.iceberg and any(
+        catalog._path(STATE_TABLE).glob("*.parquet")
+    ):
+        raise ValueError(
+            f"{STATE_TABLE} holds flat part-files (the unpartitioned layout "
+            f"of earlier versions); rebuild the state partitioned by "
+            f"fp_bucket or start on a fresh warehouse"
+        )
     # the one key-shaping knob still settable: state at another width would
     # take the batch's fingerprints as a foreign type, match none of them
     # and fail every later full read, so refuse before any batch runs
@@ -452,47 +461,6 @@ def pruned(catalog: Catalog, table: str, buckets: list[int]) -> DataFrame:
     return catalog.read(table).filter(
         F.col(_BUCKETS[table][0]).isin([int(b) for b in buckets])
     )
-
-
-def _migrate_legacy_state(catalog: Catalog) -> None:
-    """One-time layout migration (ADVICE r3): a warehouse written by the
-    pre-partitioned revision holds FLAT part-files (no fp_bucket column)
-    in the stream_fps root; new appends land under fp_bucket= dirs, and
-    Spark refuses the resulting mixed-depth listing. On stream start, any
-    flat legacy files are rewritten into the partitioned layout (bucket
-    derived from the fingerprint) and removed.
-
-    Crash-ordering: tmp write -> move into partition dirs -> unlink legacy.
-    A crash mid-sequence leaves the legacy files in place, so the next
-    start re-migrates; the only residue is exact-row duplicate state rows,
-    which every reader already collapses (full-row dropDuplicates /
-    min-per-fp probe). Iceberg mode never hits this (schema evolution)."""
-    if catalog.iceberg or not catalog.exists(STATE_TABLE):
-        return
-    root = catalog._path(STATE_TABLE)
-    # clean tmp orphans from a previous crashed migration
-    for orphan in root.parent.glob(f"{STATE_TABLE}__migrate_*"):
-        shutil.rmtree(orphan, ignore_errors=True)
-    legacy = sorted(str(p) for p in root.glob("*.parquet"))
-    if not legacy:
-        return
-    spark = catalog.spark
-    old = spark.read.parquet(*legacy)
-    if "fp_bucket" not in old.columns:
-        old = old.select(
-            "url", "fingerprint", "n_tokens", "batch_id",
-            _bucket_col(STATE_TABLE),
-        )
-    tmp = root.parent / f"{STATE_TABLE}__migrate_{uuid.uuid4().hex[:8]}"
-    old.write.partitionBy("fp_bucket").parquet(str(tmp))
-    for bucket_dir in tmp.glob("fp_bucket=*"):
-        dest = root / bucket_dir.name
-        dest.mkdir(exist_ok=True)
-        for pf in bucket_dir.glob("*.parquet"):
-            shutil.move(str(pf), str(dest / pf.name))
-    for p in legacy:
-        (root / p.split("/")[-1]).unlink(missing_ok=True)
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def load_stream_state(catalog: Catalog) -> DataFrame:

@@ -148,9 +148,14 @@ def test_resume_skips_and_matches(spark, tmp_path):
     assert out2["memberships"].count() == n1
 
 
-def test_resume_from_moved_warehouse(spark, tmp_path):
-    """The config hash leaves out IO paths: a committed warehouse copied to
-    a new path resumes there with every stage skipped."""
+@pytest.mark.parametrize(
+    "change", [{}, {"max_exact_groups": 0}], ids=["moved", "moved_new_gate"]
+)
+def test_resume_from_moved_warehouse(spark, tmp_path, change):
+    """The config hash leaves out IO paths and the CI-gate thresholds: a
+    committed warehouse copied to a new path resumes there with all 8
+    stages skipped, also under a changed max_exact_groups (only run_check
+    reads it, after the run)."""
     import shutil
 
     old = tmp_path / "wh_old"
@@ -160,12 +165,32 @@ def test_resume_from_moved_warehouse(spark, tmp_path):
     shutil.copytree(old, new)
     p = Pipeline(
         spark,
-        PipelineConfig(warehouse=str(new)),
+        PipelineConfig(warehouse=str(new), **change),
         detectors=("minhash",),
         resume=True,
     )
     p.run(df)
-    assert p.stage_log and all(s.startswith("skip:") for s in p.stage_log)
+    assert len(p.stage_log) == 8
+    assert all(s.startswith("skip:") for s in p.stage_log)
+
+
+def test_run_needs_a_detector(spark, tmp_path, monkeypatch, capsys):
+    """An empty detector set is refused before anything runs, and CLI
+    ``--detectors ""`` exits 2 with no table committed."""
+    from cargo_dupes_spark import cli
+
+    wh = tmp_path / "wh_none"
+    with pytest.raises(ValueError, match="no detectors"):
+        Pipeline(spark, PipelineConfig(warehouse=str(wh)), detectors=())
+    monkeypatch.setattr(cli, "build_session", lambda **_: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    code = cli.main([
+        "--warehouse", str(wh), "--input", "fixtures",
+        "--detectors", "", "stats",
+    ])
+    assert code == 2
+    assert "no detectors" in capsys.readouterr().err
+    assert not any(wh.iterdir())
 
 
 def _edges(out):
@@ -215,8 +240,7 @@ def test_lineage_and_metrics_written(spark, pipeline_run):
 # lineage contract: each stage's n_in is this upstream stage's n_out
 _LINEAGE_UPSTREAM = {
     "exact_memberships": "fingerprints",
-    "representatives": "fingerprints",
-    "signatures": "representatives",
+    "signatures": "fingerprints",
     "candidate_pairs": "signatures",
     "verified_edges": "candidate_pairs",
     "clusters": "verified_edges",
@@ -348,7 +372,7 @@ def test_wide_fingerprints_same_grouping(spark, tmp_path, pipeline_run):
 def test_repeated_and_permuted_detectors_are_one_run(spark, tmp_path):
     """A detector tuple is deduped and put in table order once: a repeated
     name runs its detector once, and a permuted tuple resumes a run of the
-    same set with all 9 stages skipped."""
+    same set with all 8 stages skipped."""
     df, _ = generate_web_pages(spark, n_unique=20, n_near_families=3)
     both = ("minhash", "substring")
     wh = str(tmp_path / "wh_once")
@@ -371,7 +395,7 @@ def test_repeated_and_permuted_detectors_are_one_run(spark, tmp_path):
         resume=True,
     )
     p.run(df)
-    assert len(p.stage_log) == 9
+    assert len(p.stage_log) == 8
     assert all(s.startswith("skip:") for s in p.stage_log)
 
 
@@ -412,11 +436,11 @@ def test_detectors_compose(spark, tmp_path, pipeline_run):
     [
         ("minhash", ["url", "lang", "shingles", "band_keys"]),
         ("simhash", ["url", "lang", "shingles", "simhash", "chunk_keys"]),
-        ("substring", ["url", "lang", "winnow_keys"]),
+        ("substring", ["url", "lang", "norm_text", "winnow_keys"]),
         (
             "all",
             [
-                "url", "lang", "shingles", "simhash",
+                "url", "lang", "norm_text", "shingles", "simhash",
                 "band_keys", "chunk_keys", "winnow_keys",
             ],
         ),

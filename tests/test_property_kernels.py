@@ -25,10 +25,7 @@ from cargo_dupes_spark.functions.minhash import (
 )
 from cargo_dupes_spark.functions.shingles import jaccard_col
 from cargo_dupes_spark.functions.simhash import simhash_batch
-from cargo_dupes_spark.operators.substring import (
-    longest_common_substring_len,
-    longest_common_substring_span,
-)
+from cargo_dupes_spark.operators.substring import longest_common_substring_span
 
 _U64 = 1 << 64
 _MSB = 1 << 63
@@ -147,15 +144,15 @@ def test_lcs_span_matches_dp_oracle(a, b, min_len):
     else:
         exp = (exp_len, exp_pa, exp_pb)
     assert longest_common_substring_span(a, b, min_len) == exp
-    assert longest_common_substring_len(a, b, min_len) == exp[0]
+    assert longest_common_substring_span(a, b, min_len)[0] == exp[0]
 
 
 @settings(max_examples=40, deadline=None)
 @given(text, text, st.integers(min_value=1, max_value=5))
 def test_lcs_length_is_symmetric(a, b, min_len):
-    assert longest_common_substring_len(
+    assert longest_common_substring_span(
         a, b, min_len
-    ) == longest_common_substring_len(b, a, min_len)
+    )[0] == longest_common_substring_span(b, a, min_len)[0]
 
 
 # ---------------------------------------------------------------------------

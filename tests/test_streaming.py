@@ -299,10 +299,15 @@ def test_near_replayed_batch_is_noop(spark, stream_env, tmp_path):
     assert all(u != m for u, m in near2)
 
 
-def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
-    """A warehouse written by the pre-partitioned revision (flat part-files,
-    no fp_bucket column) must migrate to the partitioned layout on stream
-    start and keep detecting cross-wave dups (ADVICE r3)."""
+def test_legacy_flat_state_is_refused(
+    spark, stream_env, monkeypatch, capsys, tmp_path
+):
+    """A warehouse written before the state was partitioned holds flat
+    part-files (no fp_bucket column) in the stream_fps root. A stream start
+    on it raises naming the layout before any batch runs (the CLI exits 2),
+    and leaves the flat files as they were."""
+    from cargo_dupes_spark import cli
+
     cfg, catalog, drop_dir, ckpt = stream_env
     _pages(spark, WAVE1).coalesce(1).write.mode("append").parquet(drop_dir)
     _drain(read_web_pages_stream(spark, drop_dir), catalog, cfg, ckpt)
@@ -316,25 +321,27 @@ def test_legacy_flat_state_migrates(spark, stream_env, tmp_path):
     catalog2 = Catalog(spark, str(wh2), cfg.config_hash())
     legacy_rows.coalesce(1).write.parquet(str(wh2 / "stream_fps"))
     root = wh2 / "stream_fps"
-    assert list(root.glob("*.parquet"))  # flat layout in place
+    flat = sorted(root.glob("*.parquet"))
+    assert flat  # flat layout in place
 
     drops2 = tmp_path / "drops2"
     drops2.mkdir()
     _pages(spark, WAVE2).coalesce(1).write.mode("append").parquet(str(drops2))
-    _drain(
-        read_web_pages_stream(spark, str(drops2)), catalog2, cfg,
-        str(tmp_path / "ckpt_legacy"),
-    )
-    # migrated: no flat files left, bucket dirs present, probe still works
-    assert not list(root.glob("*.parquet"))
-    assert list(root.glob("fp_bucket=*"))
-    dups = {
-        (r.url, r.matched_url) for r in load_stream_dups(catalog2).collect()
-    }
-    assert ("http://b.example/9", "http://a.example/1") in dups
-    state = load_stream_state(catalog2)
-    assert "fp_bucket" in state.columns
-    assert state.count() == 3  # 2 migrated + 1 new, no duplicates
+    with pytest.raises(ValueError, match="flat part-files"):
+        incremental_dedup(
+            read_web_pages_stream(spark, str(drops2)), catalog2, cfg,
+            str(tmp_path / "ckpt_legacy"),
+        )
+    monkeypatch.setattr(cli, "build_session", lambda **_: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    code = cli.main([
+        "--warehouse", str(wh2), "stream", str(drops2),
+        "--checkpoint", str(tmp_path / "ckpt_legacy_cli"),
+    ])
+    assert code == 2
+    assert "flat part-files" in capsys.readouterr().err
+    assert sorted(root.glob("*.parquet")) == flat
+    assert not list(root.glob("fp_bucket=*"))
 
 
 def test_near_state_recovers_after_partial_crash(spark, stream_env, tmp_path):

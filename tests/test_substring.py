@@ -11,7 +11,6 @@ from cargo_dupes_spark.config import PipelineConfig
 from cargo_dupes_spark.operators.substring import (
     _kgram_hashes,
     lcp_array,
-    longest_common_substring_len,
     longest_common_substring_span,
     suffix_array,
     winnow,
@@ -65,15 +64,15 @@ def test_lcs_exact_vs_dp():
         a = "".join(rng.choice(alphabet) for _ in range(80))
         b = "".join(rng.choice(alphabet) for _ in range(80))
         want = _lcs_dp(a, b)
-        got = longest_common_substring_len(a, b, min_len=1)
+        got = longest_common_substring_span(a, b, min_len=1)[0]
         assert got == want
 
 
 def test_lcs_threshold_gate():
     a = "x" * 100 + "COMMONSEGMENT" + "y" * 100
     b = "p" * 50 + "COMMONSEGMENT" + "q" * 50
-    assert longest_common_substring_len(a, b, min_len=13) == 13
-    assert longest_common_substring_len(a, b, min_len=14) == 0
+    assert longest_common_substring_span(a, b, min_len=13)[0] == 13
+    assert longest_common_substring_span(a, b, min_len=14)[0] == 0
 
 
 def test_suffix_array_sorted():
@@ -96,8 +95,8 @@ def test_suffix_array_sorted():
 
 
 def test_lcs_span_matches_both_oracles():
-    """The GSA span length agrees with the DP oracle AND the independent
-    rolling-hash binary search; the reported spans index the actual match."""
+    """The span length agrees with the DP oracle AND with the kernel run
+    on the swapped pair; the reported spans index the actual match."""
     rng = random.Random(29)
     for _ in range(15):
         a = "".join(rng.choice("abc ") for _ in range(120))
@@ -105,7 +104,7 @@ def test_lcs_span_matches_both_oracles():
         want = _lcs_dp(a, b)
         length, pa, pb = longest_common_substring_span(a, b, min_len=1)
         assert length == want
-        assert length == longest_common_substring_len(a, b, min_len=1)
+        assert length == longest_common_substring_span(b, a, min_len=1)[0]
         if length:
             assert a[pa : pa + length] == b[pb : pb + length]
             # first occurrence (the oracle-checkable canonical choice)
